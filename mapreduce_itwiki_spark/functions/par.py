@@ -60,7 +60,8 @@ def salted_by_partition(df, part_col: str, salt_src: str, n_dirs: int):
     input AQE's 64 MB advisory merged the whole write onto 3 tasks —
     each then paying the per-FILE parquet open/dictionary/footer cost
     for ~85 directories sequentially (measured 2.7 s of a 4.1 s
-    minhash_index_build; task-metric evidence in OPTIMIZATION_r11.md).
+    minhash_index_build in round 11; the per-task metrics were not
+    kept).
     ``n = max(parallelism, n_dirs·k)`` pins one writer wave: every
     (value, salt) group still lands wholly in one task, so file count
     and layout are unchanged — only the per-file overhead parallelizes.

@@ -1055,6 +1055,59 @@ def probe_coverage_report(
     )
 
 
+def _exact_rerank(
+    emb: DataFrame, cand: DataFrame, q_ids: DataFrame, k: int
+) -> DataFrame:
+    """The exact-cosine tail every batch ANN operator shares: score the
+    (qid, vec_id) candidates against the broadcast query floats and
+    keep each qid's top-k under (cosine desc, vec_id) as a per-qid
+    WindowGroupLimit heap. Columns: (qid, vec_id, label, cosine)."""
+    ev = emb.select(
+        "vec_id", "label", vectors.as_double(F.col("embedding")).alias("v")
+    )
+    qv = ev.join(F.broadcast(q_ids), ev["vec_id"] == q_ids["qid"]).select(
+        "qid", F.col("v").alias("qv")
+    )
+    scored = (
+        cand.join(ev, "vec_id")
+        .join(F.broadcast(qv), "qid")
+        .select(
+            "qid",
+            "vec_id",
+            "label",
+            F.round(vectors.cosine(F.col("v"), F.col("qv")), 6).alias("cosine"),
+        )
+    )
+    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("vec_id"))
+    return (
+        scored.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .select("qid", "vec_id", "label", "cosine")
+    )
+
+
+def _single_query(
+    batch_topk,
+    spark,
+    index_path: str,
+    emb: DataFrame,
+    query_vec_id: int,
+    k: int,
+    **kw,
+) -> DataFrame:
+    """Run a persisted-index batch operator on the one-row query set
+    ``{query_vec_id}`` — the single query is the degenerate batch, so
+    each index keeps ONE probe path. Columns: (vec_id, label, cosine),
+    ordered by (cosine desc, vec_id); an absent query yields no rows."""
+    queries = values_df(spark, [(query_vec_id,)], "qid long")
+    return (
+        batch_topk(spark, index_path, emb, queries, k=k, **kw)
+        .drop("qid")
+        .orderBy(F.col("cosine").desc(), F.col("vec_id"))
+        .limit(k)
+    )
+
+
 def ann_index_topk(
     spark,
     index_path: str,
@@ -1066,48 +1119,14 @@ def ann_index_topk(
     :func:`ann_index_write` — result-identical to :func:`lsh_bucket_topk`
     (same bands, same sharding), but the corpus-side banding work is
     amortized across jobs and the candidate scan reads ONLY the query's
-    probed (band_id, band_key) partitions.
-
-    Pruning mechanics — BOTH scans are pruned (ADVICE r6 closed the
-    probe gap): the query's pkeys are recomputed driver-side from its
-    embedding (:func:`pkeys_py` — the banding is deterministic, no
-    Spark job), so the PROBE read that fetches the query's per-band
-    ``shard`` values carries the literal ``pkey IN (...)`` predicate
-    too and touches ≤ LSH_BANDS of the 2^BAND_BITS·LSH_BANDS partition
-    directories, exactly like the candidate scan that follows (both
-    plan-gated in tests/test_plan_quality.py). Fetching the query
-    embedding is one pushed-filter read of the corpus table — at 100 TB
-    a caller that already holds the query vector skips even that."""
-    idx = spark.read.parquet(index_path)
-    geo_bits, _geo_cap = index_geometry(spark, index_path)
-    qrows = emb.filter(F.col("vec_id") == query_vec_id).select("embedding").take(1)
-    if qrows:
-        pkeys = pkeys_py(list(qrows[0].embedding), band_bits=geo_bits)
-        probes = (
-            idx.filter(F.col("pkey").isin(pkeys))  # pruned probe
-            .filter(F.col("vec_id") == query_vec_id)
-            .select("pkey", "shard")
-            .collect()
-        )
-    else:  # query vector absent from the corpus
-        pkeys, probes = ["__none__"], []
-    shard_pred = None
-    for p in probes:
-        clause = (F.col("pkey") == p.pkey) & (F.col("shard") == p.shard)
-        shard_pred = clause if shard_pred is None else (shard_pred | clause)
-    if shard_pred is None:  # query vector absent from the corpus
-        shard_pred = F.lit(False)
-    cand_ids = (
-        idx.filter(F.col("pkey").isin(pkeys))  # the partition-pruning predicate
-        .filter(shard_pred)
-        .filter(F.col("vec_id") != query_vec_id)
-        .select("vec_id")
-        .distinct()
+    probed (band_id, band_key) partitions. It is
+    :func:`ann_index_batch_topk` on a one-query batch, so both the probe
+    read and the candidate scan carry the literal ``pkey IN (...)``
+    partition-pruning predicate (both plan-gated in
+    tests/test_plan_quality.py)."""
+    return _single_query(
+        ann_index_batch_topk, spark, index_path, emb, query_vec_id, k
     )
-    query = emb.filter(F.col("vec_id") == query_vec_id)
-    cands = emb.join(cand_ids, "vec_id", "left_semi")
-    scored = with_cosine_to_query(cands, query)
-    return scored.orderBy(F.col("cosine").desc(), F.col("vec_id")).limit(k)
 
 
 def neighbor_band_keys(key: str, radius: int = 1) -> list[str]:
@@ -1158,41 +1177,17 @@ def ann_index_multiprobe_topk(
     single-probe path, just over (w+1)× the directories at radius 1;
     per-bucket work is bounded by the shard cap. Columns like
     :func:`ann_index_topk`; result-identical to the oracle's Hamming-
-    predicate replay."""
-    idx = spark.read.parquet(index_path)
-    geo_bits, _geo_cap = index_geometry(spark, index_path)
-    qrows = emb.filter(F.col("vec_id") == query_vec_id).select("embedding").take(1)
-    query = emb.filter(F.col("vec_id") == query_vec_id)
-    if not qrows:  # query vector absent from the corpus
-        return with_cosine_to_query(emb.filter(F.lit(False)), query).limit(k)
-    keys = band_keys_py(list(qrows[0].embedding), band_bits=geo_bits)
-    pkeys = sorted(
-        {
-            f"{b}_{nk}"
-            for b, key in enumerate(keys)
-            for nk in neighbor_band_keys(key, radius)
-        }
+    predicate replay. It is :func:`ann_index_multiprobe_batch_topk` on
+    a one-query batch."""
+    return _single_query(
+        ann_index_multiprobe_batch_topk,
+        spark,
+        index_path,
+        emb,
+        query_vec_id,
+        k,
+        radius=radius,
     )
-    own = [f"{b}_{key}" for b, key in enumerate(keys)]
-    probes = (
-        idx.filter(F.col("pkey").isin(own))  # pruned probe, own buckets
-        .filter(F.col("vec_id") == query_vec_id)
-        .select("pkey", "shard")
-        .collect()
-    )
-    pred = F.col("shard") == 0  # md5-first shard of every probed bucket
-    for p in probes:  # plus the query's own shard in its home buckets
-        pred = pred | ((F.col("pkey") == p.pkey) & (F.col("shard") == p.shard))
-    cand_ids = (
-        idx.filter(F.col("pkey").isin(pkeys))  # static partition pruning
-        .filter(pred)
-        .filter(F.col("vec_id") != query_vec_id)
-        .select("vec_id")
-        .distinct()
-    )
-    cands = emb.join(cand_ids, "vec_id", "left_semi")
-    scored = with_cosine_to_query(cands, query)
-    return scored.orderBy(F.col("cosine").desc(), F.col("vec_id")).limit(k)
 
 
 def ann_index_multiprobe_batch_topk(
@@ -1264,28 +1259,7 @@ def ann_index_multiprobe_batch_topk(
         .select("qid", "vec_id")
         .distinct()
     )
-    ev = emb.select(
-        "vec_id", "label", vectors.as_double(F.col("embedding")).alias("v")
-    )
-    qv = ev.join(F.broadcast(q_ids), ev["vec_id"] == q_ids["qid"]).select(
-        "qid", F.col("v").alias("qv")
-    )
-    scored = (
-        cand.join(ev, "vec_id")
-        .join(F.broadcast(qv), "qid")
-        .select(
-            "qid",
-            "vec_id",
-            "label",
-            F.round(vectors.cosine(F.col("v"), F.col("qv")), 6).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("qid", "vec_id", "label", "cosine")
-    )
+    return _exact_rerank(emb, cand, q_ids, k)
 
 
 def ann_index_batch_topk(
@@ -1339,28 +1313,7 @@ def ann_index_batch_topk(
         .select("qid", "vec_id")
         .distinct()
     )
-    ev = emb.select(
-        "vec_id", "label", vectors.as_double(F.col("embedding")).alias("v")
-    )
-    qv = ev.join(F.broadcast(q_ids), ev["vec_id"] == q_ids["qid"]).select(
-        "qid", F.col("v").alias("qv")
-    )
-    scored = (
-        cand.join(ev, "vec_id")
-        .join(F.broadcast(qv), "qid")
-        .select(
-            "qid",
-            "vec_id",
-            "label",
-            F.round(vectors.cosine(F.col("v"), F.col("qv")), 6).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("qid", "vec_id", "label", "cosine")
-    )
+    return _exact_rerank(emb, cand, q_ids, k)
 
 
 def with_cosine_to_query(emb: DataFrame, query: DataFrame) -> DataFrame:
@@ -1869,9 +1822,12 @@ PQ_RERANK = 50  #: ADC shortlist size re-ranked by exact cosine
 
 
 def _pq_sub_rows(
-    emb: DataFrame, pq_m: int = PQ_M, pq_sub: int = PQ_SUB
+    emb: DataFrame,
+    pq_m: int = PQ_M,
+    pq_sub: int = PQ_SUB,
+    keys: list[str] | tuple[str, ...] = ("vec_id",),
 ) -> DataFrame:
-    """(vec_id, s, sv): the ``pq_m`` disjoint ``pq_sub``-dim subvectors
+    """(*keys, s, sv): the ``pq_m`` disjoint ``pq_sub``-dim subvectors
     of each embedding — one explode, no shuffle. The geometry defaults
     to the module constants for in-DAG callers; PERSISTED-index callers
     pass the widths recorded in the index's ``_meta`` sidecar (ADVICE
@@ -1887,8 +1843,8 @@ def _pq_sub_rows(
             for s in range(pq_m)
         ]
     )
-    return emb.select("vec_id", F.explode(subs).alias("sub")).select(
-        "vec_id", "sub.s", "sub.sv"
+    return emb.select(*keys, F.explode(subs).alias("sub")).select(
+        *keys, "sub.s", "sub.sv"
     )
 
 
@@ -2229,28 +2185,7 @@ def lsh_batch_topk(
         .select("qid", "vec_id")
         .distinct()
     )
-    ev = emb.select(
-        "vec_id", "label", vectors.as_double(F.col("embedding")).alias("v")
-    )
-    qv = ev.join(F.broadcast(q_ids), ev["vec_id"] == q_ids["qid"]).select(
-        "qid", F.col("v").alias("qv")
-    )
-    scored = (
-        cand.join(ev, "vec_id")
-        .join(F.broadcast(qv), "qid")
-        .select(
-            "qid",
-            "vec_id",
-            "label",
-            F.round(vectors.cosine(F.col("v"), F.col("qv")), 6).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("qid", "vec_id", "label", "cosine")
-    )
+    return _exact_rerank(emb, cand, q_ids, k)
 
 
 def ivf_batch_topk(
@@ -2275,11 +2210,8 @@ def ivf_batch_topk(
         eager=False
     )
     lists = ivf_assign(emb, cents)
-    ev = emb.select(
-        "vec_id", "label", vectors.as_double(F.col("embedding")).alias("v")
-    )
-    qv = ev.join(F.broadcast(q_ids), ev["vec_id"] == q_ids["qid"]).select(
-        "qid", F.col("v").alias("qv")
+    qv = emb.join(F.broadcast(q_ids), emb["vec_id"] == q_ids["qid"]).select(
+        "qid", vectors.as_double(F.col("embedding")).alias("qv")
     )
     wq = Window.partitionBy("qid").orderBy("d", "cid")
     probe = (
@@ -2294,22 +2226,7 @@ def ivf_batch_topk(
         .filter(F.col("vec_id") != F.col("qid"))
         .select("qid", "vec_id")
     )
-    scored = (
-        cand.join(ev, "vec_id")
-        .join(F.broadcast(qv), "qid")
-        .select(
-            "qid",
-            "vec_id",
-            "label",
-            F.round(vectors.cosine(F.col("v"), F.col("qv")), 6).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("qid", "vec_id", "label", "cosine")
-    )
+    return _exact_rerank(emb, cand, q_ids, k)
 
 
 def pq_batch_topk(
@@ -2363,28 +2280,7 @@ def pq_batch_topk(
         .filter(F.col("rn") <= rerank)
         .select("qid", "vec_id")
     )
-    ev = emb.select(
-        "vec_id", "label", vectors.as_double(F.col("embedding")).alias("v")
-    )
-    qv = ev.join(F.broadcast(q_ids), ev["vec_id"] == q_ids["qid"]).select(
-        "qid", F.col("v").alias("qv")
-    )
-    scored = (
-        cand.join(ev, "vec_id")
-        .join(F.broadcast(qv), "qid")
-        .select(
-            "qid",
-            "vec_id",
-            "label",
-            F.round(vectors.cosine(F.col("v"), F.col("qv")), 6).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("qid", "vec_id", "label", "cosine")
-    )
+    return _exact_rerank(emb, cand, q_ids, k)
 
 
 def ivf_index_write(
@@ -3201,10 +3097,9 @@ def ivfpq_index_append(spark, index_path: str, new_emb: DataFrame) -> None:
     # one-exchange encode (r11, guide §2.4; see _pq_encode_codes)
     codes = _pq_encode_codes(sub, books, pq_m)
     # clustered append (guide §6; see ivf_index_write), vec_id-salted
-    # (r11, guide §2.5); module-default nlist as the parallelism
-    # estimate (see ivf_index_append)
+    # against hot cells, sized by the index's own cell count from _meta
     salted_by_partition(
-        codes.join(lists, "vec_id"), "cid", "vec_id", n_dirs=IVF_NLIST
+        codes.join(lists, "vec_id"), "cid", "vec_id", n_dirs=int(meta.nlist)
     ).write.mode("append").partitionBy("cid").parquet(f"{index_path}/codes")
 
 
@@ -3313,8 +3208,8 @@ def ivfpq_probe_batch(
     verdicts to corpus rows while the same stream appends (appended
     ids are higher), keeping the drained result
     batch-partitioning-invariant. Raw-code indexes only (asserted from
-    ``_meta``) — the residual mode needs per-(query, cell) tables and
-    belongs to the single-query path. Columns: (qid,
+    ``_meta``) — the residual mode needs per-(query, cell) tables,
+    which :func:`ivfpq_index_batch_topk` builds. Columns: (qid,
     n_corpus_candidates, nearest_corpus_cosine)."""
     meta = spark.read.parquet(f"{index_path}/_meta").take(1)[0]
     if bool(meta.by_residual):
@@ -3420,25 +3315,27 @@ def ivfpq_index_batch_topk(
     nprobe: int = IVF_NPROBE,
     rerank: int = PQ_RERANK,
 ) -> DataFrame:
-    """BATCH ANN from the persisted IVF-PQ code index — the
-    queries-as-a-DataFrame lift of :func:`ivfpq_index_topk`, completing
-    the single+batch symmetry the LSH index already has: ONE broadcast
+    """BATCH ANN from the persisted IVF-PQ code index: ONE broadcast
     probe ranks every query's ``nprobe`` cells against the stored
     centroids, the code table is read ONCE pruned to the UNION of all
     probed cells (literal cid IN-list — static partition pruning for
     the whole batch, over PQ_M-byte rows with no embedding column),
-    every query's integerized ADC table rides one broadcast keyed
-    (qid, s, code), and the per-qid ADC-top ``rerank`` shortlists are
-    exact-reranked via one rerank·|Q|-bounded semi-join of the corpus
-    floats. Unlike the ingest-path :func:`ivfpq_probe_batch` there is
-    NO per-cell candidate budget — this is the retrieval scan, whole
-    probed cells, exactly :func:`ivfpq_topk` semantics per query (and
-    per-query result-identical to it; raw-code indexes only, asserted
-    from ``_meta``). Columns: (qid, vec_id, label, cosine), per-qid
-    top-k under (cosine desc, vec_id)."""
+    every query's integerized ADC table rides one broadcast, and the
+    per-qid ADC-top ``rerank`` shortlists are exact-reranked via one
+    rerank·|Q|-bounded semi-join of the corpus floats. Unlike the
+    ingest-path :func:`ivfpq_probe_batch` there is NO per-cell
+    candidate budget — this is the retrieval scan, whole probed cells,
+    exactly :func:`ivfpq_topk` semantics per query (and per-query
+    result-identical to it).
+
+    The coding mode is read from ``_meta``. Raw codes share one ADC
+    table per query, keyed (qid, s, code). Residual codes (FAISS
+    ``by_residual``) get one query residual — hence one ADC table — per
+    probed (qid, cell), keyed (qid, cell, s, code); the subtraction is
+    the same IEEE double op the build ran. Columns: (qid, vec_id,
+    label, cosine), per-qid top-k under (cosine desc, vec_id)."""
     meta = spark.read.parquet(f"{index_path}/_meta").take(1)[0]
-    if bool(meta.by_residual):
-        raise ValueError("ivfpq_index_batch_topk supports raw-code indexes only")
+    by_residual = bool(meta.by_residual)
     pq_m, pq_sub = _pq_meta_geometry(meta)
     cents = spark.read.parquet(f"{index_path}/_centroids")
     books = spark.read.parquet(f"{index_path}/_codebooks")
@@ -3463,27 +3360,37 @@ def ivfpq_index_batch_topk(
     codes = spark.read.parquet(f"{index_path}/codes").filter(
         F.col("cid").isin(cids)  # static partition pruning for the batch
     )
+    qkeys = ["qid", "cell"] if by_residual else ["qid"]  # one ADC table per key
+    keys = [*qkeys, "s", "code"]
     cand = (
         codes.select("vec_id", F.col("cid").alias("cell"), "codes")
         .join(F.broadcast(probe), "cell")
         .filter(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id", F.posexplode("codes").alias("s", "code"))
+        .select(*qkeys, "vec_id", F.posexplode("codes").alias("s", "code"))
     )
-    qsub = _pq_sub_rows(
-        q_emb.select(F.col("qid").alias("vec_id"), "embedding"),
-        pq_m=pq_m,
-        pq_sub=pq_sub,
-    ).select(F.col("vec_id").alias("qid"), "s", "sv")
+    if by_residual:
+        qbase = (
+            qv.join(F.broadcast(probe), "qid")
+            .join(F.broadcast(cents.withColumnRenamed("cid", "cell")), "cell")
+            .select(
+                "qid",
+                "cell",
+                F.zip_with(F.col("v"), F.col("cv"), lambda x, c: x - c).alias(
+                    "embedding"
+                ),
+            )
+        )
+    else:
+        qbase = q_emb
+    qsub = _pq_sub_rows(qbase, pq_m=pq_m, pq_sub=pq_sub, keys=qkeys)
     dt = qsub.join(F.broadcast(books), "s").select(
-        "qid",
-        "s",
-        "code",
+        *keys,
         F.round(sq_dist(F.col("sv"), F.col("cv")) * 1000000.0, 0)
         .cast("long")
         .alias("dti"),
     )
     adc = (
-        cand.join(F.broadcast(dt), ["qid", "s", "code"])
+        cand.join(F.broadcast(dt), keys)
         .groupBy("qid", "vec_id")
         .agg(F.sum("dti").alias("adc"))
     )
@@ -3493,25 +3400,7 @@ def ivfpq_index_batch_topk(
         .filter(F.col("rn") <= rerank)
         .select("qid", "vec_id")
     )
-    ev = emb.select(
-        "vec_id", "label", vectors.as_double(F.col("embedding")).alias("cv2")
-    )
-    scored = (
-        short.join(ev, "vec_id")
-        .join(F.broadcast(qv), "qid")
-        .select(
-            "qid",
-            "vec_id",
-            "label",
-            F.round(vectors.cosine(F.col("cv2"), F.col("v")), 6).alias("cosine"),
-        )
-    )
-    wk = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(wk))
-        .filter(F.col("rn") <= k)
-        .select("qid", "vec_id", "label", "cosine")
-    )
+    return _exact_rerank(emb, short, q_ids, k)
 
 
 def ivfpq_distortion_report(spark, index_path: str, emb: DataFrame) -> DataFrame:
@@ -3590,21 +3479,13 @@ def ivfpq_index_topk(
 ) -> DataFrame:
     """IVF-PQ ANN top-k from the PERSISTED code index — quantizer
     training, assignment, and the full-corpus encode all ran ONCE at
-    :func:`ivfpq_index_write` time; the query path touches only:
-
-    1. one pushed-filter read of the corpus table for the query
-       embedding (a caller holding the vector skips even that),
-    2. the nlist-row ``_centroids`` file, ranked driver-side with the
-       query spliced as a literal double array (the
-       :func:`ivf_index_topk` probe rule — zero unpruned index reads),
-    3. the probed cid partitions of the CODE table — a literal
-       ``cid IN (...)`` predicate the reader turns into static
-       partition pruning over PQ_M-byte rows; the float embedding
-       column is never in this scan's schema because the code table
-       doesn't carry one,
-    4. the broadcast ADC table (PQ_M × PQ_CODES cells, integerized),
-    5. a ``rerank``-row pushed semi-join read of the corpus floats for
-       the exact re-rank.
+    :func:`ivfpq_index_write` time. It is :func:`ivfpq_index_batch_topk`
+    on a one-query batch, so the query path touches only the query's
+    corpus row, the nlist-row ``_centroids`` file, the probed cid
+    partitions of the CODE table (a literal ``cid IN (...)`` predicate
+    over PQ_M-byte rows; the code table carries no float embedding
+    column), the broadcast ADC table, and a ``rerank``-row semi-join of
+    the corpus floats for the exact re-rank.
 
     Result-identical to :func:`ivfpq_topk` with the same parameters
     (the per-vector encode is deterministic, and ADC joins on the
@@ -3612,80 +3493,13 @@ def ivfpq_index_topk(
     cid), so the two share one DuckDB oracle. The ``by_residual`` mode
     is read from the index's ``_meta`` sidecar — a query can't
     accidentally ADC-scan residual codes with a raw-vector table."""
-    meta = spark.read.parquet(f"{index_path}/_meta").take(1)[0]
-    by_residual = bool(meta.by_residual)
-    pq_m, pq_sub = _pq_meta_geometry(meta)
-    cents = spark.read.parquet(f"{index_path}/_centroids")
-    books = spark.read.parquet(f"{index_path}/_codebooks")
-    qrows = (
-        emb.filter(F.col("vec_id") == query_vec_id)
-        .select(vectors.as_double(F.col("embedding")).alias("qv"))
-        .take(1)
+    return _single_query(
+        ivfpq_index_batch_topk,
+        spark,
+        index_path,
+        emb,
+        query_vec_id,
+        k,
+        nprobe=nprobe,
+        rerank=rerank,
     )
-    query = emb.filter(F.col("vec_id") == query_vec_id)
-    if not qrows:  # query vector absent from the corpus → empty result
-        return with_cosine_to_query(emb.filter(F.lit(False)), query).limit(k)
-    qv = list(qrows[0].qv)
-    qlit = "array(" + ", ".join(f"{x!r}D" for x in qv) + ")"
-    probe = (
-        cents.select("cid", sq_dist(F.expr(qlit), F.col("cv")).alias("d"))
-        .orderBy("d", "cid")
-        .limit(nprobe)
-        .collect()
-    )
-    cids = sorted(r.cid for r in probe) or [-1]
-    code_rows = spark.read.parquet(f"{index_path}/codes").filter(
-        F.col("cid").isin(cids)  # static partition pruning over byte codes
-    )
-    enc = code_rows.select(
-        "vec_id",
-        F.col("cid").alias("pcell"),
-        F.posexplode("codes").alias("s", "code"),
-    ).filter(F.col("vec_id") != query_vec_id)
-    if by_residual:
-        # one query residual — hence one ADC table — per probed cell,
-        # computed driver-side from the collected centroid rows (the
-        # subtraction is the same IEEE double op either engine runs)
-        crows = {r.cid: list(r.cv) for r in cents.filter(F.col("cid").isin(cids)).collect()}
-        qsub_rows = [
-            (cid, s, [qv[i] - crows[cid][i] for i in range(s * pq_sub, (s + 1) * pq_sub)])
-            for cid in cids
-            for s in range(pq_m)
-        ]
-        qsub = values_df(  # JVM inline table, not a Python-RDD scan (r10)
-            spark, qsub_rows, "pcell bigint, s int, qsv array<double>"
-        )
-        dt = qsub.join(books, "s").select(
-            "pcell",
-            "s",
-            "code",
-            F.round(sq_dist(F.col("qsv"), F.col("cv")) * 1000000.0, 0)
-            .cast("long")
-            .alias("dti"),
-        )
-        adc = (
-            enc.join(F.broadcast(dt), ["pcell", "s", "code"])
-            .groupBy("vec_id")
-            .agg(F.sum("dti").alias("adc"))
-        )
-    else:
-        qsub_rows = [
-            (s, qv[s * pq_sub : (s + 1) * pq_sub]) for s in range(pq_m)
-        ]
-        qsub = values_df(spark, qsub_rows, "s int, qsv array<double>")
-        dt = qsub.join(books, "s").select(
-            "s",
-            "code",
-            F.round(sq_dist(F.col("qsv"), F.col("cv")) * 1000000.0, 0)
-            .cast("long")
-            .alias("dti"),
-        )
-        adc = (
-            enc.join(F.broadcast(dt), ["s", "code"])
-            .groupBy("vec_id")
-            .agg(F.sum("dti").alias("adc"))
-        )
-    cand_ids = adc.orderBy("adc", "vec_id").limit(rerank).select("vec_id")
-    cands = emb.join(cand_ids, "vec_id", "left_semi")
-    scored = with_cosine_to_query(cands, query)
-    return scored.orderBy(F.col("cosine").desc(), F.col("vec_id")).limit(k)

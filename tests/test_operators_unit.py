@@ -2077,6 +2077,22 @@ def test_ivfpq_index_matches_in_dag_both_modes(spark, tmp_path):
             ).collect()
         ]
         assert got == want and len(got) == 10, (res, got, want)
+        # the batch operator answers each query like the in-DAG one
+        queries = spark.createDataFrame([(q,) for q in range(4)], "qid long")
+        batch = {}
+        for r in similarity.ivfpq_index_batch_topk(
+            spark, path, emb, queries, k=10
+        ).collect():
+            batch.setdefault(r.qid, []).append((r.vec_id, r.cosine))
+        for q in range(4):
+            single = [
+                (r.vec_id, r.cosine)
+                for r in similarity.ivfpq_topk(
+                    emb, query_vec_id=q, k=10, by_residual=res
+                ).collect()
+            ]
+            got_q = sorted(batch.get(q, []), key=lambda t: (-t[1], t[0]))
+            assert got_q == single, (res, q, got_q, single)
         codes = spark.read.parquet(f"{path}/codes")
         assert codes.count() == emb.count()
         ctype = dict(codes.dtypes)["codes"]
@@ -2248,51 +2264,70 @@ def test_probe_coverage_counts_match_probe_path(spark, tmp_path):
     assert any(r.n_capped_out > 0 for r in rep.values())  # non-vacuous
 
 
-def test_ivfpq_append_freezes_corpus_codes_and_encodes_batch(spark, tmp_path):
+def test_ivfpq_append_freezes_corpus_codes_and_encodes_batch(
+    spark, tmp_path, monkeypatch
+):
     """ivfpq_index_append must (a) leave every corpus code row
     byte-identical, (b) encode the batch with the STORED frozen
     codebooks — pinned by re-deriving the batch codes from the
-    sidecars independently — and (c) keep one row per vector with the
-    PQ_M TINYINT shape."""
+    sidecars independently — (c) keep one row per vector with the
+    PQ_M TINYINT shape, and (d) size its salted write by the index's
+    own nlist from ``_meta``, not the module default."""
     emb = load_table(spark, SF_SMALL, "embeddings")
-    path = str(tmp_path / "ivfpq_incr")
     corpus = emb.filter(F.col("vec_id") < 400)
     batch = emb.filter(F.col("vec_id") >= 400)
-    similarity.ivfpq_index_write(corpus, path)
-    before = {
-        r.vec_id: (r.cid, tuple(r.codes))
-        for r in spark.read.parquet(f"{path}/codes").collect()
-    }
-    similarity.ivfpq_index_append(spark, path, batch)
-    after = {
-        r.vec_id: (r.cid, tuple(r.codes))
-        for r in spark.read.parquet(f"{path}/codes").collect()
-    }
-    assert len(after) == emb.count()
-    for vid, row in before.items():
-        assert after[vid] == row  # corpus rows frozen
-    # batch codes equal an independent frozen-book encode
-    books = spark.read.parquet(f"{path}/_codebooks")
-    sub = similarity._pq_sub_rows(batch.select("vec_id", "embedding"))
-    enc = (
-        sub.join(F.broadcast(books), "s")
-        .select(
-            "vec_id", "s", "code",
-            similarity.sq_dist(F.col("sv"), F.col("cv")).alias("d"),
-            "cid",
+    salted = similarity.salted_by_partition
+    widths = []
+
+    def spy(df, part_col, salt_src, n_dirs):
+        widths.append(n_dirs)
+        return salted(df, part_col, salt_src, n_dirs)
+
+    monkeypatch.setattr(similarity, "salted_by_partition", spy)
+    for nlist in (similarity.IVF_NLIST, 16):
+        path = str(tmp_path / f"ivfpq_incr_{nlist}")
+        similarity.ivfpq_index_write(corpus, path, nlist=nlist)
+        before = {
+            r.vec_id: (r.cid, tuple(r.codes))
+            for r in spark.read.parquet(f"{path}/codes").collect()
+        }
+        widths.clear()
+        similarity.ivfpq_index_append(spark, path, batch)
+        assert widths == [nlist], widths
+        after = {
+            r.vec_id: (r.cid, tuple(r.codes))
+            for r in spark.read.parquet(f"{path}/codes").collect()
+        }
+        assert len(after) == emb.count()
+        cells = {
+            r.cid for r in spark.read.parquet(f"{path}/_centroids").collect()
+        }
+        assert len(cells) == nlist
+        assert {cid for cid, _ in after.values()} <= cells
+        for vid, row in before.items():
+            assert after[vid] == row  # corpus rows frozen
+        # batch codes equal an independent frozen-book encode
+        books = spark.read.parquet(f"{path}/_codebooks")
+        sub = similarity._pq_sub_rows(batch.select("vec_id", "embedding"))
+        enc = (
+            sub.join(F.broadcast(books), "s")
+            .select(
+                "vec_id", "s", "code",
+                similarity.sq_dist(F.col("sv"), F.col("cv")).alias("d"),
+                "cid",
+            )
+            .groupBy("vec_id", "s")
+            .agg(F.min(F.struct("d", "cid", "code")).alias("m"))
+            .select("vec_id", "s", F.col("m.code").alias("code"))
         )
-        .groupBy("vec_id", "s")
-        .agg(F.min(F.struct("d", "cid", "code")).alias("m"))
-        .select("vec_id", "s", F.col("m.code").alias("code"))
-    )
-    want = {
-        r.vec_id: tuple(x.code for x in sorted(r.cs, key=lambda x: x.s))
-        for r in enc.groupBy("vec_id")
-        .agg(F.collect_list(F.struct("s", "code")).alias("cs"))
-        .collect()
-    }
-    for vid, codes in want.items():
-        assert after[vid][1] == codes, vid
+        want = {
+            r.vec_id: tuple(x.code for x in sorted(r.cs, key=lambda x: x.s))
+            for r in enc.groupBy("vec_id")
+            .agg(F.collect_list(F.struct("s", "code")).alias("cs"))
+            .collect()
+        }
+        for vid, codes in want.items():
+            assert after[vid][1] == codes, (nlist, vid)
 
 
 def test_auto_nlist_scales_with_corpus(spark):

@@ -215,8 +215,10 @@ def test_no_cartesian_or_rowwise_python_anywhere(spark):
         ]
         if bad:
             plan_offenders[name] = bad
-    assert not plan_offenders, plan_offenders
-    assert not schema_offenders, schema_offenders
+    assert not (plan_offenders or schema_offenders), {
+        "plan": plan_offenders,
+        "schema": schema_offenders,
+    }
 
 
 def test_partitioned_query_prunes_at_plan_time(spark):

@@ -20,18 +20,28 @@ import sys
 EVDIR = "/tmp/spark-events-profile"
 
 
-def main() -> None:
-    topn = int(sys.argv[1]) if len(sys.argv) > 1 else 12
-    stages: dict[tuple[int, int], dict] = {}
+COUNTERS = ("n", "run", "cpu", "gc", "in_rec", "sr_b", "sr_rec", "sw_b",
+            "sw_rec", "out_rec")
+
+
+def event_logs(evdir: str = EVDIR) -> list[str]:
+    """Every event-log file under ``evdir`` (flat or one directory per
+    application), skipping the appstatus markers."""
     logs = []
-    for p in glob.glob(f"{EVDIR}/*"):
+    for p in glob.glob(f"{evdir}/*"):
         if os.path.isdir(p):
             logs.extend(q for q in glob.glob(f"{p}/*") if os.path.isfile(q))
         else:
             logs.append(p)
+    return [lg for lg in logs if not os.path.basename(lg).startswith("appstatus")]
+
+
+def rollup(logs: list[str]) -> dict[tuple[str, int, int], dict]:
+    """Per-stage task-metric sums keyed by (log file, stage, attempt):
+    stage ids restart at 0 in every application, so logs of several
+    runs never merge into one entry."""
+    stages: dict[tuple[str, int, int], dict] = {}
     for lg in logs:
-        if os.path.basename(lg).startswith("appstatus"):
-            continue
         with open(lg) as f:
             for line in f:
                 try:
@@ -39,23 +49,11 @@ def main() -> None:
                 except json.JSONDecodeError:
                     continue
                 if ev.get("Event") == "SparkListenerTaskEnd":
-                    sid = (ev["Stage ID"], ev["Stage Attempt ID"])
+                    sid = (lg, ev["Stage ID"], ev["Stage Attempt ID"])
                     m = ev.get("Task Metrics") or {}
-                    s = stages.setdefault(
-                        sid,
-                        {
-                            "n": 0,
-                            "run": 0,
-                            "cpu": 0,
-                            "gc": 0,
-                            "in_rec": 0,
-                            "sr_b": 0,
-                            "sr_rec": 0,
-                            "sw_b": 0,
-                            "sw_rec": 0,
-                            "out_rec": 0,
-                        },
-                    )
+                    s = stages.setdefault(sid, {})
+                    for c in COUNTERS:
+                        s.setdefault(c, 0)
                     s["n"] += 1
                     s["run"] += m.get("Executor Run Time", 0)
                     s["cpu"] += m.get("Executor CPU Time", 0) // 1_000_000
@@ -76,12 +74,18 @@ def main() -> None:
                     s["sw_rec"] += swm.get("Shuffle Records Written", 0)
                 elif ev.get("Event") == "SparkListenerStageCompleted":
                     si = ev["Stage Info"]
-                    sid = (si["Stage ID"], si["Stage Attempt ID"])
+                    sid = (lg, si["Stage ID"], si["Stage Attempt ID"])
                     stages.setdefault(sid, {}).update(
                         name=si["Stage Name"].split("\n")[0][:70],
                         wall=si.get("Completion Time", 0)
                         - si.get("Submission Time", 0),
                     )
+    return stages
+
+
+def main() -> None:
+    topn = int(sys.argv[1]) if len(sys.argv) > 1 else 12
+    stages = rollup(event_logs())
     rows = [
         (sid, s)
         for sid, s in stages.items()
@@ -90,13 +94,13 @@ def main() -> None:
     rows.sort(key=lambda kv: -kv[1]["wall"])
     for sid, s in rows[:topn]:
         print(
-            f"stage {sid[0]:4d} wall={s['wall']/1000:7.3f}s n={s['n']:4d} "
+            f"stage {sid[1]:4d} wall={s['wall']/1000:7.3f}s n={s['n']:4d} "
             f"run={s['run']/1000:7.2f}s cpu={s['cpu']/1000:7.2f}s "
             f"gc={s['gc']/1000:5.2f}s in={s['in_rec']:>9} "
             f"srd={s['sr_b']>>10}KiB/{s['sr_rec']} "
             f"swr={s['sw_b']>>10}KiB/{s['sw_rec']} out={s['out_rec']}"
         )
-        print(f"           {s.get('name','')}")
+        print(f"           {os.path.basename(sid[0])}: {s.get('name','')}")
 
 
 if __name__ == "__main__":
