@@ -18,13 +18,22 @@ from concurrent.futures import ThreadPoolExecutor
 
 
 def fanout(df, *cols: str):
-    """Gated repartition before CPU-heavy per-row compute (the
-    ``dedup._fanout`` idiom, shared): when the upstream source arrives
-    as fewer splits than ``defaultParallelism`` — the normal state of a
-    few-MB local parquet scan, where hashing would otherwise run on ONE
-    task — repartition to the session parallelism; when the input is
-    already split at least that wide (a real at-scale scan), the
-    exchange is pure cost and is skipped."""
+    """Gated repartition before CPU-heavy per-row compute.
+
+    Two jobs in one: (a) decouples parallelism from input file splits
+    (a few MB of parquet = one split, but signature math or a per-row
+    Python codec is CPU-bound, not byte-bound); (b) the exchange
+    MATERIALIZES the projected columns, so an expensive array column
+    computed just before it is evaluated once instead of being
+    re-inlined into every downstream expression by CollapseProject.
+    Explicit numPartitions so AQE does not coalesce it away; no
+    ``cols`` means a round-robin exchange.
+
+    Gated on the INPUT's partition count: when the upstream source is
+    already split at least ``defaultParallelism`` ways (the normal state
+    of a 100 TB scan), the exchange is pure cost and is skipped —
+    locally, where a few MB of parquet arrive as 1-2 splits, the
+    repartition still fires."""
     from pyspark.sql import functions as F
 
     n = max(df.sparkSession.sparkContext.defaultParallelism, 2)

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.par import fanout
+
 SHINGLE_K = 3  #: tokens per shingle for near-dup ops
 NUM_HASHES = 16  #: minhash signature length
 BAND_ROWS = 2  #: minhash rows per band → 8 bands; P(cand|j)=1-(1-j^2)^8
@@ -36,30 +38,6 @@ SIMHASH_BANDS = 4  #: 8 bits/band; complete for Hamming ≤ SIMHASH_BANDS-1
 
 def _tokens(text: Column) -> Column:
     return F.split(text, " ")
-
-
-def _fanout(df: DataFrame, *cols: str) -> DataFrame:
-    """Explicit repartition before CPU-heavy per-row compute.
-
-    Two jobs in one: (a) decouples parallelism from input file splits
-    (a few MB of parquet = one split, but signature math is CPU-bound,
-    not byte-bound); (b) the exchange MATERIALIZES the projected
-    columns, so an expensive array column computed just before it is
-    evaluated once instead of being re-inlined into every downstream
-    expression by CollapseProject. Explicit numPartitions so AQE does
-    not coalesce it away.
-
-    Gated on the INPUT's partition count: when the upstream source is
-    already split at least `defaultParallelism` ways (the normal state
-    of a 100 TB parquet scan), the full-text exchange is pure cost and
-    is skipped — locally, where a few MB of parquet arrive as 1-2
-    splits, the repartition still fires. The materialization job only
-    matters when a computed column precedes the exchange; call sites
-    here fan out base columns, so skipping is semantics-free."""
-    n = max(df.sparkSession.sparkContext.defaultParallelism, 2)
-    if df.rdd.getNumPartitions() >= n:
-        return df
-    return df.repartition(n, *[F.col(c) for c in cols])
 
 
 def shingles(text: Column, k: int = SHINGLE_K) -> Column:
@@ -150,7 +128,7 @@ def minhash_signatures(
     path skips the per-doc distinct entirely: one codegen map pass
     from the scan into a map-side-partial min aggregation."""
     if rows is None:
-        base = _fanout(docs.select(F.col("doc_id"), F.col("text")), "doc_id")
+        base = fanout(docs.select(F.col("doc_id"), F.col("text")), "doc_id")
         rows = shingle_rows(base, distinct=False)
     sh_rows = rows.select(F.col("doc_id"), F.md5(F.col("s")).alias("m"))
     h1 = F.conv(F.substring(F.col("m"), 1, 15), 16, 10).cast("long")
@@ -517,7 +495,7 @@ def simhash_signatures(docs: DataFrame) -> DataFrame:
     md5 + substr, hence exactly oracle-checkable."""
     # Same explode-not-HOF design as minhash_signatures: md5 once per
     # token row, 32 codegen'd ±1 columns, map-side-partial sum per doc.
-    tok_rows = _fanout(docs.select(F.col("doc_id"), F.col("text")), "doc_id").select(
+    tok_rows = fanout(docs.select(F.col("doc_id"), F.col("text")), "doc_id").select(
         F.col("doc_id"), F.explode(_tokens(F.col("text"))).alias("t")
     )
     tok_rows = tok_rows.select(F.col("doc_id"), F.md5(F.col("t")).alias("m"))

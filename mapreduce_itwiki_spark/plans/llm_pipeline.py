@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ..functions import text as TXT
 from ..functions import vectors as V
+from ..functions.par import fanout
 from ..operators import dedup, multimodal, similarity
 from ..sources.parquet import load_table
 from .catalog import register
@@ -4719,25 +4720,6 @@ def _head_bytes(text: str, n: int) -> bytes:
     return head.encode("ascii").ljust(n, b"\x00")
 
 
-def _fan_python_stage(df: DataFrame) -> DataFrame:
-    """Right-size a CPU-bound Arrow map stage to the cluster: when the
-    upstream scan has fewer splits than cores (locally a small parquet
-    file is ONE split, so a per-row Python codec runs serial no matter
-    how many cores local[32] has), round-robin repartition to
-    defaultParallelism BEFORE the Python workers. CONDITIONAL, so at
-    100 TB — where the scan already has thousands of splits — this
-    plans no exchange at all; when it does fire, the shuffled payload
-    is the slim (doc_id, text-prefix) projection, negligible next to
-    the codec work it parallelizes. (Round 7: multimodal_dedup_phash
-    measured 10.3 s at sf0.1 with its whole encode→decode→hash pipeline
-    on one core — the codec itself is ~2.3 ms/image.)"""
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
-
-
 @register(
     "multimodal_jpeg_decode",
     # one uniform 8×8 block per text byte → DC-only blocks whose DC
@@ -4768,7 +4750,7 @@ def multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.multimodal import decode_jpeg_gray, encode_jpeg_gray, image_stats
 
-    docs = _fan_python_stage(
+    docs = fanout(
         load_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
 
@@ -4833,7 +4815,7 @@ def multimodal_dedup_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.multimodal import decode_jpeg_gray, encode_jpeg_gray
 
-    docs = _fan_python_stage(
+    docs = fanout(
         load_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
 
@@ -4920,7 +4902,7 @@ def multimodal_jpeg_color_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.multimodal import decode_jpeg_color, encode_jpeg_color
 
-    docs = _fan_python_stage(
+    docs = fanout(
         load_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
 
@@ -4998,7 +4980,7 @@ def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.multimodal import encode_png_gray, image_stats
 
-    docs = _fan_python_stage(
+    docs = fanout(
         load_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
 
@@ -5049,7 +5031,7 @@ def multimodal_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.multimodal import audio_stats, encode_wav_pcm16
 
-    docs = _fan_python_stage(
+    docs = fanout(
         load_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
 
@@ -5100,7 +5082,7 @@ def multimodal_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.multimodal import audio_frame_energy, encode_wav_pcm16
 
-    docs = _fan_python_stage(
+    docs = fanout(
         load_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
 
@@ -5154,7 +5136,7 @@ def multimodal_audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.multimodal import audio_resample_stats, encode_wav_pcm16
 
-    docs = _fan_python_stage(
+    docs = fanout(
         load_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
 
@@ -5204,7 +5186,7 @@ def multimodal_image_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.multimodal import encode_png_gray, image_histogram
 
-    docs = _fan_python_stage(
+    docs = fanout(
         load_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
 
@@ -5264,7 +5246,7 @@ def multimodal_binaryfile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     shutil.rmtree(base, ignore_errors=True)
     _os.makedirs(base, exist_ok=True)
-    docs = _fan_python_stage(
+    docs = fanout(
         load_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
 
@@ -5341,7 +5323,7 @@ def multimodal_gif_video_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.multimodal import encode_gif_gray, video_stats
 
-    docs = _fan_python_stage(
+    docs = fanout(
         load_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
 
@@ -6149,7 +6131,7 @@ def multimodal_resize_pool(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.multimodal import decode_png_gray, encode_png_gray
 
-    docs = _fan_python_stage(
+    docs = fanout(
         load_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
 

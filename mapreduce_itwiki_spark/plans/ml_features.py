@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import vectors as V
+from ..functions.par import fanout
 from ..operators import dedup
 from ..sources.parquet import load_table
 from .catalog import register
@@ -1133,7 +1134,7 @@ def allpairs_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # against a lazy localCheckpoint — recomputing the (cheap, parallel)
     # subtree beats materializing it (3.8 s vs 7.8 s), unlike
     # knn_graph_lsh where the doubled subtree holds the band+matmul.
-    docs = dedup._fanout(load_table(spark, sf_dir, "documents"), "doc_id")
+    docs = fanout(load_table(spark, sf_dir, "documents"), "doc_id")
     return allpairs_pipeline(docs)
 
 

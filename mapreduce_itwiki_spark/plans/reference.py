@@ -393,11 +393,11 @@ def xpath_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 def from_xml_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The O2 parse through Spark 4's BUILT-IN XML support: ``from_xml``
     parses each <page> string into a typed STRUCT entirely JVM-side —
-    the schema-first alternative to both the XPath expression above and
-    the Arrow pandas_udf parser in sources/xml_pages.py (which remains
-    the path for REAL dumps: from_xml wants one well-formed document
-    per row, not a byte-split stream). Same roundtrip proof shape: the
-    oracle derives the embedded values from the source columns."""
+    the schema-first alternative to the XPath expression above, and the
+    same parse sources/xml_pages.py runs on REAL dumps (there each
+    ``</page>``-delimited record is re-wrapped into one well-formed
+    <page> document first). Same roundtrip proof shape: the oracle
+    derives the embedded values from the source columns."""
     docs = load_table(spark, sf_dir, "documents")
     # XML-escape the embedded text (& first): the corpus is ASCII word
     # soup today, but a regenerated fixture containing & < > would
@@ -442,7 +442,7 @@ def from_xml_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 def wiki_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """XML source + parse (O1+O2), oracle-checked: serialize documents as
     <page> blocks (distributed text write — no driver loop), scan them
-    back through the record-delimiter reader + Arrow parse, and count
+    back through the record-delimiter reader + from_xml parse, and count
     distinct source pages per token. Equals the flagship oracle because
     the round trip is lossless (word-soup text needs no entity escaping;
     titles are 'doc <id>')."""

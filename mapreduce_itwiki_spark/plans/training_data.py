@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.par import fanout
 from ..operators import dedup
 from ..functions.inline import values_df
 from ..sources.parquet import load_table
@@ -1537,7 +1538,7 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly how production BPE vocabularies are built. The oracle
     replays all rounds as an unrolled CTE chain, so even the training
     trajectory (not just the final table) is hash-checked."""
-    docs = dedup._fanout(
+    docs = fanout(
         load_table(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id"
     )
     merges = train_bpe(docs, BPE_TRAIN_ROUNDS)
@@ -1561,7 +1562,7 @@ def bpe_train_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     into the same broadcast-free codegen replace cascade applied here.
     The oracle replays training AND application round-for-round, so
     the end-to-end trajectory is hash-checked, not just the counts."""
-    docs = dedup._fanout(
+    docs = fanout(
         load_table(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id"
     )
     merges = train_bpe(docs, BPE_TRAIN_ROUNDS)
@@ -1605,7 +1606,7 @@ def bpe_train_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     the SAME sample (train CTEs on the coin subset, apply chain over
     all documents), so the sampled path is hash-checked end-to-end,
     not just smoke-tested."""
-    docs = dedup._fanout(
+    docs = fanout(
         load_table(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id"
     )
     coin = (

@@ -15,6 +15,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """min(24g, half of physical RAM): a fixed 24g heap on a smaller
+    host lets the JVM grow until the kernel kills it."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "24g"
+    return f"{min(24 * 1024, kb // 2048)}m"
+
+
 def get_spark(app_name: str = "mapreduce_itwiki_spark", cpus: int | str | None = None) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
@@ -53,7 +64,15 @@ def get_spark(app_name: str = "mapreduce_itwiki_spark", cpus: int | str | None =
         # so oracle epoch math agrees byte-for-byte.
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
+        # an orderBy.limit(k) whose k means "rank everything" (10**9)
+        # would plan TakeOrderedAndProject, whose per-task heap allocates
+        # 2k slots up front; above this k it plans Sort + limit instead.
+        # The same bound caps the rank limit pushed into WindowGroupLimit.
+        .config("spark.sql.execution.topKSortFallbackThreshold", "1000000")
         # whole-stage codegen compiles one JVM class per query stage; a
         # long session running 100+ distinct md5/regex-heavy plans fills
         # the default 240 MB code cache, after which the JIT silently

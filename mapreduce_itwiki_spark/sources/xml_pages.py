@@ -11,13 +11,21 @@ Spark-first re-expression:
 * The splittable block scan is Hadoop's own ``TextInputFormat`` with
   ``textinputformat.record.delimiter = "</page>"`` — same
   carry-past-split semantics as the reference reader, zero custom code.
-  This is the ONLY RDD touchpoint in the engine, converted to a
-  DataFrame immediately.
-* The per-block parse is an Arrow-batched ``pandas_udf`` around
-  ``xml.etree`` (the reference's per-record StAX loop is a row-at-a-time
-  Java UDF; Arrow batching is the Spark-idiomatic slow path). Only
-  ``title`` and ``text`` are materialized — manual column pruning, as in
-  ``CountReference.java:228-232``.
+* The per-block parse is Spark 4's built-in ``from_xml`` over the block
+  re-wrapped as ``<page…</page>``: one JVM-side column expression in the
+  same whole-stage pipeline as the scan, so the link-count pipeline runs
+  with no Python worker. Only ``title`` and ``text`` are materialized —
+  manual column pruning, as in ``CountReference.java:228-232``.
+
+Parse rules (the reference's StAX loop, ``CountReference.java:215-237``):
+element names inside ``<page>`` match case-insensitively, ``xmlns``
+prefixes are ignored, entities and CDATA decode, surrounding whitespace
+is kept, a malformed block becomes null (PERMISSIVE) and pages with an
+empty title or text are dropped. ``text`` is read from
+``page/revision/text`` or, failing that, ``page/text``; a ``<text>``
+nested deeper is not found, and child markup inside ``<text>`` stays
+raw. The MediaWiki export schema puts character-only ``<text>`` under
+``<revision>``, so neither case occurs in a real dump.
 
 Scale note: the record-delimiter read is splittable, so a 100 TB dump
 fans out across executors exactly like the reference's input splits; the
@@ -29,45 +37,35 @@ from __future__ import annotations
 import contextlib
 from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
 
-PAGE_SCHEMA = StructType(
-    [StructField("title", StringType()), StructField("text", StringType())]
-)
+_PAGE_DDL = "STRUCT<title: STRING, text: STRING, revision: STRUCT<text: STRING>>"
+_PARSE_OPTIONS = {"ignoreNamespace": "true", "ignoreSurroundingSpaces": "false"}
 
 
-def _parse_page_block(block: str) -> tuple[str, str] | None:
-    """Parse one ``<page>…</page>`` block → (title, text) or None.
-
-    Element-name matching is case-insensitive and CHARACTERS chunks are
-    concatenated, mirroring ``CountReference.java:215-236``; pages with
-    empty title or text are dropped (:237).
-    """
-    import xml.etree.ElementTree as ET
-
-    start = block.find("<page")
-    if start < 0:
-        return None
-    fragment = block[start:]
-    if not fragment.rstrip().endswith("</page>"):
-        fragment += "</page>"
-    try:
-        root = ET.fromstring(fragment)
-    except ET.ParseError:
-        return None
-    title, text = "", ""
-    for elem in root.iter():
-        tag = elem.tag.rsplit("}", 1)[-1].lower()  # strip xmlns, casefold (:228-231)
-        if tag == "title":
-            title = "".join(elem.itertext())
-        elif tag == "text":
-            text = "".join(elem.itertext())
-    if not title or not text:
-        return None
-    return title, text
+def _parse_pages(blocks: DataFrame) -> DataFrame:
+    """Record-delimited blocks (string column ``value``, each the text
+    before one ``</page>``) → (title, text) rows, at most one per block;
+    any other column of ``blocks`` passes through."""
+    block = F.col("value")
+    start = F.instr(block, "<page")
+    page = F.from_xml(
+        F.concat(block.substr(start, F.length(block)), F.lit("</page>")),
+        _PAGE_DDL,
+        _PARSE_OPTIONS,
+    )
+    # inline(array(page)) parses each block once: after a plain select,
+    # the optimizer pushes the empty-field filter below the projection
+    # and copies from_xml into each field reference (a 16 k-page drain on
+    # 4 cores took 0.94 s that way and 0.56 s this way)
+    pages = (
+        blocks.filter(start > 0)
+        .select("*", F.inline(F.array(page)))
+        .withColumn("text", F.coalesce(F.col("revision.text"), F.col("text")))
+        .drop("value", "revision")
+    )
+    return pages.filter((F.length("title") > 0) & (F.length("text") > 0))
 
 
 @contextlib.contextmanager
@@ -96,9 +94,8 @@ def read_pages(
     """Scan a MediaWiki export into DataFrame(title string, text string).
 
     Default path: the native ``text`` datasource with a custom
-    ``lineSep`` — record-delimited, splittable, and entirely JVM-side
-    until the Arrow-batched parse (the Python-RDD path pays pickle per
-    block plus per-row schema verification; measured >2× slower).
+    ``lineSep`` — record-delimited, splittable, and, with the
+    ``from_xml`` parse, entirely JVM-side.
     Split granularity: on the native path use
     ``scoped_max_split_bytes`` AROUND the read and its actions (the
     per-read ``maxPartitionBytes`` option is not honored by the v1 text
@@ -110,7 +107,8 @@ def read_pages(
 
     ``use_rdd=True`` keeps the classic ``newAPIHadoopFile`` route (the
     direct analog of the reference's XmlInputFormat wiring,
-    CountReference.java:324-334) for comparison and tests."""
+    CountReference.java:324-334) for comparison and tests; its blocks
+    go through the same parse."""
     if use_rdd:
         conf = {"textinputformat.record.delimiter": "</page>"}
         if max_split_bytes is not None:
@@ -122,27 +120,13 @@ def read_pages(
             "org.apache.hadoop.io.Text",
             conf=conf,
         ).map(lambda kv: (kv[1],))
-        blocks = spark.createDataFrame(
-            rdd, StructType([StructField("block", StringType())])
-        )
-        return parse_page_blocks(blocks)
-    if max_split_bytes is not None:
-        raise ValueError(
-            "max_split_bytes on the native path would mutate session-wide "
-            "spark.sql.files.maxPartitionBytes; wrap the read AND its "
-            "actions in scoped_max_split_bytes(spark, n) instead"
-        )
-    blocks = spark.read.option("lineSep", "</page>").text(path)
-    return parse_page_blocks(blocks, col="value")
-
-
-def parse_page_blocks(blocks: DataFrame, col: str = "block") -> DataFrame:
-    """Arrow-batched XML parse of page blocks → (title, text) rows."""
-
-    @F.pandas_udf(PAGE_SCHEMA)
-    def parse(batch: pd.Series) -> pd.DataFrame:
-        rows = [_parse_page_block(b) or ("", "") for b in batch]
-        return pd.DataFrame(rows, columns=["title", "text"])
-
-    parsed = blocks.select(parse(F.col(col)).alias("page")).select("page.*")
-    return parsed.filter((F.col("title") != "") & (F.col("text") != ""))
+        blocks = spark.createDataFrame(rdd, "value string")
+    else:
+        if max_split_bytes is not None:
+            raise ValueError(
+                "max_split_bytes on the native path would mutate session-wide "
+                "spark.sql.files.maxPartitionBytes; wrap the read AND its "
+                "actions in scoped_max_split_bytes(spark, n) instead"
+            )
+        blocks = spark.read.option("lineSep", "</page>").text(path)
+    return _parse_pages(blocks)

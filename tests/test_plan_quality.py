@@ -940,13 +940,13 @@ def test_raw_frame_rank_filters_get_partial_group_limit(spark):
 
 
 def test_fanout_skips_exchange_for_prepartitioned_input(spark):
-    """_fanout (operators/dedup.py): the explicit repartition before
+    """fanout (functions/par.py): the explicit repartition before
     signature math exists to decouple parallelism from file splits —
     a few MB of local parquet is 1-2 splits. A 100 TB scan is already
     thousands of splits, so there the full-text exchange is pure cost:
     _fanout must return a well-partitioned input UNCHANGED and still
     fan out a narrow one."""
-    from mapreduce_itwiki_spark.operators.dedup import _fanout
+    from mapreduce_itwiki_spark.functions.par import fanout as _fanout
 
     n = spark.sparkContext.defaultParallelism
     docs = spark.range(0, 1000).selectExpr(
@@ -958,6 +958,28 @@ def test_fanout_skips_exchange_for_prepartitioned_input(spark):
     fanned = _fanout(narrow, "doc_id")
     assert fanned is not narrow
     assert fanned.rdd.getNumPartitions() == max(n, 2)
+
+
+def test_wiki_linkcount_plans_no_python(spark, tmp_path):
+    """The namesake pipeline is JVM-side end to end: the page parse is
+    the built-in from_xml, so no Python worker is started for it, and
+    the physical plan evaluates that parse once per block."""
+    from mapreduce_itwiki_spark.operators.linkgraph import incoming_reference_counts
+    from mapreduce_itwiki_spark.sources.xml_pages import read_pages
+
+    p = tmp_path / "pages.xml"
+    p.write_text(
+        "<mediawiki><page><title>A</title><revision><text>[[B]]</text>"
+        "</revision></page></mediawiki>\n",
+        encoding="utf-8",
+    )
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        incoming_reference_counts(read_pages(spark, str(p))).explain("extended")
+    plan = buf.getvalue()
+    for marker in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas", "PythonUDF"):
+        assert marker not in plan, marker
+    assert plan.split("== Physical Plan ==")[1].count("from_xml(") == 1, plan
 
 
 def test_ann_batch_corpus_scans_independent_of_batch_size(spark):

@@ -1,7 +1,8 @@
-"""Property-based tests (hypothesis) for the pure-Python seams of the
-engine — the XML block parser, the deterministic fake decoder, and the
-LSH hyperplane family. These run without a SparkSession, so they're
-cheap enough to explore thousands of inputs per run."""
+"""Property-based tests (hypothesis) for the seams of the engine — the
+XML block parser, the deterministic fake decoder, and the LSH hyperplane
+family. All but the parser run without a SparkSession, so they're cheap
+enough to explore thousands of inputs per run; the parser properties
+batch many blocks into each Spark job instead."""
 
 from __future__ import annotations
 
@@ -19,7 +20,7 @@ from mapreduce_itwiki_spark.operators.similarity import (
     NUM_HYPERPLANES,
     hyperplane,
 )
-from mapreduce_itwiki_spark.sources.xml_pages import _parse_page_block
+from mapreduce_itwiki_spark.sources.xml_pages import _parse_pages
 
 # text safe to embed in XML element content without escaping
 xml_safe = st.text(
@@ -30,21 +31,56 @@ xml_safe = st.text(
 ).map(str.strip).filter(bool)
 
 
-@given(title=xml_safe, text=xml_safe)
-@settings(max_examples=200)
-def test_parse_page_block_roundtrips(title, text):
-    """Any well-formed <page> block parses back to exactly (title, text)."""
-    block = f"junk-prefix\n<page><title>{title}</title><ns>0</ns><revision><text>{text}</text></revision></page>"
-    assert _parse_page_block(block) == (title, text)
+def test_parse_page_block_roundtrips(spark):
+    """Any well-formed <page> block parses back to exactly (title, text).
+    Each example is a list of blocks, as the ``</page>``-delimited scan
+    yields them, parsed as one DataFrame in one Spark job."""
+    parsed = []
+
+    @given(pages=st.lists(st.tuples(xml_safe, xml_safe), min_size=10, max_size=20))
+    @settings(max_examples=20, deadline=None)
+    def check(pages):
+        blocks = spark.createDataFrame(
+            [
+                (f"junk-prefix\n<page><title>{title}</title><ns>0</ns>"
+                 f"<revision><text>{text}</text></revision>",)
+                for title, text in pages
+            ],
+            "value string",
+        )
+        got = [(r.title, r.text) for r in _parse_pages(blocks).collect()]
+        assert sorted(got) == sorted(pages)
+        parsed.append(len(pages))
+
+    check()
+    assert sum(parsed) >= 200
 
 
-@given(junk=st.text(max_size=200))
-@settings(max_examples=200)
-def test_parse_page_block_never_raises(junk):
-    """Arbitrary garbage (dirty dumps are the norm) parses to a tuple or
-    None — never an exception that would fail a 100 TB scan."""
-    out = _parse_page_block(junk)
-    assert out is None or (isinstance(out, tuple) and len(out) == 2)
+def test_parse_page_block_never_raises(spark):
+    """Arbitrary garbage (dirty dumps are the norm) parses to at most one
+    (title, text) row per block — never an exception that would fail a
+    100 TB scan. About two of three draws open with ``<page>`` so the XML
+    parser, not just the ``<page`` filter, sees the garbage."""
+    parsed = []
+
+    junk_block = st.one_of(
+        st.text(max_size=200),
+        st.text(max_size=200).map("<page>".__add__),
+        st.text(alphabet="<>/&;![]-= pagetilrvsxn", max_size=200).map("<page>".__add__),
+    )
+
+    @given(junk=st.lists(junk_block, min_size=10, max_size=20))
+    @settings(max_examples=20, deadline=None)
+    def check(junk):
+        blocks = spark.createDataFrame(
+            [(i, b) for i, b in enumerate(junk)], "i int, value string"
+        )
+        ids = [r.i for r in _parse_pages(blocks).collect()]
+        assert len(ids) == len(set(ids))
+        parsed.append(len(junk))
+
+    check()
+    assert sum(parsed) >= 200
 
 
 @given(payload=st.binary(max_size=64), n=st.integers(min_value=1, max_value=16))

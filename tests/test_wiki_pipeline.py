@@ -249,6 +249,29 @@ def test_malformed_page_blocks_are_dropped(spark, tmp_path):
     assert [r.title for r in rows] == ["Good"]
 
 
+def test_text_outside_the_export_schema(spark, tmp_path):
+    """Rule: ``text`` is the character content of ``page/revision/text``
+    or ``page/text``, nothing else. So (a) child elements inside
+    ``<text>`` stay as raw markup instead of being flattened to their
+    characters, and (b) a ``<text>`` nested deeper than ``page/`` or
+    ``page/revision/`` is not found, and its page is dropped. The
+    MediaWiki export schema puts character-only ``<text>`` under
+    ``<revision>``, so neither shape occurs in a real dump."""
+    doc = (
+        "<mediawiki>\n"
+        "  <page><title>Child</title><revision><text>a<b>inner</b>c</text></revision></page>\n"
+        "  <page><title>Deep</title><revision><x><text>deep</text></x></revision></page>\n"
+        "  <page><title>Direct</title><text>[[Target]]</text></page>\n"
+        "</mediawiki>\n"
+    )
+    p = tmp_path / "nesting.xml"
+    p.write_text(doc, encoding="utf-8")
+    rows = sorted(
+        (r.title, r.text) for r in xml_pages.read_pages(spark, str(p)).collect()
+    )
+    assert rows == [("Child", "a<b>inner</b>c"), ("Direct", "[[Target]]")]
+
+
 def test_xml_start_tag_straddling_split_boundary_not_dropped(spark, tmp_path):
     """The inherited Mahout XmlInputFormat edge (SURVEY §4, VERDICT r7
     #8): a reader that searches forward for '<page>' from its split

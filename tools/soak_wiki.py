@@ -1,5 +1,5 @@
 """Wiki-dump soak (VERDICT r3 ask #1, namesake half): run the COMPLETE
-reference pipeline — record-delimited XML scan → Arrow parse → link
+reference pipeline — record-delimited XML scan → from_xml parse → link
 extract/normalize/filter → distinct pairs → incoming-reference counts →
 total sort — against a multi-GB synthetic MediaWiki export
 (tools/gen_wiki_dump.py) and record wall time, stage cardinalities, and
