@@ -92,7 +92,7 @@ HEADLINE = [
     # round 15 additions (driver round 8): the persisted IVFPQ code
     # table — build cost (always rebuilds: both quantizer trainings +
     # the full-corpus encode) and the pruned byte-code ADC query
-    # (amortized after pass 1 behind the _meta sentinel); the
+    # (amortized after pass 1 behind the index manifest); the
     # non-default-geometry index lookup; the IVF lifecycle
     # (build→append→retrain); and the per-batch probe-budget monitor
     "ann_ivfpq_index_build",

@@ -4,7 +4,7 @@
 are pickled on the driver and every downstream ACTION re-evaluates them
 through a Python worker (the task blocks in
 ``BasePythonRunner$ReaderInputStream.read`` — measured 4–7 s of flat
-latency per parquet write of a ONE-ROW ``_meta`` sidecar, every
+latency per parquet write of a ONE-ROW index-parameter table, every
 execution). The plan-quality gate never saw it because it is an RDD
 scan, not a ``BatchEvalPython`` SQL node.
 

@@ -7,8 +7,8 @@ persisted-index writers issue several INDEPENDENT actions back to back
 each of those small jobs leaves the cluster mostly idle, and at scale
 the next job's tasks back-fill the tail of the previous one. This
 helper overlaps them from a small thread pool and re-raises the first
-failure. Completion-marker sidecars (``_meta``/``_geometry``, written
-LAST by contract) stay OUTSIDE the pool at their call sites.
+failure. The index manifest (``operators/index_store.py``, committed
+LAST by contract) stays OUTSIDE the pool at its call sites.
 """
 
 from __future__ import annotations

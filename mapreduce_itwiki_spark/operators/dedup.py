@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.par import fanout
+from . import index_store
 
 SHINGLE_K = 3  #: tokens per shingle for near-dup ops
 NUM_HASHES = 16  #: minhash signature length
@@ -607,9 +608,11 @@ def minhash_index_write(docs: DataFrame, path: str) -> None:
     where ``bsz`` is the band-bucket size frozen at build time — the
     MINHASH_MAX_BUCKET hot-bucket ceiling becomes a plain pushed
     predicate at read time (``bsz <= cap``) instead of a corpus-wide
-    window per probe."""
+    window per probe. Completion is the ``minhash`` manifest
+    (:mod:`.index_store`), committed after the rows."""
     from pyspark.sql import Window
 
+    index_store.retract(path)
     bands = _minhash_bands(minhash_signatures(docs), carry_sigs=True)
     w = Window.partitionBy("band_id", "band_key")
     rows = bands.withColumn("bsz", F.count(F.lit(1)).over(w))
@@ -630,6 +633,7 @@ def minhash_index_write(docs: DataFrame, path: str) -> None:
     salted_by_partition(
         keyed, "pkey", "doc_id", n_dirs=(NUM_HASHES // BAND_ROWS) * MINHASH_INDEX_PARTS
     ).write.mode("overwrite").partitionBy("pkey").parquet(path)
+    index_store.commit(path, "minhash", ["write"])
 
 
 def neardup_candidates_against_index(
@@ -663,6 +667,7 @@ def neardup_candidates_against_index(
     join consume one materialization; the size gate is row-count-based
     because a checkpointed frame's Catalyst size estimate is the
     unknown-size default."""
+    index_store.load(index_path, "minhash")
     nb = (
         _minhash_bands(minhash_signatures(new_docs), carry_sigs=True)
         .localCheckpoint(eager=False)

@@ -58,6 +58,7 @@ from pyspark.sql import functions as F
 from ..functions import vectors
 from ..functions.inline import values_df
 from ..functions.par import fanout, run_concurrent, salted_by_partition
+from . import index_store
 
 NUM_HYPERPLANES = 16  #: sign bits per vector
 LSH_BANDS = 4  #: disjoint bands; candidates share >=1 full band
@@ -565,40 +566,6 @@ def choose_band_bits_occupancy(
     return max(widths)
 
 
-#: session-side memo of per-index geometry: the sidecar is immutable
-#: for a given index directory (rewrites go through ann_index_write,
-#: which invalidates), and reading it is a ~0.15 s Spark job — a real
-#: tax on sub-second pruned probes if paid per call
-_GEOMETRY_CACHE: dict[str, tuple[int, int]] = {}
-
-
-def index_geometry(spark, path: str) -> tuple[int, int]:
-    """(band_bits, max_bucket) of a persisted LSH index — read from the
-    ``_geometry`` sidecar when present, module defaults otherwise
-    (back-compat with pre-r8 indexes, which were always written at the
-    defaults). Underscore-prefixed children are invisible to the
-    partitioned parquet reader, so the sidecar rides inside the index
-    directory itself — the geometry can never be separated from the
-    rows it describes, which is what makes retuning safe: a probe
-    always hashes with the bits the index was BUILT with, regardless
-    of the module constants of the day (VERDICT r7 #2). Local-FS
-    existence check; an object-store deployment uses the Hadoop FS
-    API, same shape."""
-    import os
-
-    key = os.path.abspath(path)
-    got = _GEOMETRY_CACHE.get(key)
-    if got is not None:
-        return got
-    if os.path.exists(os.path.join(path, "_geometry", "_SUCCESS")):
-        r = spark.read.parquet(f"{path}/_geometry").take(1)[0]
-        got = (int(r.band_bits), int(r.max_bucket))
-    else:
-        got = (BAND_BITS, MAX_BUCKET)
-    _GEOMETRY_CACHE[key] = got
-    return got
-
-
 def ann_index_write(
     emb: DataFrame,
     path: str,
@@ -627,15 +594,11 @@ def ann_index_write(
     keeps the module default, an int pins an explicit geometry, and
     ``"auto"`` derives it from the corpus row count
     (:func:`auto_band_bits` — one count scan, the 100 TB default for a
-    fresh build). Whatever is chosen is recorded in the ``_geometry``
-    sidecar — written LAST (the overwrite of ``path`` clears the whole
-    directory first, sidecar included), so ``_geometry/_SUCCESS`` is
-    the build's completion marker: non-default-geometry consumers gate
-    on it, and every reader — probe, append, compact — derives its
-    hashing from the sidecar, never from the constants."""
-    import os
-
-    _GEOMETRY_CACHE.pop(os.path.abspath(path), None)  # rewrite invalidates
+    fresh build). Whatever is chosen is recorded in the index manifest
+    (:mod:`.index_store`, committed LAST), and every reader — probe,
+    append, compact — derives its hashing from it, never from the
+    constants."""
+    index_store.retract(path)
     if band_bits == "auto":
         band_bits = auto_band_bits(emb.count(), max_bucket)
     elif band_bits == "auto_occupancy":
@@ -658,12 +621,10 @@ def ann_index_write(
     salted_by_partition(
         keyed, "pkey", "vec_id", n_dirs=LSH_BANDS * (2 ** int(band_bits))
     ).write.mode("overwrite").partitionBy("pkey").parquet(path)
-    geo = values_df(  # JVM inline table, not a Python-RDD scan (r10)
-        emb.sparkSession,
-        [(int(band_bits), LSH_BANDS, int(max_bucket))],
-        "band_bits int, lsh_bands int, max_bucket int",
+    index_store.commit(
+        path, "lsh", ["write"],
+        band_bits=int(band_bits), lsh_bands=LSH_BANDS, max_bucket=int(max_bucket),
     )
-    geo.coalesce(1).write.mode("overwrite").parquet(f"{path}/_geometry")
 
 
 def ann_index_append(
@@ -698,12 +659,13 @@ def ann_index_append(
     drift from the rows it counts.
 
     Hashing follows the INDEX's stored geometry (band bits + shard cap
-    from the ``_geometry`` sidecar), so a batch appended to a retuned
-    index always lands in the right buckets; an explicit ``max_bucket``
-    argument overrides the cap only (kept for the demo-cap entries)."""
-    geo_bits, geo_cap = index_geometry(spark, index_path)
+    from the manifest), so a batch appended to a retuned index always
+    lands in the right buckets; an explicit ``max_bucket`` argument
+    overrides the cap only (kept for the demo-cap entries)."""
+    man = index_store.load(index_path, "lsh")
+    geo_bits = man["band_bits"]
     if max_bucket is None:
-        max_bucket = geo_cap
+        max_bucket = man["max_bucket"]
     newb = banded_rows(new_emb, band_bits=geo_bits)
     touched = newb.select("band_id", "band_key").distinct().collect()
     pkeys = sorted(f"{r.band_id}_{r.band_key}" for r in touched) or ["__none__"]
@@ -735,9 +697,11 @@ def ann_index_append(
     )
     # clustered append (guide §6; see ann_index_write), vec_id-salted
     # (r11, guide §2.5) against a hot-bucket batch
+    index_store.retract(index_path)
     salted_by_partition(
         appended, "pkey", "vec_id", n_dirs=LSH_BANDS * (2 ** int(geo_bits))
     ).write.mode("append").partitionBy("pkey").parquet(index_path)
+    index_store.record(index_path, man, "append")
 
 
 PROBE_CAP = 512  #: per-(band, bucket) candidate budget for one-sided
@@ -821,7 +785,7 @@ def ann_candidates_against_index(
             f" the in-expression expansion generates bit flips only"
             f" (got {radius!r})"
         )
-    geo_bits, _geo_cap = index_geometry(spark, index_path)
+    geo_bits = index_store.load(index_path, "lsh")["band_bits"]
     qb = banded_rows(new_emb, band_bits=geo_bits).select(
         F.col("vec_id").alias("qid"), "band_id", "band_key"
     )
@@ -991,7 +955,8 @@ def probe_coverage_report(
     monitor's worst-case candidate volume is the BUDGET at any scale,
     killing the ∝ batch·occupancy growth that made the static-mod
     monitor the one superlinear scale row at sf20z."""
-    geo_bits, geo_cap = index_geometry(spark, index_path)
+    geo = index_store.load(index_path, "lsh")
+    geo_bits, geo_cap = geo["band_bits"], geo["max_bucket"]
     if query_sample_mod == "auto":
         batch_n = new_emb.count()
         query_sample_mod = auto_probe_sample_mod(
@@ -1217,8 +1182,8 @@ def ann_index_multiprobe_batch_topk(
     onto the result (ADVICE r9 documents the choice).
     Columns: (qid, vec_id, label, cosine), per-qid top-k under
     (cosine desc, vec_id)."""
+    geo_bits = index_store.load(index_path, "lsh")["band_bits"]
     idx = spark.read.parquet(index_path)
-    geo_bits, _geo_cap = index_geometry(spark, index_path)
     q_ids = queries.select("qid")
     q_emb = (
         emb.join(F.broadcast(q_ids), emb["vec_id"] == q_ids["qid"])
@@ -1284,8 +1249,8 @@ def ann_index_batch_topk(
     never scans partitions outside the batch's own bands.
     Columns: (qid, vec_id, label, cosine), per-qid top-k under
     (cosine desc, vec_id)."""
+    geo_bits = index_store.load(index_path, "lsh")["band_bits"]
     idx = spark.read.parquet(index_path)
-    geo_bits, _geo_cap = index_geometry(spark, index_path)
     q_ids = queries.select("qid")
     q_emb = (
         emb.join(F.broadcast(q_ids), emb["vec_id"] == q_ids["qid"])
@@ -1830,7 +1795,7 @@ def _pq_sub_rows(
     """(*keys, s, sv): the ``pq_m`` disjoint ``pq_sub``-dim subvectors
     of each embedding — one explode, no shuffle. The geometry defaults
     to the module constants for in-DAG callers; PERSISTED-index callers
-    pass the widths recorded in the index's ``_meta`` sidecar (ADVICE
+    pass the widths recorded in the index's manifest (ADVICE
     r8: queries must decode with the geometry the index was BUILT at,
     never the constants of the code that happens to be running)."""
     v = vectors.as_double(F.col("embedding"))
@@ -1901,16 +1866,6 @@ def _pq_encode_codes(sub: DataFrame, books: DataFrame, pq_m: int) -> DataFrame:
         "vec_id",
         F.array(*[F.col(f"m{i}.code") for i in range(int(pq_m))]).alias("codes"),
     )
-
-
-def _pq_meta_geometry(meta) -> tuple[int, int]:
-    """(pq_m, pq_sub) recorded in a persisted IVFPQ index's ``_meta``
-    sidecar row — every query/append/report path decodes with the
-    STORED widths (ADVICE r8: the PQ twin of the LSH ``_geometry``
-    rule), falling back to the module constants only for a sidecar
-    that predates the fields."""
-    d = meta.asDict()
-    return int(d.get("pq_m") or PQ_M), int(d.get("pq_sub") or PQ_SUB)
 
 
 def pq_codebooks(
@@ -2311,8 +2266,9 @@ def ivf_index_write(
     pass and the smallest nlist whose spill over ``occupancy_max_bucket``
     meets the target wins — the IVF twin of
     ``ann_index_write(band_bits="auto_occupancy")``. The CHOSEN integer
-    is what lands in ``_meta``, so every later retrain/query replays
-    the measured geometry."""
+    is what lands in the manifest (:mod:`.index_store`), so every
+    later retrain/query replays the measured geometry."""
+    index_store.retract(path)
     cents = None
     if nlist == "auto_occupancy":
         # train the WHOLE grid once (checkpointed — Σ_w w rows), choose
@@ -2357,13 +2313,10 @@ def ivf_index_write(
         .partitionBy("cid")
         .parquet(f"{path}/lists"),
     )
-    # training-parameter sidecar (r8): what ivf_index_retrain replays —
-    # a retrain must use the SAME nlist/sample coin the original build
+    # the training parameters are what ivf_index_retrain replays — a
+    # retrain must use the SAME nlist/sample coin the original build
     # chose, or "retrain" silently becomes "re-geometry"
-    meta = values_df(  # JVM inline table, not a Python-RDD scan (r10)
-        emb.sparkSession, [(int(nlist), sample_mod)], "nlist int, sample_mod int"
-    )
-    meta.coalesce(1).write.mode("overwrite").parquet(f"{path}/_meta")
+    index_store.commit(path, "ivf", ["write"], nlist=nlist, sample_mod=sample_mod)
 
 
 def ivf_balance_report(spark, index_path: str) -> DataFrame:
@@ -2381,6 +2334,7 @@ def ivf_balance_report(spark, index_path: str) -> DataFrame:
     broadcast join against the nlist-row centroid table — safe as a
     recurring 100 TB monitoring query. Columns: (cid, n_vectors,
     occupancy_fraction, skew)."""
+    index_store.load(index_path, "ivf")
     cents = spark.read.parquet(f"{index_path}/_centroids").select("cid")
     counts = (
         spark.read.parquet(f"{index_path}/lists")
@@ -2427,7 +2381,7 @@ def ivf_index_retrain(
     lifecycle verb the balance report triggers (VERDICT r7 #3, the IVF
     twin of :func:`ann_index_compact`'s drift-repair role): re-run
     quantizer training (same nlist and sample coin as the original
-    build, replayed from the ``_meta`` sidecar) over the rows the index
+    build, replayed from the manifest) over the rows the index
     holds NOW — corpus plus every appended batch — and rewrite
     centroids + lists. Deterministic training makes the result
     REBUILD-EQUAL: byte-for-byte the index :func:`ivf_index_write`
@@ -2447,23 +2401,16 @@ def ivf_index_retrain(
     ``retrain_ivf`` policy verb's full form: the drift that triggered
     the retrain (skewed/hot cells) is exactly what a frozen nlist can't
     fix, so the rebuild sizes its geometry from the rows it has now;
-    ``_meta`` records the measured value for the next cycle."""
-    import os
-
-    meta_path = os.path.join(index_path, "_meta", "_SUCCESS")
-    if os.path.exists(meta_path):
-        m = spark.read.parquet(f"{index_path}/_meta").take(1)[0]
-        nlist, sample_mod = int(m.nlist), m.sample_mod
-    else:  # pre-r8 index: module defaults (what every build used)
-        nlist, sample_mod = IVF_NLIST, TRAIN_SAMPLE_MOD
+    the manifest records the measured value for the next cycle."""
+    man = index_store.load(index_path, "ivf")
     rows = (
         spark.read.parquet(f"{index_path}/lists").drop("cid").localCheckpoint()
     )
     ivf_index_write(
         rows,
         index_path,
-        nlist="auto_occupancy" if remeasure_nlist else nlist,
-        sample_mod=sample_mod,
+        nlist="auto_occupancy" if remeasure_nlist else man["nlist"],
+        sample_mod=man["sample_mod"],
         occupancy_max_bucket=occupancy_max_bucket,
         nlist_grid=nlist_grid,
     )
@@ -2496,6 +2443,7 @@ def ivf_index_topk(
     probed cell set is bit-identical to the in-DAG path. Without
     ``emb`` the query row falls back to a lists scan (kept for callers
     that only hold the index)."""
+    index_store.load(index_path, "ivf")
     cents = spark.read.parquet(f"{index_path}/_centroids")
     lists = spark.read.parquet(f"{index_path}/lists")
     if emb is not None:
@@ -2612,16 +2560,16 @@ def ivf_index_append(spark, index_path: str, new_emb: DataFrame) -> None:
     LSH append's shard continuation — the appended index is
     RESULT-IDENTICAL to a rebuild that trained on the original
     corpus."""
+    man = index_store.load(index_path, "ivf")
     cents = spark.read.parquet(f"{index_path}/_centroids")
     lists = ivf_assign(new_emb, cents)
+    index_store.retract(index_path)
     # clustered append (guide §6; see ivf_index_write), vec_id-salted
-    # (r11, guide §2.5). n_dirs is a parallelism estimate only — the
-    # module-default nlist stands in for the stored cell count so the
-    # append adds no extra read/count action; a retuned index only
-    # shifts the salt width, never correctness.
+    # (r11, guide §2.5), sized by the index's own cell count
     salted_by_partition(
-        new_emb.join(lists, "vec_id"), "cid", "vec_id", n_dirs=IVF_NLIST
+        new_emb.join(lists, "vec_id"), "cid", "vec_id", n_dirs=man["nlist"]
     ).write.mode("append").partitionBy("cid").parquet(f"{index_path}/lists")
+    index_store.record(index_path, man, "append")
 
 
 def incremental_parity_report(
@@ -2733,9 +2681,11 @@ def ann_index_compact(
     Locally the re-ranked rows pass through an eager localCheckpoint to
     cut lineage (Spark refuses to overwrite a path its own plan still
     reads); a cluster deployment with object storage would stage to a
-    temp prefix and swap, same shape."""
+    temp prefix and swap, same shape. The manifest keeps the build's
+    geometry and gains the ``compact`` verb."""
+    man = index_store.load(index_path, "lsh")
     if max_bucket is None:
-        _geo_bits, max_bucket = index_geometry(spark, index_path)
+        max_bucket = man["max_bucket"]
     idx = spark.read.parquet(index_path)
     hot = [
         r.pkey
@@ -2746,6 +2696,7 @@ def ann_index_compact(
         .collect()
     ]
     if not hot:
+        index_store.record(index_path, man, "compact")
         return 0
     w = Window.partitionBy("band_id", "band_key").orderBy(
         shard_rank_col(), F.col("vec_id")
@@ -2761,12 +2712,14 @@ def ann_index_compact(
         .withColumn("pkey", F.concat_ws("_", F.col("band_id"), F.col("band_key")))
         .localCheckpoint()
     )
+    index_store.retract(index_path)
     (
         reranked.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("pkey")
         .parquet(index_path)
     )
+    index_store.record(index_path, man, "compact")
     return len(hot)
 
 
@@ -2945,14 +2898,14 @@ def ivfpq_index_write(
     Both quantizers train on the deterministic md5 coin sample
     (:func:`sample_coin`) by default; everything downstream of training
     is exact and full-corpus. ``by_residual=True`` trains/encodes
-    (v − centroid(assigned cell)) — full FAISS IVFPQ — recorded in the
-    ``{path}/_meta`` sidecar so the query path picks the matching ADC
-    shape. Per-vector encode is deterministic (argmin over the same
-    codebooks), so the stored codes are bit-identical to what the
-    in-DAG :func:`ivfpq_topk` computes for any probed cell — the
-    persisted query path is result-identical to the in-DAG one and
-    shares its DuckDB oracle."""
-    spark = emb.sparkSession
+    (v − centroid(assigned cell)) — full FAISS IVFPQ — recorded in
+    the index manifest (:mod:`.index_store`, committed LAST) so the
+    query path picks the matching ADC shape. Per-vector encode is
+    deterministic (argmin over the same codebooks), so the stored codes
+    are bit-identical to what the in-DAG :func:`ivfpq_topk` computes
+    for any probed cell — the persisted query path is result-identical
+    to the in-DAG one and shares its DuckDB oracle."""
+    index_store.retract(path)
     # Eager checkpoints so the writes below can overlap (guide §2.6)
     # without racing a lazy materialization (a lazy checkpoint "forced"
     # via count() measured SLOWER — the count is an extra pass, not a
@@ -3045,14 +2998,9 @@ def ivfpq_index_write(
         .partitionBy("cid")
         .parquet(f"{path}/codes"),
     )
-    # _meta stays LAST — it is the build-completion marker (ADVICE r7)
-    meta = values_df(  # JVM inline table, not a Python-RDD scan (r10)
-        spark,
-        [(nlist, sample_mod, by_residual, pq_m, pq_sub, pq_codes)],
-        "nlist int, sample_mod int, by_residual boolean, pq_m int,"
-        " pq_sub int, pq_codes int",
-    )
-    meta.coalesce(1).write.mode("overwrite").parquet(f"{path}/_meta")
+    geo = {"nlist": nlist, "sample_mod": sample_mod, "by_residual": by_residual}
+    pq = {"pq_m": pq_m, "pq_sub": pq_sub, "pq_codes": pq_codes}
+    index_store.commit(path, "ivfpq", ["write"], **geo, **pq)
 
 
 def ivfpq_index_append(spark, index_path: str, new_emb: DataFrame) -> None:
@@ -3065,19 +3013,19 @@ def ivfpq_index_append(spark, index_path: str, new_emb: DataFrame) -> None:
     per-subspace code ids ride the stored rows, so appended codes use
     the identical bijection), and appended into its cid partitions —
     PQ_M TINYINT bytes per new vector, ZERO corpus reads, cost ∝ batch.
-    ``by_residual`` replays from ``_meta``: residual-mode batches are
+    ``by_residual`` replays from the manifest: residual-mode batches are
     centered on their assigned cell's centroid before encoding, exactly
     like the build. No retraining on the ingest path (drift is what
     :func:`ivf_balance_report` + a PQ distortion check monitor); with
     the same training rows the appended index is RESULT-IDENTICAL to a
     rebuild that trained on the original corpus — the same
     frozen-quantizer argument as :func:`ivf_index_append`."""
-    meta = spark.read.parquet(f"{index_path}/_meta").take(1)[0]
-    pq_m, pq_sub = _pq_meta_geometry(meta)
+    man = index_store.load(index_path, "ivfpq")
+    pq_m = man["pq_m"]
     cents = spark.read.parquet(f"{index_path}/_centroids")
     books = spark.read.parquet(f"{index_path}/_codebooks")
     lists = ivf_assign(new_emb, cents)
-    if bool(meta.by_residual):
+    if man["by_residual"]:
         base = (
             new_emb.select(
                 "vec_id", vectors.as_double(F.col("embedding")).alias("v")
@@ -3093,14 +3041,16 @@ def ivfpq_index_append(spark, index_path: str, new_emb: DataFrame) -> None:
         )
     else:
         base = new_emb.select("vec_id", "embedding")
-    sub = _pq_sub_rows(base, pq_m=pq_m, pq_sub=pq_sub)
+    sub = _pq_sub_rows(base, pq_m=pq_m, pq_sub=man["pq_sub"])
     # one-exchange encode (r11, guide §2.4; see _pq_encode_codes)
     codes = _pq_encode_codes(sub, books, pq_m)
+    index_store.retract(index_path)
     # clustered append (guide §6; see ivf_index_write), vec_id-salted
-    # against hot cells, sized by the index's own cell count from _meta
+    # against hot cells, sized by the index's own cell count
     salted_by_partition(
-        codes.join(lists, "vec_id"), "cid", "vec_id", n_dirs=int(meta.nlist)
+        codes.join(lists, "vec_id"), "cid", "vec_id", n_dirs=man["nlist"]
     ).write.mode("append").partitionBy("cid").parquet(f"{index_path}/codes")
+    index_store.record(index_path, man, "append")
 
 
 def ivfpq_index_retrain(
@@ -3115,7 +3065,7 @@ def ivfpq_index_retrain(
     completing the compressed tier's lifecycle (VERDICT r8 #5: LSH has
     build/append/compact, IVF has build/append/retrain/balance; IVFPQ
     had build/append only): re-run BOTH quantizer trainings (nlist,
-    sample coin, residual mode all replayed from the ``_meta`` sidecar)
+    sample coin, residual mode all replayed from the manifest)
     over the vectors the index holds NOW — corpus plus every appended
     batch — and rewrite centroids, codebooks, and the cid-partitioned
     code table.
@@ -3139,42 +3089,28 @@ def ivfpq_index_retrain(
 
     ``remeasure_nlist=True`` (r10, the IVF twin): the coarse-quantizer
     cell count is RE-MEASURED over the current membership's floats via
-    the occupancy trail instead of replayed from ``_meta`` — the
+    the occupancy trail instead of replayed from the manifest — the
     ``retrain_pq`` policy verb at a measured geometry; the PQ widths
-    still replay from the sidecar (code geometry is a storage-format
+    still replay from the manifest (code geometry is a storage-format
     contract, cell count is a balance dial)."""
-    # the _meta probe and the membership checkpoint are independent
-    # reads — overlap them (guide §2.6)
-    m, ids = run_concurrent(
-        lambda: spark.read.parquet(f"{index_path}/_meta").take(1)[0],
-        lambda: spark.read.parquet(f"{index_path}/codes")
-        .select("vec_id")
-        .localCheckpoint(),
-    )
-    md = m.asDict()
+    man = index_store.load(index_path, "ivfpq")
+    ids = spark.read.parquet(f"{index_path}/codes").select("vec_id")
+    ids = ids.localCheckpoint()
     rows = emb.join(ids, "vec_id", "left_semi")
-    nlist = int(md["nlist"])
+    nlist = man["nlist"]
     if remeasure_nlist:
         nlist = choose_nlist_occupancy(
             rows,
             max_bucket=occupancy_max_bucket,
             nlists=nlist_grid,
-            sample_mod=md.get("sample_mod"),
+            sample_mod=man["sample_mod"],
         )
-    # PQ geometry replays from the sidecar too (ADVICE r9): an index
+    # PQ geometry replays from the manifest too (ADVICE r9): an index
     # built under different module constants retrains at ITS stored
     # pq_m/pq_sub/pq_codes, so "rebuild-equal to the original build"
     # holds across constant changes, not just for same-era indexes
-    ivfpq_index_write(
-        rows,
-        index_path,
-        nlist=nlist,
-        sample_mod=md.get("sample_mod"),
-        by_residual=bool(md["by_residual"]),
-        pq_m=int(md.get("pq_m") or PQ_M),
-        pq_sub=int(md.get("pq_sub") or PQ_SUB),
-        pq_codes=int(md.get("pq_codes") or PQ_CODES),
-    )
+    replay = ("sample_mod", "by_residual", "pq_m", "pq_sub", "pq_codes")
+    ivfpq_index_write(rows, index_path, nlist=nlist, **{k: man[k] for k in replay})
 
 
 def ivfpq_probe_batch(
@@ -3208,13 +3144,12 @@ def ivfpq_probe_batch(
     verdicts to corpus rows while the same stream appends (appended
     ids are higher), keeping the drained result
     batch-partitioning-invariant. Raw-code indexes only (asserted from
-    ``_meta``) — the residual mode needs per-(query, cell) tables,
+    the manifest) — the residual mode needs per-(query, cell) tables,
     which :func:`ivfpq_index_batch_topk` builds. Columns: (qid,
     n_corpus_candidates, nearest_corpus_cosine)."""
-    meta = spark.read.parquet(f"{index_path}/_meta").take(1)[0]
-    if bool(meta.by_residual):
+    man = index_store.load(index_path, "ivfpq")
+    if man["by_residual"]:
         raise ValueError("ivfpq_probe_batch supports raw-code indexes only")
-    pq_m, pq_sub = _pq_meta_geometry(meta)
     cents = spark.read.parquet(f"{index_path}/_centroids")
     books = spark.read.parquet(f"{index_path}/_codebooks")
     qv = new_emb.select(
@@ -3250,8 +3185,8 @@ def ivfpq_probe_batch(
     )
     qsub = _pq_sub_rows(
         new_emb.select(F.col("vec_id"), F.col("embedding")),
-        pq_m=pq_m,
-        pq_sub=pq_sub,
+        pq_m=man["pq_m"],
+        pq_sub=man["pq_sub"],
     ).select(F.col("vec_id").alias("qid"), "s", "sv")
     dt = qsub.join(F.broadcast(books), "s").select(
         "qid",
@@ -3328,15 +3263,14 @@ def ivfpq_index_batch_topk(
     exactly :func:`ivfpq_topk` semantics per query (and per-query
     result-identical to it).
 
-    The coding mode is read from ``_meta``. Raw codes share one ADC
+    The coding mode is read from the manifest. Raw codes share one ADC
     table per query, keyed (qid, s, code). Residual codes (FAISS
     ``by_residual``) get one query residual — hence one ADC table — per
     probed (qid, cell), keyed (qid, cell, s, code); the subtraction is
     the same IEEE double op the build ran. Columns: (qid, vec_id,
     label, cosine), per-qid top-k under (cosine desc, vec_id)."""
-    meta = spark.read.parquet(f"{index_path}/_meta").take(1)[0]
-    by_residual = bool(meta.by_residual)
-    pq_m, pq_sub = _pq_meta_geometry(meta)
+    man = index_store.load(index_path, "ivfpq")
+    by_residual = man["by_residual"]
     cents = spark.read.parquet(f"{index_path}/_centroids")
     books = spark.read.parquet(f"{index_path}/_codebooks")
     q_ids = queries.select("qid")
@@ -3382,7 +3316,9 @@ def ivfpq_index_batch_topk(
         )
     else:
         qbase = q_emb
-    qsub = _pq_sub_rows(qbase, pq_m=pq_m, pq_sub=pq_sub, keys=qkeys)
+    qsub = _pq_sub_rows(
+        qbase, pq_m=man["pq_m"], pq_sub=man["pq_sub"], keys=qkeys
+    )
     dt = qsub.join(F.broadcast(books), "s").select(
         *keys,
         F.round(sq_dist(F.col("sv"), F.col("cv")) * 1000000.0, 0)
@@ -3422,8 +3358,7 @@ def ivfpq_distortion_report(spark, index_path: str, emb: DataFrame) -> DataFrame
     one pass over the corpus subvectors joined on vec_id, codebooks
     broadcast; no pairwise work. Columns: (cid, n_vectors,
     mean_sq_error)."""
-    meta = spark.read.parquet(f"{index_path}/_meta").take(1)[0]
-    pq_m, pq_sub = _pq_meta_geometry(meta)
+    man = index_store.load(index_path, "ivfpq")
     cents = spark.read.parquet(f"{index_path}/_centroids")
     books = spark.read.parquet(f"{index_path}/_codebooks")
     codes = spark.read.parquet(f"{index_path}/codes")
@@ -3432,7 +3367,7 @@ def ivfpq_distortion_report(spark, index_path: str, emb: DataFrame) -> DataFrame
         F.col("cid").alias("cell"),
         F.posexplode("codes").alias("s", "code"),
     )
-    if bool(meta.by_residual):
+    if man["by_residual"]:
         base = (
             emb.select("vec_id", vectors.as_double(F.col("embedding")).alias("v"))
             .join(codes.select("vec_id", "cid"), "vec_id")
@@ -3446,7 +3381,7 @@ def ivfpq_distortion_report(spark, index_path: str, emb: DataFrame) -> DataFrame
         )
     else:
         base = emb.select("vec_id", "embedding")
-    sub = _pq_sub_rows(base, pq_m=pq_m, pq_sub=pq_sub)
+    sub = _pq_sub_rows(base, pq_m=man["pq_m"], pq_sub=man["pq_sub"])
     verr = (
         enc.join(sub, ["vec_id", "s"])
         .join(
@@ -3491,7 +3426,7 @@ def ivfpq_index_topk(
     (the per-vector encode is deterministic, and ADC joins on the
     stored dense code are a bijective rename of joins on the codebook
     cid), so the two share one DuckDB oracle. The ``by_residual`` mode
-    is read from the index's ``_meta`` sidecar — a query can't
+    is read from the index's manifest — a query can't
     accidentally ADC-scan residual codes with a raw-vector table."""
     return _single_query(
         ivfpq_index_batch_topk,

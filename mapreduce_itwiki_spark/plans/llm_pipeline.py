@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from ..functions import text as TXT
 from ..functions import vectors as V
 from ..functions.par import fanout
-from ..operators import dedup, multimodal, similarity
+from ..operators import dedup, index_store, multimodal, similarity
 from ..sources.parquet import load_table
 from .catalog import register
 
@@ -1052,10 +1052,8 @@ def _ensure_minhash_index(spark: SparkSession, sf_dir: str) -> str:
     """Build the corpus-side minhash index only if absent (same
     skip-if-exists contract as :func:`_ensure_ann_index`); the explicit
     minhash_index_build entry always rebuilds."""
-    import os
-
     path = _minhash_index_path(sf_dir)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    if not index_store.complete(path, "minhash"):
         corpus = load_table(spark, sf_dir, "documents").filter(
             F.col("doc_id") < _mh_split(spark, sf_dir)
         )
@@ -1195,7 +1193,7 @@ def _ann_index_path(sf_dir: str) -> str:
 
 def _ensure_ann_index(spark: SparkSession, sf_dir: str, emb) -> str:
     """Build the persisted LSH index for ``sf_dir`` only if it is not
-    already on disk (the ``_SUCCESS`` marker of a completed write) —
+    already on disk (the manifest of a completed write) —
     the retrieval queries reuse it across calls/sweeps (ADVICE r6:
     every query used to rebuild with mode('overwrite'), so a
     concurrent reader could observe a half-overwritten index). The
@@ -1203,10 +1201,8 @@ def _ensure_ann_index(spark: SparkSession, sf_dir: str, emb) -> str:
     that IS the build operator. Correct because the path is keyed by
     the absolute corpus dir + banding constants (see
     :func:`_ann_index_path`): same key ⇒ byte-identical index."""
-    import os
-
     path = _ann_index_path(sf_dir)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    if not index_store.complete(path, "lsh"):
         similarity.ann_index_write(emb, path)
     return path
 
@@ -1615,14 +1611,20 @@ def ann_ivf_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     both banded and coarse-quantized retrieval a cross-job amortized
     path. See operators/similarity.py:ivf_index_write/ivf_index_topk."""
     emb = load_table(spark, sf_dir, "embeddings")
+    path = _ensure_ivf_index(spark, sf_dir, emb)
+    return similarity.ivf_index_topk(spark, path, query_vec_id=0, k=10, emb=emb)
+
+
+def _ensure_ivf_index(spark: SparkSession, sf_dir: str, emb) -> str:
+    """Build the shared full-corpus IVF index only if its manifest is
+    absent — committed after BOTH the lists and the centroids, so a
+    failed ``_centroids`` write is never accepted as a built index."""
     path = _ann_index_path(sf_dir) + (
         f"_ivf{similarity.IVF_NLIST}s{similarity.TRAIN_SAMPLE_MOD}"
     )
-    import os
-
-    if not os.path.exists(os.path.join(path, "lists", "_SUCCESS")):
+    if not index_store.complete(path, "ivf"):
         similarity.ivf_index_write(emb, path)
-    return similarity.ivf_index_topk(spark, path, query_vec_id=0, k=10, emb=emb)
+    return path
 
 
 #: derived corpus/batch boundary for the incremental vector-index
@@ -1657,24 +1659,19 @@ def _ann_incr_index_path(sf_dir: str) -> str:
 
 def _build_ann_incr_index(spark: SparkSession, sf_dir: str, emb) -> tuple[str, int]:
     """Corpus-index write + batch append, unconditionally (the build
-    operator's contract). The ``_APPEND_DONE`` sentinel written LAST
-    marks the two-phase build complete — ``_SUCCESS`` alone is
-    ambiguous here (it exists after phase one)."""
-    import os
-
+    operator's contract). The two-phase build is complete when the
+    manifest's verbs read ``["write", "append"]`` — a bare ``["write"]``
+    is phase one only."""
     path = _ann_incr_index_path(sf_dir)
     s = _vec_split(spark, sf_dir)
     similarity.ann_index_write(emb.filter(F.col("vec_id") < s), path)
     similarity.ann_index_append(spark, path, emb.filter(F.col("vec_id") >= s))
-    open(os.path.join(path, "_APPEND_DONE"), "w").close()
     return path, s
 
 
 def _ensure_ann_incr_index(spark: SparkSession, sf_dir: str, emb) -> tuple[str, int]:
-    import os
-
     path = _ann_incr_index_path(sf_dir)
-    if os.path.exists(os.path.join(path, "_APPEND_DONE")):
+    if index_store.complete(path, "lsh", verbs=["write", "append"]):
         return path, _vec_split(spark, sf_dir)
     return _build_ann_incr_index(spark, sf_dir, emb)
 
@@ -1784,7 +1781,7 @@ def ann_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ann_incremental_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k for a JUST-INGESTED vector against the incrementally
     maintained index (build corpus index once, append the batch — both
-    amortized behind the ``_APPEND_DONE`` sentinel): the probe and
+    amortized behind the index manifest): the probe and
     candidate scans are the partition-pruned ann_index_topk lookup,
     and the candidate set spans both the frozen corpus shards and the
     appended batch — yesterday's index answers about today's data
@@ -2279,13 +2276,11 @@ def _ensure_ivfpq_index(
     spark: SparkSession, sf_dir: str, emb, by_residual: bool
 ) -> str:
     """Build the persisted IVF-PQ index only if absent — completion is
-    the ``_meta`` sidecar's ``_SUCCESS``, written LAST by
-    ivfpq_index_write, so a crash mid-build can never leave a
-    'complete' index behind (the _APPEND_DONE lesson, ADVICE r7)."""
-    import os
-
+    the index manifest, retracted FIRST and committed LAST by every
+    ivfpq verb, so neither a crash mid-build nor one mid-retrain can
+    leave a 'complete' index behind (ADVICE r7)."""
     path = _ivfpq_index_path(sf_dir, by_residual)
-    if not os.path.exists(os.path.join(path, "_meta", "_SUCCESS")):
+    if not index_store.complete(path, "ivfpq"):
         similarity.ivfpq_index_write(emb, path, by_residual=by_residual)
     return path
 
@@ -2351,7 +2346,7 @@ def ann_ivfpq_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("ann_ivfpq_residual_index_topk", oracle=_IVFPQ_RES_ORACLE)
 def ann_ivfpq_residual_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full-FAISS persisted IVFPQ (by_residual=true): the stored codes
-    quantize (v − centroid(assigned cell)); the ``_meta`` sidecar
+    quantize (v − centroid(assigned cell)); the index manifest
     records the mode, so the query path builds one residual ADC table
     per probed cell and joins on (cell, subspace, code). Same shared
     oracle as the in-DAG residual entry. See
@@ -2500,23 +2495,14 @@ def ann_ivfpq_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     Returns the per-cell summary read BACK from the written code table:
     occupancy, the batch's rows, distinct code words. See
     operators/similarity.py:ivfpq_index_append."""
-    import contextlib
-    import os
-
     emb = load_table(spark, sf_dir, "embeddings")
     s = _vec_split(spark, sf_dir)
     path = _ann_index_path(sf_dir) + (
         f"_ivfpqincr{similarity.IVF_NLIST}s{similarity.TRAIN_SAMPLE_MOD}"
         f"m{similarity.PQ_M}c{similarity.PQ_CODES}"
     )
-    # ivfpq_index_write only overwrites the _centroids/_codebooks/codes
-    # subdirs — clear a prior run's completion sentinel first (the
-    # ADVICE r7 stale-sentinel rule)
-    with contextlib.suppress(FileNotFoundError):
-        os.remove(os.path.join(path, "_APPEND_DONE"))
     similarity.ivfpq_index_write(emb.filter(F.col("vec_id") < s), path)
     similarity.ivfpq_index_append(spark, path, emb.filter(F.col("vec_id") >= s))
-    open(os.path.join(path, "_APPEND_DONE"), "w").close()
     codes = spark.read.parquet(f"{path}/codes")
     return codes.groupBy(F.col("cid").cast("long").alias("cid")).agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -2558,28 +2544,24 @@ def ann_ivfpq_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ann_ivfpq_incremental_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k for a JUST-INGESTED vector from the incrementally
     maintained IVF-PQ index (corpus build + batch append, both
-    amortized behind the completion sentinel): the probe ranks the
+    amortized behind the index manifest): the probe ranks the
     frozen centroids driver-side, the ADC scan reads only the probed
     cid partitions of the code table — which now hold corpus AND
     appended byte codes — and the exact rerank reads the corpus floats
     for the shortlist only. Query = the newest vector (max vec_id,
     itself part of the appended batch — yesterday's quantizers answer
     about today's data)."""
-    import os
-
     emb = load_table(spark, sf_dir, "embeddings")
     s = _vec_split(spark, sf_dir)
     path = _ann_index_path(sf_dir) + (
         f"_ivfpqincr{similarity.IVF_NLIST}s{similarity.TRAIN_SAMPLE_MOD}"
         f"m{similarity.PQ_M}c{similarity.PQ_CODES}"
     )
-    done = os.path.join(path, "_APPEND_DONE")
-    if not os.path.exists(done):
+    if not index_store.complete(path, "ivfpq", verbs=["write", "append"]):
         similarity.ivfpq_index_write(emb.filter(F.col("vec_id") < s), path)
         similarity.ivfpq_index_append(
             spark, path, emb.filter(F.col("vec_id") >= s)
         )
-        open(done, "w").close()
     qid = emb.agg(F.max("vec_id")).collect()[0][0]
     return similarity.ivfpq_index_topk(spark, path, emb, query_vec_id=qid, k=10)
 
@@ -2593,14 +2575,12 @@ _TUNED_BITS = 6
 
 def _ensure_tuned_index(spark: SparkSession, sf_dir: str, emb) -> str:
     """Build the non-default-geometry LSH index only if absent —
-    completion is ``_geometry/_SUCCESS``, which ann_index_write writes
-    LAST, so a half-built tuned index is never probed (and the
-    geometry sidecar is guaranteed present: probing a 6-bit index with
-    the 4-bit module default would silently scan wrong partitions)."""
-    import os
-
+    completion is the manifest, which ann_index_write commits LAST, so
+    a half-built tuned index is never probed (and its stored geometry
+    is guaranteed present: probing a 6-bit index with the 4-bit module
+    default would silently scan wrong partitions)."""
     path = _ann_index_path(sf_dir) + f"_bb{_TUNED_BITS}"
-    if not os.path.exists(os.path.join(path, "_geometry", "_SUCCESS")):
+    if not index_store.complete(path, "lsh", band_bits=_TUNED_BITS):
         similarity.ann_index_write(emb, path, band_bits=_TUNED_BITS)
     return path
 
@@ -2635,12 +2615,12 @@ def ann_index_tuned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     r7 #2): the index is built at 6-bit band keys (64 keys/band — the
     corpus size where auto_band_bits would leave the 4-bit default is
     ~16·MAX_BUCKET rows; past it this is the documented spill fix),
-    the geometry rides the ``_geometry`` sidecar, and the probe hashes
+    the geometry rides the index manifest, and the probe hashes
     the query with the INDEX's stored bits — not the module constants —
     before pruning to its pkey partitions. Oracle-checked end to end,
     so "retune the band shape" is a verified parameter, not a code
-    edit. See operators/similarity.py:ann_index_write(band_bits=…) /
-    index_geometry."""
+    edit. See operators/similarity.py:ann_index_write(band_bits=…) and
+    operators/index_store.py."""
     emb = load_table(spark, sf_dir, "embeddings")
     path = _ensure_tuned_index(spark, sf_dir, emb)
     return similarity.ann_index_topk(spark, path, emb, query_vec_id=0, k=10)
@@ -2993,24 +2973,19 @@ def ann_index_occupancy_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The occupancy loop END TO END (r9): measure the trail → choose
     the width → BUILD the persisted index at that width
     (``band_bits="auto_occupancy"`` under the demo cap) → answer a
-    top-k from it, probing with the geometry read back from the
-    ``_geometry`` sidecar. The oracle re-derives the choice from the
-    same trail and replays the matching width's capped banding — if
-    the decision rule, the sidecar, or the probe's stored-geometry
+    top-k from it, probing with the geometry read back from the index
+    manifest. The oracle re-derives the choice from the same trail and
+    replays the matching width's capped banding — if the decision
+    rule, the manifest, or the probe's stored-geometry
     hashing drifted, this entry breaks loudly. Rebuilds only when the
     on-disk geometry disagrees with the current measurement (the
     retune-on-drift semantics a 100 TB pipeline wants). See
     operators/similarity.py:choose_band_bits_occupancy /
-    ann_index_write / index_geometry."""
-    import os
-
+    ann_index_write."""
     emb = load_table(spark, sf_dir, "embeddings")
     w = similarity.choose_band_bits_occupancy(emb, max_bucket=_OCC_CAP)
     path = _ann_index_path(sf_dir) + f"_occ{_OCC_CAP}"
-    if (
-        not os.path.exists(os.path.join(path, "_geometry", "_SUCCESS"))
-        or similarity.index_geometry(spark, path) != (w, _OCC_CAP)
-    ):
+    if not index_store.complete(path, "lsh", band_bits=w, max_bucket=_OCC_CAP):
         similarity.ann_index_write(
             emb, path, max_bucket=_OCC_CAP, band_bits=w
         )
@@ -3059,18 +3034,15 @@ def ann_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     Uses a small demo cap so driver-scale buckets genuinely shard.
     Returns the per-band summary read BACK from the compacted files.
     See operators/similarity.py:ann_index_compact."""
-    import os
-
     emb = load_table(spark, sf_dir, "embeddings")
     s = _vec_split(spark, sf_dir)
     path = _ann_incr_index_path(sf_dir) + f"_compact{_COMPACT_CAP}"
-    done = os.path.join(path, "_APPEND_DONE")
-    if not os.path.exists(done):
+    if not index_store.complete(path, "lsh", verbs=["write", "append", "compact"]):
         # build→append→compact runs ONCE per on-disk index (VERDICT r8
-        # #3: the always-rebuild demo paid the full lifecycle — and the
-        # r8 _geometry sidecar write — on every invocation; post-compact
-        # the files ARE the rebuild, so re-running it buys nothing).
-        # The marker is written LAST: a half-finished lifecycle re-runs.
+        # #3: the always-rebuild demo paid the full lifecycle on every
+        # invocation; post-compact the files ARE the rebuild, so
+        # re-running it buys nothing). Each verb retracts the manifest
+        # first and commits it last: a half-finished lifecycle re-runs.
         similarity.ann_index_write(
             emb.filter(F.col("vec_id") < s), path, max_bucket=_COMPACT_CAP
         )
@@ -3078,7 +3050,6 @@ def ann_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, path, emb.filter(F.col("vec_id") >= s), max_bucket=_COMPACT_CAP
         )
         similarity.ann_index_compact(spark, path, max_bucket=_COMPACT_CAP)
-        open(done, "w").close()
     idx = spark.read.parquet(path)
     return idx.groupBy("band_id").agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -3124,23 +3095,8 @@ def ann_ivf_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _ann_index_path(sf_dir) + (
         f"_ivfincr{similarity.IVF_NLIST}s{similarity.TRAIN_SAMPLE_MOD}"
     )
-    import contextlib
-    import os
-
-    # clear a PRIOR run's completion sentinel before rebuilding:
-    # ivf_index_write only overwrites {path}/lists and {path}/_centroids,
-    # so a crash between write and append would otherwise leave a stale
-    # top-level _APPEND_DONE claiming a corpus-only index is complete
-    # (ADVICE r7 — the LSH twin is safe only because ann_index_write
-    # overwrites the whole directory)
-    with contextlib.suppress(FileNotFoundError):
-        os.remove(os.path.join(path, "_APPEND_DONE"))
     similarity.ivf_index_write(emb.filter(F.col("vec_id") < s), path)
     similarity.ivf_index_append(spark, path, emb.filter(F.col("vec_id") >= s))
-    # the sentinel the amortized twin keys on — written LAST, so a
-    # crash between write and append can never leave a "complete"
-    # corpus-only index behind
-    open(os.path.join(path, "_APPEND_DONE"), "w").close()
     lists = spark.read.parquet(f"{path}/lists")
     return lists.groupBy("cid").agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -3175,26 +3131,18 @@ def ann_ivf_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ann_ivf_incremental_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k for a JUST-INGESTED vector from the incrementally
     maintained IVF index (build corpus index once, append the batch —
-    both amortized behind a completion sentinel): the probe ranks the
+    both amortized behind the index manifest): the probe ranks the
     stored centroids driver-side and scans only its nprobe cid
     partitions, which now hold corpus AND appended rows. Query = the
     newest vector (max vec_id)."""
-    import os
-
     emb = load_table(spark, sf_dir, "embeddings")
     s = _vec_split(spark, sf_dir)
     path = _ann_index_path(sf_dir) + (
         f"_ivfincr{similarity.IVF_NLIST}s{similarity.TRAIN_SAMPLE_MOD}"
     )
-    done = os.path.join(path, "_APPEND_DONE")
-    if not os.path.exists(done):
-        # safe to rebuild in place: this branch only runs when the
-        # sentinel is absent, and it is re-created LAST (below) — the
-        # stale-sentinel hazard lives in ann_ivf_index_append's
-        # unconditional rebuild, which clears it first (ADVICE r7)
+    if not index_store.complete(path, "ivf", verbs=["write", "append"]):
         similarity.ivf_index_write(emb.filter(F.col("vec_id") < s), path)
         similarity.ivf_index_append(spark, path, emb.filter(F.col("vec_id") >= s))
-        open(done, "w").close()
     qid = emb.agg(F.max("vec_id")).collect()[0][0]
     return similarity.ivf_index_topk(spark, path, query_vec_id=qid, k=10, emb=emb)
 
@@ -3229,14 +3177,8 @@ def ann_ivf_balance_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass. Shape: one column-pruned scan of the lists + an nlist-row
     broadcast; full-corpus safe as a recurring monitor. See
     operators/similarity.py:ivf_balance_report."""
-    import os
-
     emb = load_table(spark, sf_dir, "embeddings")
-    path = _ann_index_path(sf_dir) + (
-        f"_ivf{similarity.IVF_NLIST}s{similarity.TRAIN_SAMPLE_MOD}"
-    )
-    if not os.path.exists(os.path.join(path, "lists", "_SUCCESS")):
-        similarity.ivf_index_write(emb, path)
+    path = _ensure_ivf_index(spark, sf_dir, emb)
     return similarity.ivf_balance_report(spark, path)
 
 
@@ -3845,7 +3787,7 @@ def ann_ivf_index_retrain_measured(
     )
 
     def summarize(phase: str) -> DataFrame:
-        meta = spark.read.parquet(f"{path}/_meta").take(1)[0]
+        nlist = index_store.load(path, "ivf")["nlist"]
         counts = (
             spark.read.parquet(f"{path}/lists")
             .groupBy("cid")
@@ -3855,7 +3797,7 @@ def ann_ivf_index_retrain_measured(
         return counts.agg(
             F.max("cnt").alias("max_cell"),
             F.round(
-                F.max("cnt") * F.lit(int(meta.nlist)) / F.sum("cnt"), 6
+                F.max("cnt") * F.lit(nlist) / F.sum("cnt"), 6
             ).alias("max_skew"),
             F.sum(F.greatest(F.col("cnt") - cap, F.lit(0))).alias(
                 "spill_rows"
@@ -3867,7 +3809,7 @@ def ann_ivf_index_retrain_measured(
             ).alias("spill_fraction"),
         ).select(
             F.lit(phase).alias("phase"),
-            F.lit(int(meta.nlist)).alias("nlist"),
+            F.lit(nlist).alias("nlist"),
             "max_cell",
             "max_skew",
             "spill_rows",
@@ -3913,14 +3855,12 @@ def ann_policy_retune_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     index at ``band_bits="auto_occupancy"`` under the demo cap
     (skipped when the on-disk geometry already matches, the
     retune-on-drift semantics) — and phase 'after' re-measures the
-    spill at the geometry read back from the ``_geometry`` sidecar of
-    the index the verb wrote. At every driver scale the before row
+    spill at the geometry read back from the manifest of the index the
+    verb wrote. At every driver scale the before row
     decides 'retune_band_bits' and the after row crosses back under
     the threshold (or lands on the grid-max floor honestly — the
     decision column says which). Columns: (phase, band_bits,
     spill_fraction, decision)."""
-    import os
-
     emb = load_table(spark, sf_dir, "embeddings")
     # ONE measured trail feeds the whole loop (r10 — exactly the shape
     # the oracle always had: both phases' spill are rows of the same
@@ -3959,12 +3899,9 @@ def ann_policy_retune_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ann_index_occupancy_topk entry queries (shared artifact, shared
     # rebuild-on-drift rule)
     path = _ann_index_path(sf_dir) + f"_occ{_OCC_CAP}"
-    if (
-        not os.path.exists(os.path.join(path, "_geometry", "_SUCCESS"))
-        or similarity.index_geometry(spark, path) != (w, _OCC_CAP)
-    ):
+    if not index_store.complete(path, "lsh", band_bits=w, max_bucket=_OCC_CAP):
         similarity.ann_index_write(emb, path, max_bucket=_OCC_CAP, band_bits=w)
-    wb, _cap = similarity.index_geometry(spark, path)
+    wb = index_store.load(path, "lsh")["band_bits"]
 
     def spill_row(phase: str, bits: int) -> DataFrame:
         return trail.filter(F.col("band_bits") == bits).select(

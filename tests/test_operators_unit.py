@@ -3,10 +3,12 @@ multimodal Arrow plumbing, similarity determinism, sinks."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
-from mapreduce_itwiki_spark.operators import dedup, multimodal, similarity
+from mapreduce_itwiki_spark.operators import dedup, index_store, multimodal, similarity
 from mapreduce_itwiki_spark.sources.parquet import load_table
 
 from conftest import SF_ORACLE, SF_SMALL
@@ -1908,7 +1910,7 @@ def test_multiprobe_topk_superset_and_recall(spark, tmp_path):
 def test_ivfpq_index_retrain_equals_rebuild(spark, tmp_path):
     """Retraining an append-maintained IVF-PQ index must reproduce a
     from-scratch build over the current membership byte-for-byte (as
-    row sets) — centroids, codebooks, codes, meta — in BOTH coding
+    row sets) — centroids, codebooks, codes, manifest — in BOTH coding
     modes (VERDICT r8 #5): deterministic md5-coin trainings over the
     same rows give the same quantizers, hence the same codes."""
     emb = load_table(spark, SF_SMALL, "embeddings")
@@ -1925,7 +1927,7 @@ def test_ivfpq_index_retrain_equals_rebuild(spark, tmp_path):
         similarity.ivfpq_index_retrain(spark, inc, emb)
         ref = str(tmp_path / f"ivfpq_ref_{mode}")
         similarity.ivfpq_index_write(emb, ref, by_residual=mode)
-        for part in ("codes", "_centroids", "_codebooks", "_meta"):
+        for part in ("codes", "_centroids", "_codebooks"):
             got = sorted(
                 map(str, spark.read.parquet(f"{inc}/{part}").collect())
             )
@@ -1933,6 +1935,7 @@ def test_ivfpq_index_retrain_equals_rebuild(spark, tmp_path):
                 map(str, spark.read.parquet(f"{ref}/{part}").collect())
             )
             assert got == want, f"{part} differs post-retrain ({mode=})"
+        assert index_store.load(inc, "ivfpq") == index_store.load(ref, "ivfpq")
 
 
 def test_auto_occupancy_geometry_measured_choice(spark, tmp_path):
@@ -1940,7 +1943,7 @@ def test_auto_occupancy_geometry_measured_choice(spark, tmp_path):
     r8 #1): with a tiny cap the driver-scale clustered corpus needs
     more bits than the uniform count formula grants, the chosen width
     meets the target (or honestly tops out at the grid max with the
-    trail saying by how much), the sidecar records the choice, and a
+    trail saying by how much), the manifest records the choice, and a
     probe against the index hashes at the stored width."""
     emb = load_table(spark, SF_SMALL, "embeddings")
     cap = 20
@@ -1964,7 +1967,8 @@ def test_auto_occupancy_geometry_measured_choice(spark, tmp_path):
     similarity.ann_index_write(
         emb, path, max_bucket=cap, band_bits="auto_occupancy"
     )
-    assert similarity.index_geometry(spark, path) == (chosen, cap)
+    geo = index_store.load(path, "lsh")
+    assert (geo["band_bits"], geo["max_bucket"]) == (chosen, cap)
     got = similarity.ann_index_topk(spark, path, emb, query_vec_id=0, k=5)
     # probe hashed at the stored width == in-DAG banding at that width
     capped = similarity.sharded_band_rows(
@@ -2020,9 +2024,9 @@ def test_occupancy_trail_sampled_estimator(spark):
 def test_ann_index_compact_preserves_tuned_geometry(spark, tmp_path):
     """Compacting a NON-default-geometry index must keep its geometry
     authoritative (VERDICT r8 #3): compact rewrites only hot pkey
-    partitions via dynamic partition overwrite, so the ``_geometry``
-    sidecar written at build time survives untouched — a 6-bit index
-    stays 6-bit, and the compacted rows equal a 6-bit rebuild."""
+    partitions via dynamic partition overwrite and re-commits the
+    build's manifest — a 6-bit index stays 6-bit, its verbs record the
+    lifecycle, and the compacted rows equal a 6-bit rebuild."""
     emb = load_table(spark, SF_SMALL, "embeddings")
     n = emb.count()
     s = 3 * (n - 1) // 4
@@ -2035,10 +2039,9 @@ def test_ann_index_compact_preserves_tuned_geometry(spark, tmp_path):
         spark, path, emb.filter(F.col("vec_id") >= s), max_bucket=cap
     )
     similarity.ann_index_compact(spark, path, max_bucket=cap)
-    similarity._GEOMETRY_CACHE.pop(
-        __import__("os").path.abspath(path), None
-    )  # force the sidecar read, not the memoized tuple
-    assert similarity.index_geometry(spark, path) == (bits, cap)
+    geo = index_store.load(path, "lsh")
+    assert (geo["band_bits"], geo["max_bucket"]) == (bits, cap)
+    assert geo["verbs"] == ["write", "append", "compact"]
     got = sorted(
         (r.vec_id, r.band_id, r.band_key, r.shard)
         for r in spark.read.parquet(path).collect()
@@ -2059,7 +2062,7 @@ def test_ivfpq_index_matches_in_dag_both_modes(spark, tmp_path):
     per-subspace bijection of the codebook cid, so ADC sums — and hence
     the shortlist and the exact rerank — agree row for row. Also pins
     the storage contract: one row per vector, PQ_M TINYINT codes, no
-    embedding column in the code table, and the _meta mode round-trip."""
+    embedding column in the code table, and the manifest mode round-trip."""
     emb = load_table(spark, SF_SMALL, "embeddings")
     for res in (False, True):
         path = str(tmp_path / f"ivfpq_{int(res)}")
@@ -2100,8 +2103,7 @@ def test_ivfpq_index_matches_in_dag_both_modes(spark, tmp_path):
         assert "embedding" not in codes.columns
         sizes = codes.select(F.size("codes").alias("n")).distinct().collect()
         assert [r.n for r in sizes] == [similarity.PQ_M]
-        meta = spark.read.parquet(f"{path}/_meta").take(1)[0]
-        assert bool(meta.by_residual) is res
+        assert index_store.load(path, "ivfpq")["by_residual"] is res
 
 
 def test_ivfpq_index_topk_absent_query_is_empty(spark, tmp_path):
@@ -2132,13 +2134,14 @@ def test_auto_band_bits_scales_with_corpus(spark):
 
 def test_tuned_index_probes_with_stored_geometry(spark, tmp_path):
     """An index written at band_bits=6 must be probed at 6 bits even
-    though the module default is 4 (the _geometry sidecar, VERDICT r7
+    though the module default is 4 (the index manifest, VERDICT r7
     #2): the result equals the in-DAG twin recomputed at the tuned
     width, and a mis-probed index would return nothing at all."""
     emb = load_table(spark, SF_SMALL, "embeddings")
     path = str(tmp_path / "tuned6")
     similarity.ann_index_write(emb, path, band_bits=6)
-    assert similarity.index_geometry(spark, path) == (6, similarity.MAX_BUCKET)
+    geo = index_store.load(path, "lsh")
+    assert (geo["band_bits"], geo["max_bucket"]) == (6, similarity.MAX_BUCKET)
     got = [
         (r.vec_id, r.cosine)
         for r in similarity.ann_index_topk(
@@ -2169,10 +2172,12 @@ def test_tuned_index_probes_with_stored_geometry(spark, tmp_path):
     assert got == want
 
 
-def test_append_respects_stored_geometry(spark, tmp_path):
+def test_append_respects_stored_geometry(spark, tmp_path, monkeypatch):
     """ann_index_append must band the batch with the INDEX's stored
     bits: appending to a 6-bit index produces only 6-char band keys and
-    preserves the per-shard cap invariant."""
+    preserves the per-shard cap invariant. ivf_index_append likewise
+    sizes its salted write by the index's stored nlist, not the module
+    default."""
     emb = load_table(spark, SF_SMALL, "embeddings")
     path = str(tmp_path / "tuned_app")
     similarity.ann_index_write(emb.filter(F.col("vec_id") < 400), path, band_bits=6)
@@ -2184,6 +2189,136 @@ def test_append_respects_stored_geometry(spark, tmp_path):
         idx.groupBy("band_id", "band_key", "shard").count().agg(F.max("count"))
     ).collect()[0][0]
     assert per_shard <= similarity.MAX_BUCKET
+    assert index_store.load(path, "lsh")["verbs"] == ["write", "append"]
+    salted = similarity.salted_by_partition
+    widths = []
+
+    def spy(df, part_col, salt_src, n_dirs):
+        widths.append(n_dirs)
+        return salted(df, part_col, salt_src, n_dirs)
+
+    monkeypatch.setattr(similarity, "salted_by_partition", spy)
+    for nlist in (similarity.IVF_NLIST, 16):
+        ivf = str(tmp_path / f"ivf_app_{nlist}")
+        similarity.ivf_index_write(
+            emb.filter(F.col("vec_id") < 400), ivf, nlist=nlist
+        )
+        widths.clear()
+        similarity.ivf_index_append(spark, ivf, emb.filter(F.col("vec_id") >= 400))
+        assert widths == [nlist], widths
+
+
+def test_index_store_manifest_lifecycle(tmp_path):
+    """The manifest contract without Spark: commit publishes, load
+    checks the kind, retract makes the index absent, record appends a
+    verb and keeps the geometry, and no temp file is left behind."""
+    path = str(tmp_path / "idx")
+    with pytest.raises(ValueError, match="idx"):
+        index_store.load(path, "ivf")
+    index_store.commit(path, "ivf", ["write"], nlist=16, sample_mod=None)
+    man = index_store.load(path, "ivf")
+    assert man == {"kind": "ivf", "nlist": 16, "sample_mod": None, "verbs": ["write"]}
+    assert os.listdir(path) == [index_store.MANIFEST]
+    with pytest.raises(ValueError, match="'ivf' index, not 'lsh'"):
+        index_store.load(path, "lsh")
+    assert index_store.complete(path, "ivf", nlist=16)
+    assert not index_store.complete(path, "ivf", verbs=["write", "append"])
+    index_store.retract(path)
+    assert not index_store.complete(path, "ivf")
+    index_store.retract(path)  # idempotent
+    index_store.record(path, man, "append")
+    assert index_store.load(path, "ivf") == {**man, "verbs": ["write", "append"]}
+
+
+def test_ivfpq_retrain_crash_leaves_index_absent(spark, tmp_path, monkeypatch):
+    """A retrain that fails partway through rewriting the code table
+    leaves the index ABSENT, never "complete" over half-rewritten
+    parts: the manifest is retracted before the rewrite and committed
+    only after it. Readers refuse the path loudly, and the catalog's
+    skip-if-built gate rebuilds it to exactly a fresh write."""
+    from mapreduce_itwiki_spark.plans import llm_pipeline
+
+    emb = load_table(spark, SF_SMALL, "embeddings")
+    path = str(tmp_path / "ivfpq_crash")
+    similarity.ivfpq_index_write(emb.filter(F.col("vec_id") < 400), path)
+    similarity.ivfpq_index_append(spark, path, emb.filter(F.col("vec_id") >= 400))
+
+    def boom(*_args, **_kwargs):
+        raise RuntimeError("injected failure in the codes write")
+
+    with monkeypatch.context() as m:
+        m.setattr(similarity, "salted_by_partition", boom)
+        with pytest.raises(RuntimeError, match="injected"):
+            similarity.ivfpq_index_retrain(spark, path, emb)
+    with pytest.raises(ValueError, match="ivfpq_crash"):
+        index_store.load(path, "ivfpq")
+    queries = spark.createDataFrame([(0,), (1,)], "qid long")
+    with pytest.raises(ValueError, match="ivfpq_crash"):
+        similarity.ivfpq_index_batch_topk(spark, path, emb, queries).collect()
+    monkeypatch.setattr(llm_pipeline, "_ivfpq_index_path", lambda _sf, _res: path)
+    assert llm_pipeline._ensure_ivfpq_index(spark, SF_SMALL, emb, False) == path
+    ref = str(tmp_path / "ivfpq_fresh")
+    similarity.ivfpq_index_write(emb, ref)
+
+    def codes(p):
+        return sorted(
+            (r.vec_id, r.cid, tuple(r.codes))
+            for r in spark.read.parquet(f"{p}/codes").collect()
+        )
+
+    assert codes(path) == codes(ref)
+    assert index_store.load(path, "ivfpq") == index_store.load(ref, "ivfpq")
+
+
+def test_ivf_write_with_failed_centroids_is_not_accepted(
+    spark, tmp_path, monkeypatch
+):
+    """The gate ann_ivf_index_topk uses must not accept an IVF rewrite
+    whose ``_centroids`` write failed — even though the concurrent
+    lists write finished and left ``lists/_SUCCESS`` behind, and the
+    previous build's centroids are still on disk. The probe refuses the
+    path, and the gate rebuilds the index."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from mapreduce_itwiki_spark.plans import llm_pipeline
+
+    emb = load_table(spark, SF_SMALL, "embeddings")
+    base = str(tmp_path / "ivf")
+    path = base + f"_ivf{similarity.IVF_NLIST}s{similarity.TRAIN_SAMPLE_MOD}"
+    similarity.ivf_index_write(emb, path)
+    assert index_store.complete(path, "ivf")
+    real = DataFrameWriter.parquet
+
+    def parquet(self, p, *args, **kwargs):
+        if p.endswith("_centroids"):
+            raise RuntimeError("injected failure in the _centroids write")
+        return real(self, p, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", parquet)
+        with pytest.raises(RuntimeError, match="injected"):
+            similarity.ivf_index_write(emb, path)
+    assert os.path.exists(os.path.join(path, "lists", "_SUCCESS"))
+    assert not index_store.complete(path, "ivf")
+    with pytest.raises(ValueError, match="no committed ivf index"):
+        similarity.ivf_index_topk(spark, path, emb=emb)
+    monkeypatch.setattr(llm_pipeline, "_ann_index_path", lambda _sf: base)
+    assert llm_pipeline._ensure_ivf_index(spark, SF_SMALL, emb) == path
+    assert index_store.load(path, "ivf")["nlist"] == similarity.IVF_NLIST
+    assert (
+        spark.read.parquet(f"{path}/_centroids").count() == similarity.IVF_NLIST
+    )
+
+
+def test_lsh_reader_refuses_an_ivfpq_index(spark, tmp_path):
+    """Pointing an LSH reader at an IVF-PQ directory is a kind mismatch
+    named in the error — not a probe at default geometry over files
+    of another layout."""
+    emb = load_table(spark, SF_SMALL, "embeddings")
+    path = str(tmp_path / "ivfpq_not_lsh")
+    similarity.ivfpq_index_write(emb, path)
+    with pytest.raises(ValueError, match="'ivfpq' index, not 'lsh'"):
+        similarity.ann_index_topk(spark, path, emb, query_vec_id=0, k=5)
 
 
 def test_ivf_retrain_equals_rebuild(spark, tmp_path):
@@ -2272,7 +2407,7 @@ def test_ivfpq_append_freezes_corpus_codes_and_encodes_batch(
     codebooks — pinned by re-deriving the batch codes from the
     sidecars independently — (c) keep one row per vector with the
     PQ_M TINYINT shape, and (d) size its salted write by the index's
-    own nlist from ``_meta``, not the module default."""
+    own nlist from the manifest, not the module default."""
     emb = load_table(spark, SF_SMALL, "embeddings")
     corpus = emb.filter(F.col("vec_id") < 400)
     batch = emb.filter(F.col("vec_id") >= 400)
@@ -2393,7 +2528,7 @@ def test_choose_nlist_occupancy_properties(spark):
 
 def test_ivf_index_auto_occupancy_lifecycle(spark, tmp_path):
     """ivf_index_write(nlist='auto_occupancy') persists the MEASURED
-    nlist in _meta, and ivf_index_retrain(remeasure_nlist=True)
+    nlist in the manifest, and ivf_index_retrain(remeasure_nlist=True)
     re-measures over current membership — the retrain_ivf policy
     verb's full form (VERDICT r9 #5)."""
     emb = load_table(spark, SF_SMALL, "embeddings")
@@ -2401,9 +2536,8 @@ def test_ivf_index_auto_occupancy_lifecycle(spark, tmp_path):
     similarity.ivf_index_write(
         emb, path, nlist="auto_occupancy", occupancy_max_bucket=64
     )
-    meta = spark.read.parquet(f"{path}/_meta").take(1)[0]
     want = similarity.choose_nlist_occupancy(emb, max_bucket=64)
-    assert int(meta.nlist) == want
+    assert index_store.load(path, "ivf")["nlist"] == want
     n_cents = spark.read.parquet(f"{path}/_centroids").count()
     assert n_cents == want
     # undersized rebuild, then remeasured retrain returns to the
@@ -2412,8 +2546,7 @@ def test_ivf_index_auto_occupancy_lifecycle(spark, tmp_path):
     similarity.ivf_index_retrain(
         spark, path, remeasure_nlist=True, occupancy_max_bucket=64
     )
-    meta2 = spark.read.parquet(f"{path}/_meta").take(1)[0]
-    assert int(meta2.nlist) == want
+    assert index_store.load(path, "ivf")["nlist"] == want
 
 
 def test_auto_probe_sample_mod_budget_bound():
@@ -2465,8 +2598,8 @@ def test_ivfpq_retrain_replays_stored_pq_geometry(spark, tmp_path):
     path = str(tmp_path / "ivfpq_geo")
     similarity.ivfpq_index_write(emb, path, pq_m=4, pq_sub=16, pq_codes=4)
     similarity.ivfpq_index_retrain(spark, path, emb)
-    meta = spark.read.parquet(f"{path}/_meta").take(1)[0]
-    assert (int(meta.pq_m), int(meta.pq_sub), int(meta.pq_codes)) == (4, 16, 4)
+    meta = index_store.load(path, "ivfpq")
+    assert (meta["pq_m"], meta["pq_sub"], meta["pq_codes"]) == (4, 16, 4)
     row = spark.read.parquet(f"{path}/codes").take(1)[0]
     assert len(row.codes) == 4  # pq_m code bytes, not the module PQ_M
 
@@ -2475,7 +2608,7 @@ def test_ivfpq_retrain_remeasure_nlist(spark, tmp_path):
     """ivfpq_index_retrain(remeasure_nlist=True): the coarse cell
     count is re-measured over current membership (the IVF-tier rule
     applied to the compressed tier, r10) while PQ geometry still
-    replays from _meta."""
+    replays from the manifest."""
     emb = load_table(spark, SF_SMALL, "embeddings")
     path = str(tmp_path / "ivfpq_rm")
     similarity.ivfpq_index_write(emb, path, nlist=4)
@@ -2483,10 +2616,10 @@ def test_ivfpq_retrain_remeasure_nlist(spark, tmp_path):
         spark, path, emb, remeasure_nlist=True, occupancy_max_bucket=64
     )
     want = similarity.choose_nlist_occupancy(emb, max_bucket=64)
-    meta = spark.read.parquet(f"{path}/_meta").take(1)[0]
-    assert int(meta.nlist) == want != 4
+    meta = index_store.load(path, "ivfpq")
+    assert meta["nlist"] == want != 4
     assert spark.read.parquet(f"{path}/_centroids").count() == want
-    assert (int(meta.pq_m), int(meta.pq_sub)) == (
+    assert (meta["pq_m"], meta["pq_sub"]) == (
         similarity.PQ_M,
         similarity.PQ_SUB,
     )

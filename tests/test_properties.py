@@ -376,10 +376,10 @@ def test_stopword_regex_escapes_metacharacters(toks):
 @settings(max_examples=40, deadline=None)
 def test_band_keys_py_shape_across_geometries(vec, band_bits):
     """The driver-side banding twin must honor an arbitrary band width
-    (the _geometry sidecar contract): LSH_BANDS keys, each band_bits
-    chars of '0'/'1', derived from plane j = b·band_bits + r — so the
-    pkey set a probe prunes with is always derivable from the embedding
-    plus the index's stored width alone."""
+    (the stored-geometry contract of the index manifest): LSH_BANDS
+    keys, each band_bits chars of '0'/'1', derived from plane
+    j = b·band_bits + r — so the pkey set a probe prunes with is always
+    derivable from the embedding plus the index's stored width alone."""
     from mapreduce_itwiki_spark.operators.similarity import (
         LSH_BANDS,
         band_keys_py,

@@ -24,6 +24,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from mapreduce_itwiki_spark.operators import index_store  # noqa: E402
 from mapreduce_itwiki_spark.operators import similarity as S  # noqa: E402
 from mapreduce_itwiki_spark.session import get_spark  # noqa: E402
 
@@ -80,7 +81,7 @@ def main() -> None:
         res["probe"] = {}
         for tag, bits in (("uniform", uniform), ("occupancy", chosen)):
             path = os.path.join(sf_dir, f".occidx_bb{bits}")
-            if not os.path.exists(os.path.join(path, "_geometry", "_SUCCESS")):
+            if not index_store.complete(path, "lsh"):
                 shutil.rmtree(path, ignore_errors=True)
                 t0 = time.time()
                 S.ann_index_write(corpus, path, band_bits=bits)
@@ -174,7 +175,7 @@ def main() -> None:
         chosen = res.get("trail", {}).get("chosen_bits") or S.choose_band_bits_occupancy(emb)
         path = os.path.join(sf_dir, f".occidx_bb{chosen}")
         corpus = emb.filter(F.col("vec_id") < s)
-        if not os.path.exists(os.path.join(path, "_geometry", "_SUCCESS")):
+        if not index_store.complete(path, "lsh"):
             shutil.rmtree(path, ignore_errors=True)
             S.ann_index_write(corpus, path, band_bits=chosen)
         qids = [

@@ -1,64 +1,49 @@
 """Job-level profile of one catalog entry: run it once (after warm-ups)
-in a session with the event log enabled, then print every Spark job the
-execution issued — wall duration, stage count, task count — so the
-fixed-overhead vs compute split is visible (guide §1: measure first;
-the UI is disabled in this sandbox, the event log is its offline twin).
+in a session with the event log enabled, then print the Spark jobs the
+execution issued — wall duration and stage count each — plus the
+window's scheduler totals, so the fixed-overhead vs compute split is
+visible (guide §1: measure first; the event log is the UI's offline
+twin). The log is read with the benchmark's own reader
+(``perfbench/eventlog.py``), so this tool and the traced benchmark run
+count jobs the same way.
 
 Usage: python tools/profile_entry.py ann_ivfpq_index_retrain [warmups]
 """
 
 from __future__ import annotations
 
-import glob
-import json
 import os
+import shutil
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from mapreduce_itwiki_spark.plans import catalog  # noqa: E402
+from mapreduce_itwiki_spark.session import get_spark  # noqa: E402
+from perfbench.eventlog import load_dir  # noqa: E402
 
 EVDIR = "/tmp/spark-events-profile"
 
 
 def get_profiled_spark():
-    import shutil
-
-    from pyspark.sql import SparkSession
-
-    from mapreduce_itwiki_spark.session import get_spark  # noqa: F401
-
+    """The engine session, restarted with a plain-text event log in
+    ``EVDIR`` (set as JVM system properties, which the restarted
+    session's conf picks up — the traced-run recipe of
+    ``perfbench/run.py``)."""
     shutil.rmtree(EVDIR, ignore_errors=True)
-    os.makedirs(EVDIR, exist_ok=True)
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    b = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("profile")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            str(8 * int(cpus)),
-        )
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "24g")
-        .config(
-            "spark.driver.extraJavaOptions",
-            "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing",
-        )
-        .config("spark.ui.enabled", "false")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", EVDIR)
-        .config("spark.eventLog.compress", "false")
-    )
-    s = b.getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    return s
+    os.makedirs(EVDIR)
+    spark = get_spark("profile")
+    system = spark._jvm.java.lang.System
+    for key, value in (
+        ("spark.eventLog.enabled", "true"),
+        ("spark.eventLog.dir", f"file://{EVDIR}"),
+        ("spark.eventLog.compress", "false"),
+        ("spark.eventLog.rolling.enabled", "false"),
+    ):
+        system.setProperty(key, value)
+    spark.stop()
+    return get_spark("profile")
 
 
 def main() -> None:
@@ -66,88 +51,34 @@ def main() -> None:
     warmups = int(sys.argv[2]) if len(sys.argv) > 2 else 2
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_profiled_spark()
+    cores = spark.sparkContext.defaultParallelism
     qs = catalog.queries()
     for _ in range(warmups):
         qs[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
-    spark.sparkContext.setJobDescription(f"PROFILED:{name}")
+    # jobs are attributed by submission time: thread-pool jobs
+    # (run_concurrent) do not inherit a job group or description
     t0 = time.perf_counter()
-    epoch0 = time.time() * 1000  # window for thread-pool jobs, which
-    # do NOT inherit the thread-local description (run_concurrent)
+    epoch0 = time.time() * 1000
     qs[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
     epoch1 = time.time() * 1000
     wall = time.perf_counter() - t0
     spark.stop()
 
-    logs = []
-    for p in glob.glob(f"{EVDIR}/*"):
-        if os.path.isdir(p):  # Spark 4 rolling event-log directory
-            logs.extend(
-                q for q in glob.glob(f"{p}/*") if os.path.isfile(q)
-            )
-        else:
-            logs.append(p)
-    jobs: dict[int, dict] = {}
-    stages: dict[int, dict] = {}
-    for lg in logs:
-        if os.path.basename(lg).startswith("appstatus"):
-            continue
-        opener = open
-        if lg.endswith(".zstd"):
-            import zstandard
-
-            opener = lambda p: zstandard.open(p, "rt")  # noqa: E731
-        with opener(lg) as f:
-            for line in f:
-                if isinstance(line, bytes):
-                    line = line.decode("utf-8", "replace")
-                try:
-                    ev = json.loads(line)
-                except json.JSONDecodeError:
-                    continue
-                e = ev.get("Event")
-                if e == "SparkListenerJobStart":
-                    jid = ev["Job ID"]
-                    jobs[jid] = {
-                        "t0": ev["Submission Time"],
-                        "desc": ev.get("Properties", {}).get(
-                            "spark.job.description", ""
-                        ),
-                        "nstages": len(ev.get("Stage Infos", [])),
-                    }
-                elif e == "SparkListenerJobEnd":
-                    jid = ev["Job ID"]
-                    if jid in jobs:
-                        jobs[jid]["t1"] = ev["Completion Time"]
-                elif e == "SparkListenerStageCompleted":
-                    si = ev["Stage Info"]
-                    stages[si["Stage ID"]] = {
-                        "name": si["Stage Name"].split("\n")[0][:80],
-                        "ntasks": si["Number of Tasks"],
-                        "ms": si.get("Completion Time", 0)
-                        - si.get("Submission Time", 0),
-                    }
-    profiled = {
-        j: v
-        for j, v in jobs.items()
-        if "t1" in v
-        and (
-            v["desc"].startswith("PROFILED:")
-            or epoch0 <= v["t0"] <= epoch1  # thread-pool jobs in window
-        )
-    }
-    total_ms = sum(v["t1"] - v["t0"] for v in profiled.values())
-    print(f"\n=== {name}: wall {wall:.3f}s, {len(profiled)} jobs,"
-          f" sum-job {total_ms/1000:.3f}s ===")
-    for j in sorted(profiled):
-        v = profiled[j]
-        print(f"job {j:4d}  {(v['t1']-v['t0'])/1000:7.3f}s  "
-              f"stages={v['nstages']}")
-    print(f"(gap = wall - sum-job = {wall - total_ms/1000:.3f}s of"
-          " driver-side time between jobs)")
-    print("\nslowest stages (whole session incl. warmups):")
-    for sid, s in sorted(stages.items(), key=lambda kv: -kv[1]["ms"])[:14]:
-        print(f"stage {sid:4d}  {s['ms']/1000:7.3f}s  tasks={s['ntasks']:4d}"
-              f"  {s['name']}")
+    log = load_dir(EVDIR)
+    sched = log.window(epoch0, epoch1, cores)
+    jobs = sorted(
+        (j for j in log.jobs if epoch0 <= j.submitted <= epoch1),
+        key=lambda j: j.submitted,
+    )
+    print(f"\n=== {name}: wall {wall:.3f}s, {sched['jobs']} jobs,"
+          f" {sched['stages']} stages, {sched['tasks']} tasks ===")
+    for i, j in enumerate(jobs):
+        dur = (j.completed - j.submitted) / 1000 if j.completed else float("nan")
+        print(f"job {i:4d}  +{(j.submitted - epoch0) / 1000:7.3f}s"
+              f"  {dur:7.3f}s  stages={len(j.stages)}")
+    print(f"driver gap (wall not covered by any job): {sched['driver_gap_s']:.3f}s;"
+          f" core busy {sched['core_busy_frac']:.2f};"
+          f" shuffle write {sched['shuffle_write_bytes']} B")
 
 
 if __name__ == "__main__":
