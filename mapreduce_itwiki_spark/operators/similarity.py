@@ -1813,58 +1813,101 @@ def _pq_sub_rows(
     )
 
 
-def _pq_encode_rows(scored: DataFrame, pq_m: int = PQ_M) -> DataFrame:
-    """(vec_id, s, cid): per-subspace PQ code assignments from scored
-    (vec_id, s, cid, d) candidate rows in ONE exchange (r11, guide
-    §2.4). The per-(vec_id, s) argmin used to pay its own shuffle and
-    every downstream per-vector aggregate (ADC sums, code arrays) paid
-    a SECOND one — HashPartitioning(vec_id, s) does not satisfy a
-    groupBy keyed on vec_id. Pivoting the bounded pq_m subspaces into
-    MIN(STRUCT) aggregates of a single groupBy(vec_id)
-    partial-aggregates map-side, and the output stays hash-partitioned
-    by vec_id — which DOES satisfy every downstream aggregate keyed on
-    vec_id or (qid, vec_id), so the ADC sum runs partition-local with
-    no further exchange. Row-identical to the old shape (the argmin
-    struct is unique per (vec_id, s))."""
-    mins = [
-        F.min(F.when(F.col("s") == i, F.struct("d", "cid"))).alias(f"m{i}")
-        for i in range(int(pq_m))
-    ]
-    return (
-        scored.groupBy("vec_id")
-        .agg(*mins)
-        .select(
-            "vec_id",
-            F.posexplode(
-                F.array(*[F.col(f"m{i}.cid") for i in range(int(pq_m))])
-            ).alias("s", "cid"),
-        )
-    )
+def _code_col(books: DataFrame) -> str:
+    """The column a PQ code names in ``books``: the dense stored
+    ``code`` of a persisted ``_codebooks`` table, or — for in-DAG
+    codebooks, which carry none — the codebook ``cid`` itself (there
+    the code IS the cid)."""
+    return "code" if "code" in books.columns else "cid"
 
 
 def _pq_encode_codes(sub: DataFrame, books: DataFrame, pq_m: int) -> DataFrame:
-    """(vec_id, codes): PQ-encode subspace rows against a codebook
-    table carrying dense ``code`` ids — in ONE exchange (r11, guide
-    §2.4). Each subspace's argmin is a ``MIN(STRUCT(d, cid, code))``
-    pivoted per s (pq_m is a bounded storage-format constant), so one
-    ``groupBy(vec_id)`` partial-aggregates everything map-side and the
-    codes array is assembled positionally — bit-identical to the old
-    groupBy(vec_id, s) argmin + sorted collect_list, which paid a
-    second shuffle of the same per-vector rows."""
+    """(vec_id, codes): PQ-encode subspace rows (vec_id, s, sv) against
+    ``books`` — ``codes`` is the pq_m-entry array of each subspace's
+    nearest codeword's code (:func:`_code_col`), ordered by s — in ONE
+    exchange (r11, guide §2.4). Each subspace's argmin is a
+    ``MIN(STRUCT(d, cid[, code]))`` pivoted per s (pq_m is a bounded
+    storage-format constant), so one ``groupBy(vec_id)``
+    partial-aggregates everything map-side, the codes array is
+    assembled positionally, and the output stays hash-partitioned by
+    vec_id — which satisfies every downstream aggregate keyed on vec_id
+    or (qid, vec_id), so an in-DAG ADC sum over the posexploded codes
+    runs partition-local with no further exchange. Bit-identical to the
+    old groupBy(vec_id, s) argmin + sorted collect_list, which paid a
+    second shuffle of the same per-vector rows. In-DAG callers take
+    per-subspace rows with ``posexplode_outer``: ``codes`` is never null
+    or empty, and the outer form keeps the optimizer from inferring a
+    ``size(codes) > 0`` Filter for it."""
+    code = _code_col(books)
+    arg = ("d", "cid") if code == "cid" else ("d", "cid", "code")
     scored = sub.join(F.broadcast(books), "s").select(
-        "vec_id",
-        "s",
-        "code",
-        "cid",
-        sq_dist(F.col("sv"), F.col("cv")).alias("d"),
+        "vec_id", "s", *arg[1:], sq_dist(F.col("sv"), F.col("cv")).alias("d")
     )
     mins = [
-        F.min(F.when(F.col("s") == i, F.struct("d", "cid", "code"))).alias(f"m{i}")
+        F.min(F.when(F.col("s") == i, F.struct(*arg))).alias(f"m{i}")
         for i in range(int(pq_m))
     ]
     return scored.groupBy("vec_id").agg(*mins).select(
         "vec_id",
-        F.array(*[F.col(f"m{i}.code") for i in range(int(pq_m))]).alias("codes"),
+        F.array(*[F.col(f"m{i}.{code}") for i in range(int(pq_m))]).alias("codes"),
+    )
+
+
+def _adc_table(qsub: DataFrame, books: DataFrame, keys=()) -> DataFrame:
+    """(*keys, s, code, dti): the integerized ADC distance table of
+    query subvector rows (*keys, s, sv) against ``books``, one cell per
+    (key, subspace, codeword). Per-subspace distances are already on a
+    1e-6 decimal grid, so ×1e6 + round lands every cell on an exact
+    BIGINT and a per-vector SUM is exact integer math in any engine and
+    any aggregation order — the grid the DuckDB oracles replay."""
+    return qsub.join(F.broadcast(books), "s").select(
+        *keys,
+        "s",
+        _code_col(books),
+        F.round(sq_dist(F.col("sv"), F.col("cv")) * 1000000.0, 0)
+        .cast("long")
+        .alias("dti"),
+    )
+
+
+def _adc_shortlist(cells: DataFrame, rerank: int) -> DataFrame:
+    """(qid, vec_id): each query's ADC-top ``rerank`` candidates from
+    (qid, vec_id, dti) table-cell rows — integer ADC sums per (qid,
+    vec_id), then a qid-partitioned (adc, vec_id) WindowGroupLimit."""
+    adc = cells.groupBy("qid", "vec_id").agg(F.sum("dti").alias("adc"))
+    w = Window.partitionBy("qid").orderBy("adc", "vec_id")
+    return (
+        adc.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= rerank)
+        .select("qid", "vec_id")
+    )
+
+
+def _probe_cells(qv: DataFrame, cents: DataFrame, nprobe: int) -> DataFrame:
+    """(qid, cell): each query's ``nprobe`` nearest IVF cells — query
+    floats (qid, v) against the broadcast centroids, ranked per qid by
+    (d, cid)."""
+    w = Window.partitionBy("qid").orderBy("d", "cid")
+    return (
+        qv.crossJoin(F.broadcast(cents))
+        .select("qid", "cid", sq_dist(F.col("v"), F.col("cv")).alias("d"))
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= nprobe)
+        .select("qid", F.col("cid").alias("cell"))
+    )
+
+
+def _residual(rows: DataFrame, cents: DataFrame, keys, cell: str = "cid") -> DataFrame:
+    """(*keys, embedding): rows (*keys, v, ``cell``) minus their cell's
+    centroid — the FAISS ``by_residual`` vector. Build, append, the
+    persisted-index probe and the distortion report all run this one
+    IEEE double subtraction, so a query residual is bit-identical to
+    the one its cell's codes were trained and encoded on."""
+    if cell != "cid":
+        cents = cents.withColumnRenamed("cid", cell)
+    return rows.join(F.broadcast(cents), cell).select(
+        *keys,
+        F.zip_with(F.col("v"), F.col("cv"), lambda x, c: x - c).alias("embedding"),
     )
 
 
@@ -1955,27 +1998,13 @@ def pq_topk(
     # lineage, encode + the ADC table would each re-run it (no
     # cross-branch common-subplan elimination — TUNING.md)
     books = pq_codebooks(sub, sample_mod=sample_mod).localCheckpoint(eager=False)
-    d2 = sub.join(F.broadcast(books), "s").select(
-        "vec_id", "s", "cid", sq_dist(F.col("sv"), F.col("cv")).alias("d")
-    )
     # one-exchange encode; the ADC sum below then runs partition-local
-    # (r11, guide §2.4; see _pq_encode_rows)
-    enc = _pq_encode_rows(d2)
-    # ADC distance table: PQ_M × PQ_CODES cells, integerized then
-    # broadcast — the per-subspace distances are already on a 1e-6
-    # decimal grid, so ×1e6 + round lands every cell on an exact BIGINT
-    dt = (
-        sub.filter(F.col("vec_id") == query_vec_id)
-        .select("s", F.col("sv").alias("qsv"))
-        .join(F.broadcast(books), "s")
-        .select(
-            "s",
-            "cid",
-            F.round(sq_dist(F.col("qsv"), F.col("cv")) * 1000000.0, 0)
-            .cast("long")
-            .alias("dti"),
-        )
+    # (r11, guide §2.4; see _pq_encode_codes)
+    enc = _pq_encode_codes(sub, books, PQ_M).select(
+        "vec_id", F.posexplode_outer("codes").alias("s", "cid")
     )
+    # ADC distance table: PQ_M × PQ_CODES cells, integerized, broadcast
+    dt = _adc_table(sub.filter(F.col("vec_id") == query_vec_id), books)
     adc = (
         enc.filter(F.col("vec_id") != query_vec_id)
         .join(F.broadcast(dt), ["s", "cid"])
@@ -2166,16 +2195,9 @@ def ivf_batch_topk(
     )
     lists = ivf_assign(emb, cents)
     qv = emb.join(F.broadcast(q_ids), emb["vec_id"] == q_ids["qid"]).select(
-        "qid", vectors.as_double(F.col("embedding")).alias("qv")
+        "qid", vectors.as_double(F.col("embedding")).alias("v")
     )
-    wq = Window.partitionBy("qid").orderBy("d", "cid")
-    probe = (
-        qv.crossJoin(F.broadcast(cents))
-        .select("qid", "cid", sq_dist(F.col("qv"), F.col("cv")).alias("d"))
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= nprobe)
-        .select("qid", "cid")
-    )
+    probe = _probe_cells(qv, cents, nprobe).withColumnRenamed("cell", "cid")
     cand = (
         lists.join(F.broadcast(probe), "cid")
         .filter(F.col("vec_id") != F.col("qid"))
@@ -2204,38 +2226,17 @@ def pq_batch_topk(
     q_ids = queries.select("qid")
     sub = _pq_sub_rows(emb)
     books = pq_codebooks(sub, sample_mod=sample_mod).localCheckpoint(eager=False)
-    d2 = sub.join(F.broadcast(books), "s").select(
-        "vec_id", "s", "cid", sq_dist(F.col("sv"), F.col("cv")).alias("d")
-    )
     # one-exchange encode; the per-(qid, vec_id) ADC sum then runs
-    # partition-local (r11, guide §2.4; see _pq_encode_rows)
-    enc = _pq_encode_rows(d2)
-    dt = (
-        sub.join(F.broadcast(q_ids), sub["vec_id"] == q_ids["qid"])
-        .select("qid", "s", F.col("sv").alias("qsv"))
-        .join(F.broadcast(books), "s")
-        .select(
-            "qid",
-            "s",
-            "cid",
-            F.round(sq_dist(F.col("qsv"), F.col("cv")) * 1000000.0, 0)
-            .cast("long")
-            .alias("dti"),
-        )
+    # partition-local (r11, guide §2.4; see _pq_encode_codes)
+    enc = _pq_encode_codes(sub, books, PQ_M).select(
+        "vec_id", F.posexplode_outer("codes").alias("s", "cid")
     )
-    adc = (
-        enc.join(F.broadcast(dt), ["s", "cid"])
-        .filter(F.col("vec_id") != F.col("qid"))
-        .groupBy("qid", "vec_id")
-        .agg(F.sum("dti").alias("adc"))
+    qsub = sub.join(F.broadcast(q_ids), sub["vec_id"] == q_ids["qid"])
+    dt = _adc_table(qsub, books, ["qid"])
+    cells = enc.join(F.broadcast(dt), ["s", "cid"]).filter(
+        F.col("vec_id") != F.col("qid")
     )
-    w_short = Window.partitionBy("qid").orderBy("adc", "vec_id")
-    cand = (
-        adc.withColumn("rn", F.row_number().over(w_short))
-        .filter(F.col("rn") <= rerank)
-        .select("qid", "vec_id")
-    )
-    return _exact_rerank(emb, cand, q_ids, k)
+    return _exact_rerank(emb, _adc_shortlist(cells, rerank), q_ids, k)
 
 
 def ivf_index_write(
@@ -2419,10 +2420,10 @@ def ivf_index_retrain(
 def ivf_index_topk(
     spark,
     index_path: str,
+    emb: DataFrame,
     query_vec_id: int = 0,
     k: int = 10,
     nprobe: int = IVF_NPROBE,
-    emb: DataFrame | None = None,
 ) -> DataFrame:
     """IVF ANN top-k from the PERSISTED index: rank the query's
     ``nprobe`` nearest cells against the stored centroids (nlist rows,
@@ -2434,43 +2435,28 @@ def ivf_index_topk(
     build time instead of in-DAG per query.
 
     Probe mechanics (ADVICE r6 — the probe must not scan the index):
-    when ``emb`` is given, the query embedding comes from ONE
-    pushed-filter read of the corpus table and is spliced into the
-    cell-ranking job as a literal double array, so the probe touches
-    only the nlist-row ``_centroids`` file — zero unpruned reads of the
-    cid-partitioned lists. ``repr(float)`` round-trips doubles exactly
-    and the distance still runs through Spark's :func:`sq_dist`, so the
-    probed cell set is bit-identical to the in-DAG path. Without
-    ``emb`` the query row falls back to a lists scan (kept for callers
-    that only hold the index)."""
+    the query embedding comes from ONE pushed-filter read of the corpus
+    table ``emb`` and is spliced into the cell-ranking job as a literal
+    double array, so the probe touches only the nlist-row
+    ``_centroids`` file — zero unpruned reads of the cid-partitioned
+    lists. ``repr(float)`` round-trips doubles exactly and the distance
+    still runs through Spark's :func:`sq_dist`, so the probed cell set
+    is bit-identical to the in-DAG path. This driver-side probe is why
+    the operator is not a batch of one (:func:`_single_query`): a
+    one-row batch runs more Spark jobs than the literal probe."""
     index_store.load(index_path, "ivf")
     cents = spark.read.parquet(f"{index_path}/_centroids")
     lists = spark.read.parquet(f"{index_path}/lists")
-    if emb is not None:
-        qrows = (
-            emb.filter(F.col("vec_id") == query_vec_id)
-            .select(vectors.as_double(F.col("embedding")).alias("qv"))
-            .take(1)
-        )
-        if qrows:
-            qlit = "array(" + ", ".join(f"{x!r}D" for x in qrows[0].qv) + ")"
-            probe = (
-                cents.select(
-                    "cid", sq_dist(F.expr(qlit), F.col("cv")).alias("d")
-                )
-                .orderBy("d", "cid")
-                .limit(nprobe)
-                .collect()
-            )
-        else:
-            probe = []
-    else:
-        qrow = lists.filter(F.col("vec_id") == query_vec_id).select(
-            vectors.as_double(F.col("embedding")).alias("qv")
-        )
+    qrows = (
+        emb.filter(F.col("vec_id") == query_vec_id)
+        .select(vectors.as_double(F.col("embedding")).alias("qv"))
+        .take(1)
+    )
+    probe = []
+    if qrows:
+        qlit = "array(" + ", ".join(f"{x!r}D" for x in qrows[0].qv) + ")"
         probe = (
-            qrow.crossJoin(F.broadcast(cents))
-            .select("cid", sq_dist(F.col("qv"), F.col("cv")).alias("d"))
+            cents.select("cid", sq_dist(F.expr(qlit), F.col("cv")).alias("d"))
             .orderBy("d", "cid")
             .limit(nprobe)
             .collect()
@@ -2479,11 +2465,7 @@ def ivf_index_topk(
     cands = lists.filter(F.col("cid").isin(cids)).filter(
         F.col("vec_id") != query_vec_id
     )
-    # the scoring-side query row follows the same rule: read it from the
-    # corpus table (pushed filter) when available, never an unpruned
-    # scan of the cid-partitioned lists
-    qsrc = emb if emb is not None else lists
-    query = qsrc.filter(F.col("vec_id") == query_vec_id)
+    query = emb.filter(F.col("vec_id") == query_vec_id)
     scored = with_cosine_to_query(cands, query)
     return scored.orderBy(F.col("cosine").desc(), F.col("vec_id")).limit(k)
 
@@ -2772,18 +2754,12 @@ def ivfpq_topk(
     if by_residual:
         # residual vectors: v − centroid(assigned cell), full corpus —
         # the codebooks train on residuals (sampled), like FAISS
-        base = (
+        base = _residual(
             emb.select(
                 "vec_id", vectors.as_double(F.col("embedding")).alias("v")
-            )
-            .join(lists, "vec_id")
-            .join(F.broadcast(cents), "cid")
-            .select(
-                "vec_id",
-                F.zip_with(F.col("v"), F.col("cv"), lambda x, c: x - c).alias(
-                    "embedding"
-                ),
-            )
+            ).join(lists, "vec_id"),
+            cents,
+            ["vec_id"],
         )
     else:
         base = emb.select("vec_id", "embedding")
@@ -2791,15 +2767,12 @@ def ivfpq_topk(
     books = pq_codebooks(sub, sample_mod=sample_mod).localCheckpoint(eager=False)
     # encode ONLY the probed cells' members — the IVF pruning applied
     # to the PQ encode/scan (at scale: read the probed cid partitions
-    # of the persisted code table instead)
+    # of the persisted code table instead); one-exchange encode, so the
+    # ADC sum below runs partition-local (r11, guide §2.4)
     subc = sub.join(cellcand.select("vec_id"), "vec_id", "left_semi")
-    # one-exchange encode; the ADC sum below then runs partition-local
-    # (r11, guide §2.4; see _pq_encode_rows)
-    enc = _pq_encode_rows(
-        subc.join(F.broadcast(books), "s").select(
-            "vec_id", "s", "cid", sq_dist(F.col("sv"), F.col("cv")).alias("d")
-        )
-    )
+    enc = _pq_encode_codes(subc, books, PQ_M).select(
+        "vec_id", F.posexplode_outer("codes").alias("s", "cid")
+    ).filter(F.col("vec_id") != query_vec_id)
     if by_residual:
         # one query residual (and ADC table) PER probed cell
         qres = (
@@ -2809,56 +2782,19 @@ def ivfpq_topk(
             .select(
                 F.col("cid").alias("pcell"),
                 F.zip_with(F.col("qv"), F.col("cv"), lambda x, c: x - c).alias(
-                    "qrv"
+                    "embedding"
                 ),
             )
         )
-        qsubs = F.array(
-            *[
-                F.struct(
-                    F.lit(s).alias("s"),
-                    F.slice(F.col("qrv"), s * PQ_SUB + 1, PQ_SUB).alias("qsv"),
-                )
-                for s in range(PQ_M)
-            ]
-        )
-        qs = qres.select("pcell", F.explode(qsubs).alias("q")).select(
-            "pcell", "q.s", "q.qsv"
-        )
-        dt = qs.join(F.broadcast(books), "s").select(
-            "pcell",
-            "s",
-            "cid",
-            F.round(sq_dist(F.col("qsv"), F.col("cv")) * 1000000.0, 0)
-            .cast("long")
-            .alias("dti"),
-        )
-        adc = (
-            enc.filter(F.col("vec_id") != query_vec_id)
-            .join(cellcand, "vec_id")
-            .join(F.broadcast(dt), ["pcell", "s", "cid"])
-            .groupBy("vec_id")
-            .agg(F.sum("dti").alias("adc"))
-        )
+        dt = _adc_table(_pq_sub_rows(qres, keys=["pcell"]), books, ["pcell"])
+        enc = enc.join(cellcand, "vec_id")
     else:
-        dt = (
-            sub.filter(F.col("vec_id") == query_vec_id)
-            .select("s", F.col("sv").alias("qsv"))
-            .join(F.broadcast(books), "s")
-            .select(
-                "s",
-                "cid",
-                F.round(sq_dist(F.col("qsv"), F.col("cv")) * 1000000.0, 0)
-                .cast("long")
-                .alias("dti"),
-            )
-        )
-        adc = (
-            enc.filter(F.col("vec_id") != query_vec_id)
-            .join(F.broadcast(dt), ["s", "cid"])
-            .groupBy("vec_id")
-            .agg(F.sum("dti").alias("adc"))
-        )
+        dt = _adc_table(sub.filter(F.col("vec_id") == query_vec_id), books)
+    adc = (
+        enc.join(F.broadcast(dt), dt.columns[:-1])  # ([pcell,] s, cid)
+        .groupBy("vec_id")
+        .agg(F.sum("dti").alias("adc"))
+    )
     cand_ids = adc.orderBy("adc", "vec_id").limit(rerank).select("vec_id")
     query = emb.filter(F.col("vec_id") == query_vec_id)
     cands = emb.join(cand_ids, "vec_id", "left_semi")
@@ -2927,33 +2863,19 @@ def ivfpq_index_write(
     if by_residual:
         cents = _train_cents()
         lists = ivf_assign(emb, cents)
-        base = (
-            emb.select("vec_id", vectors.as_double(F.col("embedding")).alias("v"))
-            .join(lists, "vec_id")
-            .join(F.broadcast(cents), "cid")
-            .select(
-                "vec_id",
-                F.zip_with(F.col("v"), F.col("cv"), lambda x, c: x - c).alias(
-                    "embedding"
-                ),
-            )
+        base = _residual(
+            emb.select(
+                "vec_id", vectors.as_double(F.col("embedding")).alias("v")
+            ).join(lists, "vec_id"),
+            cents,
+            ["vec_id"],
         )
         sub = _pq_sub_rows(base, pq_m=pq_m, pq_sub=pq_sub)
         books = pq_codebooks(
             sub, sample_mod=sample_mod, pq_codes=pq_codes
         ).localCheckpoint(eager=True)
-        books_disk = books.withColumn(
-            "code", (F.row_number().over(wb) - 1).cast("tinyint")
-        )
-        writes = [
-            lambda: cents.write.mode("overwrite").parquet(f"{path}/_centroids"),
-            lambda: books_disk.write.mode("overwrite").parquet(
-                f"{path}/_codebooks"
-            ),
-        ]
     else:
-        base = emb.select("vec_id", "embedding")
-        sub = _pq_sub_rows(base, pq_m=pq_m, pq_sub=pq_sub)
+        sub = _pq_sub_rows(emb.select("vec_id", "embedding"), pq_m=pq_m, pq_sub=pq_sub)
         # (r11 A/B, negative result: writing the two trained sidecars
         # directly and reading them back for encode/assign saves two
         # checkpoint actions but SERIALIZES the sidecar writes ahead of
@@ -2968,15 +2890,9 @@ def ivfpq_index_write(
             ).localCheckpoint(eager=True),
         )
         lists = ivf_assign(emb, cents)
-        books_disk = books.withColumn(
-            "code", (F.row_number().over(wb) - 1).cast("tinyint")
-        )
-        writes = [
-            lambda: cents.write.mode("overwrite").parquet(f"{path}/_centroids"),
-            lambda: books_disk.write.mode("overwrite").parquet(
-                f"{path}/_codebooks"
-            ),
-        ]
+    books_disk = books.withColumn(
+        "code", (F.row_number().over(wb) - 1).cast("tinyint")
+    )
     # ONE exchange for the whole encode (r11, guide §2.4): the old
     # groupBy(vec_id, s) argmin followed by a groupBy(vec_id)
     # collect_list paid two shuffles of the same per-vector rows.
@@ -2988,7 +2904,8 @@ def ivfpq_index_write(
     # argmin struct is unique).
     codes = _pq_encode_codes(sub, books_disk, pq_m)
     run_concurrent(
-        *writes,
+        lambda: cents.write.mode("overwrite").parquet(f"{path}/_centroids"),
+        lambda: books_disk.write.mode("overwrite").parquet(f"{path}/_codebooks"),
         # clustered partitioned write (guide §6; see ivf_index_write),
         # vec_id-salted (r11, guide §2.5) against hot cells
         lambda: salted_by_partition(
@@ -3026,18 +2943,12 @@ def ivfpq_index_append(spark, index_path: str, new_emb: DataFrame) -> None:
     books = spark.read.parquet(f"{index_path}/_codebooks")
     lists = ivf_assign(new_emb, cents)
     if man["by_residual"]:
-        base = (
+        base = _residual(
             new_emb.select(
                 "vec_id", vectors.as_double(F.col("embedding")).alias("v")
-            )
-            .join(lists, "vec_id")
-            .join(F.broadcast(cents), "cid")
-            .select(
-                "vec_id",
-                F.zip_with(F.col("v"), F.col("cv"), lambda x, c: x - c).alias(
-                    "embedding"
-                ),
-            )
+            ).join(lists, "vec_id"),
+            cents,
+            ["vec_id"],
         )
     else:
         base = new_emb.select("vec_id", "embedding")
@@ -3113,6 +3024,64 @@ def ivfpq_index_retrain(
     ivfpq_index_write(rows, index_path, nlist=nlist, **{k: man[k] for k in replay})
 
 
+def _ivfpq_shortlist(
+    spark,
+    index_path: str,
+    q_emb: DataFrame,
+    nprobe: int,
+    rerank: int,
+    budget=None,
+) -> tuple[DataFrame, DataFrame]:
+    """The probe both persisted IVF-PQ batch operators share, for query
+    rows ``q_emb`` (qid, embedding): ONE broadcast probe ranks every
+    query's ``nprobe`` cells against the stored centroids, the code
+    table is read ONCE pruned to the UNION of all probed cells (literal
+    cid IN-list — static partition pruning for the whole batch, over
+    PQ_M-byte rows with no embedding column), members meet their
+    probing queries (a vector never probes itself), and every query's
+    integerized ADC table rides one broadcast. ``budget``, when given,
+    maps the pruned member rows (vec_id, cell, codes) before they meet
+    the probe.
+
+    The coding mode is read from the manifest. Raw codes share one ADC
+    table per query, keyed (qid, s, code). Residual codes (FAISS
+    ``by_residual``) get one query residual — hence one ADC table — per
+    probed (qid, cell), keyed (qid, cell, s, code); the subtraction is
+    the same IEEE double op the build ran (:func:`_residual`).
+
+    Returns (cand, short): the scored member code rows (qid[, cell],
+    vec_id, s, code) and each query's ADC-top ``rerank`` (qid,
+    vec_id)."""
+    man = index_store.load(index_path, "ivfpq")
+    cents = spark.read.parquet(f"{index_path}/_centroids")
+    books = spark.read.parquet(f"{index_path}/_codebooks")
+    qv = q_emb.select("qid", vectors.as_double(F.col("embedding")).alias("v"))
+    probe = _probe_cells(qv, cents, nprobe)
+    cids = sorted(
+        {r.cell for r in probe.select("cell").distinct().collect()}
+    ) or [-1]
+    members = (
+        spark.read.parquet(f"{index_path}/codes")
+        .filter(F.col("cid").isin(cids))  # static partition pruning
+        .select("vec_id", F.col("cid").alias("cell"), "codes")
+    )
+    if budget is not None:
+        members = budget(members)
+    qkeys = ["qid", "cell"] if man["by_residual"] else ["qid"]
+    cand = (
+        members.join(F.broadcast(probe), "cell")
+        .filter(F.col("vec_id") != F.col("qid"))
+        .select(*qkeys, "vec_id", F.posexplode("codes").alias("s", "code"))
+    )
+    qbase = q_emb
+    if man["by_residual"]:
+        qbase = _residual(qv.join(F.broadcast(probe), "qid"), cents, qkeys, "cell")
+    qsub = _pq_sub_rows(qbase, pq_m=man["pq_m"], pq_sub=man["pq_sub"], keys=qkeys)
+    dt = _adc_table(qsub, books, qkeys)
+    cells = cand.join(F.broadcast(dt), [*qkeys, "s", "code"])
+    return cand, _adc_shortlist(cells, rerank)
+
+
 def ivfpq_probe_batch(
     spark,
     index_path: str,
@@ -3126,14 +3095,14 @@ def ivfpq_probe_batch(
     """Per-query corpus near-neighbor verdicts for a BATCH of new
     vectors probing a persisted IVF-PQ index — the compressed-tier twin
     of :func:`ann_candidates_against_index`, built for the streaming
-    ingest path: every query ranks its ``nprobe`` cells against the
-    broadcast centroids, takes each probed cell's md5-first
+    ingest path: the retrieval probe of :func:`ivfpq_index_batch_topk`
+    (:func:`_ivfpq_shortlist`, either coding mode) with a per-cell
+    candidate budget — each probed cell contributes only its md5-first
     ``probe_cap`` corpus members (the cell-salted rank — an unbiased
-    fixed-size sample, the same budget rule as the LSH ingest), scores
-    them by integerized ADC against a broadcast per-query distance
-    table, and exact-cosine-reranks the per-query ADC-top ``rerank``
-    shortlist. Work per batch is ∝ batch · nprobe · probe_cap · PQ_M
-    BYTE-code cells at ANY corpus size.
+    fixed-size sample, the same budget rule as the LSH ingest) — and
+    the per-query ADC-top ``rerank`` shortlist exact-cosine-reranked.
+    Work per batch is ∝ batch · nprobe · probe_cap · PQ_M BYTE-code
+    cells at ANY corpus size.
 
     What each tier reads: the nlist-row centroids, the probed cid
     partitions of the code table (pruned, no embedding column exists
@@ -3143,73 +3112,27 @@ def ivfpq_probe_batch(
     scan path, floats only for shortlists). ``corpus_max_id`` freezes
     verdicts to corpus rows while the same stream appends (appended
     ids are higher), keeping the drained result
-    batch-partitioning-invariant. Raw-code indexes only (asserted from
-    the manifest) — the residual mode needs per-(query, cell) tables,
-    which :func:`ivfpq_index_batch_topk` builds. Columns: (qid,
-    n_corpus_candidates, nearest_corpus_cosine)."""
-    man = index_store.load(index_path, "ivfpq")
-    if man["by_residual"]:
-        raise ValueError("ivfpq_probe_batch supports raw-code indexes only")
-    cents = spark.read.parquet(f"{index_path}/_centroids")
-    books = spark.read.parquet(f"{index_path}/_codebooks")
-    qv = new_emb.select(
-        F.col("vec_id").alias("qid"),
-        vectors.as_double(F.col("embedding")).alias("v"),
-    )
-    wq = Window.partitionBy("qid").orderBy("d", "cid")
-    probe = (
-        qv.crossJoin(F.broadcast(cents))
-        .select("qid", "cid", sq_dist(F.col("v"), F.col("cv")).alias("d"))
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= nprobe)
-        .select("qid", F.col("cid").alias("cell"))
-    )
-    cids = sorted(
-        {r.cell for r in probe.select("cell").distinct().collect()}
-    ) or [-1]
-    codes = spark.read.parquet(f"{index_path}/codes").filter(
-        F.col("cid").isin(cids)  # static partition pruning
-    )
-    if corpus_max_id is not None:
-        codes = codes.filter(F.col("vec_id") <= corpus_max_id)
-    wr = Window.partitionBy("cell").orderBy(
-        F.md5(F.concat_ws(":", F.col("cell"), F.col("vec_id"))), F.col("vec_id")
-    )
-    crank = (
-        codes.select("vec_id", F.col("cid").alias("cell"), "codes")
-        .withColumn("crn", F.row_number().over(wr))
-        .filter(F.col("crn") <= probe_cap)
-    )
-    cand = crank.join(F.broadcast(probe), "cell").select(
-        "qid", "vec_id", F.posexplode("codes").alias("s", "code")
-    )
-    qsub = _pq_sub_rows(
-        new_emb.select(F.col("vec_id"), F.col("embedding")),
-        pq_m=man["pq_m"],
-        pq_sub=man["pq_sub"],
-    ).select(F.col("vec_id").alias("qid"), "s", "sv")
-    dt = qsub.join(F.broadcast(books), "s").select(
-        "qid",
-        "s",
-        "code",
-        F.round(sq_dist(F.col("sv"), F.col("cv")) * 1000000.0, 0)
-        .cast("long")
-        .alias("dti"),
-    )
-    adc = (
-        cand.join(F.broadcast(dt), ["qid", "s", "code"])
-        .groupBy("qid", "vec_id")
-        .agg(F.sum("dti").alias("adc"))
-    )
-    ws = Window.partitionBy("qid").orderBy("adc", "vec_id")
-    short = (
-        adc.withColumn("rn", F.row_number().over(ws))
-        .filter(F.col("rn") <= rerank)
-        .select("qid", "vec_id")
+    batch-partitioning-invariant. Columns: (qid, n_corpus_candidates,
+    nearest_corpus_cosine)."""
+    q_emb = new_emb.select(F.col("vec_id").alias("qid"), "embedding")
+
+    def budget(members: DataFrame) -> DataFrame:
+        if corpus_max_id is not None:
+            members = members.filter(F.col("vec_id") <= corpus_max_id)
+        wr = Window.partitionBy("cell").orderBy(
+            F.md5(F.concat_ws(":", F.col("cell"), F.col("vec_id"))), F.col("vec_id")
+        )
+        return members.withColumn("crn", F.row_number().over(wr)).filter(
+            F.col("crn") <= probe_cap
+        )
+
+    cand, short = _ivfpq_shortlist(
+        spark, index_path, q_emb, nprobe, rerank, budget
     )
     ev = emb.select(
         "vec_id", vectors.as_double(F.col("embedding")).alias("cv2")
     )
+    qv = q_emb.select("qid", vectors.as_double(F.col("embedding")).alias("v"))
     scored = (
         short.join(ev, "vec_id")
         .join(F.broadcast(qv), "qid")
@@ -3227,7 +3150,7 @@ def ivfpq_probe_batch(
     best = scored.groupBy("qid").agg(
         F.max("cosine").alias("nearest_corpus_cosine")
     )
-    base = new_emb.select(F.col("vec_id").alias("qid")).distinct()
+    base = q_emb.select("qid").distinct()
     return (
         base.join(ncand, "qid", "left")
         .join(best, "qid", "left")
@@ -3250,92 +3173,22 @@ def ivfpq_index_batch_topk(
     nprobe: int = IVF_NPROBE,
     rerank: int = PQ_RERANK,
 ) -> DataFrame:
-    """BATCH ANN from the persisted IVF-PQ code index: ONE broadcast
-    probe ranks every query's ``nprobe`` cells against the stored
-    centroids, the code table is read ONCE pruned to the UNION of all
-    probed cells (literal cid IN-list — static partition pruning for
-    the whole batch, over PQ_M-byte rows with no embedding column),
-    every query's integerized ADC table rides one broadcast, and the
-    per-qid ADC-top ``rerank`` shortlists are exact-reranked via one
-    rerank·|Q|-bounded semi-join of the corpus floats. Unlike the
-    ingest-path :func:`ivfpq_probe_batch` there is NO per-cell
-    candidate budget — this is the retrieval scan, whole probed cells,
-    exactly :func:`ivfpq_topk` semantics per query (and per-query
-    result-identical to it).
-
-    The coding mode is read from the manifest. Raw codes share one ADC
-    table per query, keyed (qid, s, code). Residual codes (FAISS
-    ``by_residual``) get one query residual — hence one ADC table — per
-    probed (qid, cell), keyed (qid, cell, s, code); the subtraction is
-    the same IEEE double op the build ran. Columns: (qid, vec_id,
-    label, cosine), per-qid top-k under (cosine desc, vec_id)."""
-    man = index_store.load(index_path, "ivfpq")
-    by_residual = man["by_residual"]
-    cents = spark.read.parquet(f"{index_path}/_centroids")
-    books = spark.read.parquet(f"{index_path}/_codebooks")
+    """BATCH ANN from the persisted IVF-PQ code index: the shared probe
+    (:func:`_ivfpq_shortlist` — one broadcast cell probe, ONE pruned
+    read of the code table for the union of probed cells, one broadcast
+    of every query's integerized ADC table; raw or residual codes per
+    the manifest), then the per-qid ADC-top ``rerank`` shortlists are
+    exact-reranked via one rerank·|Q|-bounded semi-join of the corpus
+    floats. Unlike the ingest-path :func:`ivfpq_probe_batch` there is
+    NO per-cell candidate budget — this is the retrieval scan, whole
+    probed cells, exactly :func:`ivfpq_topk` semantics per query (and
+    per-query result-identical to it). Columns: (qid, vec_id, label,
+    cosine), per-qid top-k under (cosine desc, vec_id)."""
     q_ids = queries.select("qid")
     q_emb = emb.join(
         F.broadcast(q_ids), emb["vec_id"] == q_ids["qid"]
     ).select("qid", "embedding")
-    qv = q_emb.select(
-        "qid", vectors.as_double(F.col("embedding")).alias("v")
-    )
-    wq = Window.partitionBy("qid").orderBy("d", "cid")
-    probe = (
-        qv.crossJoin(F.broadcast(cents))
-        .select("qid", "cid", sq_dist(F.col("v"), F.col("cv")).alias("d"))
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= nprobe)
-        .select("qid", F.col("cid").alias("cell"))
-    )
-    cids = sorted(
-        {r.cell for r in probe.select("cell").distinct().collect()}
-    ) or [-1]
-    codes = spark.read.parquet(f"{index_path}/codes").filter(
-        F.col("cid").isin(cids)  # static partition pruning for the batch
-    )
-    qkeys = ["qid", "cell"] if by_residual else ["qid"]  # one ADC table per key
-    keys = [*qkeys, "s", "code"]
-    cand = (
-        codes.select("vec_id", F.col("cid").alias("cell"), "codes")
-        .join(F.broadcast(probe), "cell")
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select(*qkeys, "vec_id", F.posexplode("codes").alias("s", "code"))
-    )
-    if by_residual:
-        qbase = (
-            qv.join(F.broadcast(probe), "qid")
-            .join(F.broadcast(cents.withColumnRenamed("cid", "cell")), "cell")
-            .select(
-                "qid",
-                "cell",
-                F.zip_with(F.col("v"), F.col("cv"), lambda x, c: x - c).alias(
-                    "embedding"
-                ),
-            )
-        )
-    else:
-        qbase = q_emb
-    qsub = _pq_sub_rows(
-        qbase, pq_m=man["pq_m"], pq_sub=man["pq_sub"], keys=qkeys
-    )
-    dt = qsub.join(F.broadcast(books), "s").select(
-        *keys,
-        F.round(sq_dist(F.col("sv"), F.col("cv")) * 1000000.0, 0)
-        .cast("long")
-        .alias("dti"),
-    )
-    adc = (
-        cand.join(F.broadcast(dt), keys)
-        .groupBy("qid", "vec_id")
-        .agg(F.sum("dti").alias("adc"))
-    )
-    ws = Window.partitionBy("qid").orderBy("adc", "vec_id")
-    short = (
-        adc.withColumn("rn", F.row_number().over(ws))
-        .filter(F.col("rn") <= rerank)
-        .select("qid", "vec_id")
-    )
+    _, short = _ivfpq_shortlist(spark, index_path, q_emb, nprobe, rerank)
     return _exact_rerank(emb, short, q_ids, k)
 
 
@@ -3368,16 +3221,12 @@ def ivfpq_distortion_report(spark, index_path: str, emb: DataFrame) -> DataFrame
         F.posexplode("codes").alias("s", "code"),
     )
     if man["by_residual"]:
-        base = (
-            emb.select("vec_id", vectors.as_double(F.col("embedding")).alias("v"))
-            .join(codes.select("vec_id", "cid"), "vec_id")
-            .join(F.broadcast(cents), "cid")
-            .select(
-                "vec_id",
-                F.zip_with(F.col("v"), F.col("cv"), lambda x, c: x - c).alias(
-                    "embedding"
-                ),
-            )
+        base = _residual(
+            emb.select(
+                "vec_id", vectors.as_double(F.col("embedding")).alias("v")
+            ).join(codes.select("vec_id", "cid"), "vec_id"),
+            cents,
+            ["vec_id"],
         )
     else:
         base = emb.select("vec_id", "embedding")

@@ -1026,14 +1026,16 @@ def _mh_split(spark: SparkSession, sf_dir: str) -> int:
     return 3 * docs.agg(F.max("doc_id")).collect()[0][0] // 4
 
 
-def _minhash_index_path(sf_dir: str) -> str:
-    """On-disk location of the persisted minhash near-dup index for the
-    CORPUS side (doc_id < the derived 3/4 split) of ``sf_dir``'s
-    documents — keyed like :func:`_ann_index_path`: readable sf tag +
-    md5 of the absolute corpus path + every constant the index bakes in
-    (signature length, band shape, partition fan, split formula), so
-    retuning or a same-name corpus elsewhere can never serve stale
-    partitions."""
+def _warehouse_path(prefix: str, sf_dir: str, *consts) -> str:
+    """Deterministic on-disk location of a persisted index built from
+    ``sf_dir`` — under the repo's spark-warehouse (the same scratch
+    area the bucketed-join tables use), named
+    ``{prefix}_{sf tag}_{key}``. The key (ADVICE r6) is the md5 of the
+    ABSOLUTE corpus path (two corpora whose directories share a
+    basename — /a/sf0.01 vs /b/sf0.01 — must never collide) joined by
+    ``:`` with every constant the index bakes in, so an index persisted
+    under other parameters is a different directory and retuning can
+    never silently serve stale partitions."""
     import hashlib
     import os
 
@@ -1042,10 +1044,23 @@ def _minhash_index_path(sf_dir: str) -> str:
     )
     tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
     key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:{dedup.NUM_HASHES}:{dedup.BAND_ROWS}"
-        f":{dedup.MINHASH_INDEX_PARTS}:q3_4split".encode()
+        ":".join(str(c) for c in (os.path.abspath(sf_dir), *consts)).encode()
     ).hexdigest()[:10]
-    return os.path.join(repo_root, "spark-warehouse", f"mh_index_{tag}_{key}")
+    return os.path.join(repo_root, "spark-warehouse", f"{prefix}_{tag}_{key}")
+
+
+def _minhash_index_path(sf_dir: str) -> str:
+    """The persisted minhash near-dup index for the CORPUS side
+    (doc_id < the derived 3/4 split) of ``sf_dir``'s documents, keyed
+    by signature length, band shape, partition fan and split formula."""
+    return _warehouse_path(
+        "mh_index",
+        sf_dir,
+        dedup.NUM_HASHES,
+        dedup.BAND_ROWS,
+        dedup.MINHASH_INDEX_PARTS,
+        "q3_4split",
+    )
 
 
 def _ensure_minhash_index(spark: SparkSession, sf_dir: str) -> str:
@@ -1168,27 +1183,15 @@ def neardup_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ann_index_path(sf_dir: str) -> str:
-    """Deterministic on-disk location for the persisted ANN index of a
-    given sf_dir — under the repo's spark-warehouse (the same scratch
-    area the bucketed-join tables use). Keyed by (ADVICE r6): the sf
-    tag for readability, an md5 of the ABSOLUTE corpus path (two
-    corpora whose directories share a basename — /a/sf0.01 vs
-    /b/sf0.01 — must never collide), and the LSH/shard constants (an
-    index persisted under different banding parameters is a different
-    index; retuning NUM_HYPERPLANES can never silently serve stale
-    partitions)."""
-    import hashlib
-    import os
-
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    """The persisted full-corpus ANN index of ``sf_dir``, keyed by the
+    LSH/shard constants (the IVF/IVF-PQ entries suffix their own)."""
+    return _warehouse_path(
+        "ann_index",
+        sf_dir,
+        similarity.NUM_HYPERPLANES,
+        similarity.LSH_BANDS,
+        similarity.MAX_BUCKET,
     )
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:{similarity.NUM_HYPERPLANES}"
-        f":{similarity.LSH_BANDS}:{similarity.MAX_BUCKET}".encode()
-    ).hexdigest()[:10]
-    return os.path.join(repo_root, "spark-warehouse", f"ann_index_{tag}_{key}")
 
 
 def _ensure_ann_index(spark: SparkSession, sf_dir: str, emb) -> str:
@@ -1612,7 +1615,7 @@ def ann_ivf_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     path. See operators/similarity.py:ivf_index_write/ivf_index_topk."""
     emb = load_table(spark, sf_dir, "embeddings")
     path = _ensure_ivf_index(spark, sf_dir, emb)
-    return similarity.ivf_index_topk(spark, path, query_vec_id=0, k=10, emb=emb)
+    return similarity.ivf_index_topk(spark, path, emb, query_vec_id=0, k=10)
 
 
 def _ensure_ivf_index(spark: SparkSession, sf_dir: str, emb) -> str:
@@ -1639,22 +1642,18 @@ def _vec_split(spark: SparkSession, sf_dir: str) -> int:
 
 
 def _ann_incr_index_path(sf_dir: str) -> str:
-    """On-disk location of the CORPUS-side (vec_id < the derived 3/4
-    split) ANN index used by the incremental entries — keyed like
-    :func:`_ann_index_path` plus the split formula, so it can never
-    collide with the full-corpus index the retrieval entries share."""
-    import hashlib
-    import os
-
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    """The CORPUS-side (vec_id < the derived 3/4 split) ANN index used
+    by the incremental entries — keyed like :func:`_ann_index_path`
+    plus the split formula, so it can never collide with the
+    full-corpus index the retrieval entries share."""
+    return _warehouse_path(
+        "ann_incr",
+        sf_dir,
+        similarity.NUM_HYPERPLANES,
+        similarity.LSH_BANDS,
+        similarity.MAX_BUCKET,
+        "q3_4split",
     )
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:{similarity.NUM_HYPERPLANES}"
-        f":{similarity.LSH_BANDS}:{similarity.MAX_BUCKET}:q3_4split".encode()
-    ).hexdigest()[:10]
-    return os.path.join(repo_root, "spark-warehouse", f"ann_incr_{tag}_{key}")
 
 
 def _build_ann_incr_index(spark: SparkSession, sf_dir: str, emb) -> tuple[str, int]:
@@ -3144,7 +3143,7 @@ def ann_ivf_incremental_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         similarity.ivf_index_write(emb.filter(F.col("vec_id") < s), path)
         similarity.ivf_index_append(spark, path, emb.filter(F.col("vec_id") >= s))
     qid = emb.agg(F.max("vec_id")).collect()[0][0]
-    return similarity.ivf_index_topk(spark, path, query_vec_id=qid, k=10, emb=emb)
+    return similarity.ivf_index_topk(spark, path, emb, query_vec_id=qid, k=10)
 
 
 @register(
@@ -3767,20 +3766,13 @@ def ann_ivf_index_retrain_measured(
     spill_fraction) — before at grid-min, after at the measured
     choice, both replayed exactly by the oracle. See
     operators/similarity.py:ivf_index_retrain(remeasure_nlist=True)."""
-    import hashlib
-    import os
-
     emb = load_table(spark, sf_dir, "embeddings")
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:{similarity.IVF_NLIST_GRID}"
-        f":{_IVF_OCC_CAP}:retrain_meas".encode()
-    ).hexdigest()[:10]
-    path = os.path.join(
-        repo_root, "spark-warehouse", f"ivf_retrain_meas_{tag}_{key}"
+    path = _warehouse_path(
+        "ivf_retrain_meas",
+        sf_dir,
+        similarity.IVF_NLIST_GRID,
+        _IVF_OCC_CAP,
+        "retrain_meas",
     )
     similarity.ivf_index_write(
         emb, path, nlist=min(similarity.IVF_NLIST_GRID)

@@ -85,48 +85,15 @@ def scoped_max_split_bytes(spark: SparkSession, n_bytes: int) -> Iterator[None]:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
 
 
-def read_pages(
-    spark: SparkSession,
-    path: str,
-    max_split_bytes: int | None = None,
-    use_rdd: bool = False,
-) -> DataFrame:
+def read_pages(spark: SparkSession, path: str) -> DataFrame:
     """Scan a MediaWiki export into DataFrame(title string, text string).
 
-    Default path: the native ``text`` datasource with a custom
-    ``lineSep`` — record-delimited, splittable, and, with the
-    ``from_xml`` parse, entirely JVM-side.
-    Split granularity: on the native path use
-    ``scoped_max_split_bytes`` AROUND the read and its actions (the
-    per-read ``maxPartitionBytes`` option is not honored by the v1 text
-    source, and partitioning binds lazily at action time, so a setting
-    made here could not be safely restored); passing ``max_split_bytes``
-    on the native path raises to prevent the silent session-wide leak
-    the old behavior had. On the RDD path ``max_split_bytes`` maps to
-    the Hadoop split conf, naturally scoped to the read.
-
-    ``use_rdd=True`` keeps the classic ``newAPIHadoopFile`` route (the
-    direct analog of the reference's XmlInputFormat wiring,
-    CountReference.java:324-334) for comparison and tests; its blocks
-    go through the same parse."""
-    if use_rdd:
-        conf = {"textinputformat.record.delimiter": "</page>"}
-        if max_split_bytes is not None:
-            conf["mapreduce.input.fileinputformat.split.maxsize"] = str(max_split_bytes)
-        rdd = spark.sparkContext.newAPIHadoopFile(
-            path,
-            "org.apache.hadoop.mapreduce.lib.input.TextInputFormat",
-            "org.apache.hadoop.io.LongWritable",
-            "org.apache.hadoop.io.Text",
-            conf=conf,
-        ).map(lambda kv: (kv[1],))
-        blocks = spark.createDataFrame(rdd, "value string")
-    else:
-        if max_split_bytes is not None:
-            raise ValueError(
-                "max_split_bytes on the native path would mutate session-wide "
-                "spark.sql.files.maxPartitionBytes; wrap the read AND its "
-                "actions in scoped_max_split_bytes(spark, n) instead"
-            )
-        blocks = spark.read.option("lineSep", "</page>").text(path)
+    The native ``text`` datasource with a custom ``lineSep`` —
+    record-delimited, splittable, and, with the ``from_xml`` parse,
+    entirely JVM-side. To set the split granularity, wrap the read AND
+    its actions in ``scoped_max_split_bytes`` (the per-read
+    ``maxPartitionBytes`` option is not honored by the v1 text source,
+    and partitioning binds lazily at action time, so a setting made
+    here could not be safely restored)."""
+    blocks = spark.read.option("lineSep", "</page>").text(path)
     return _parse_pages(blocks)

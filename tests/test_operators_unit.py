@@ -1580,15 +1580,15 @@ def test_band_keys_py_matches_spark_banding(spark):
 
 
 def test_ivf_index_topk_probe_avoids_lists_scan(spark, tmp_path):
-    """With the corpus table supplied, ivf_index_topk must answer
-    identically to the lists-scan fallback while ranking cells against
-    the literal query vector (ADVICE r6: the probe itself is pruned —
-    only the _centroids file and the nprobe cid partitions are read)."""
+    """ivf_index_topk ranks cells against the literal query vector
+    (ADVICE r6: the probe itself is pruned — only the _centroids file
+    and the nprobe cid partitions are read) and must still answer
+    identically to the in-DAG ivf_topk over the same training rows."""
     emb = load_table(spark, SF_SMALL, "embeddings")
     path = str(tmp_path / "ivfidx")
     similarity.ivf_index_write(emb, path)
-    got = similarity.ivf_index_topk(spark, path, query_vec_id=0, k=10, emb=emb)
-    want = similarity.ivf_index_topk(spark, path, query_vec_id=0, k=10)
+    got = similarity.ivf_index_topk(spark, path, emb, query_vec_id=0, k=10)
+    want = similarity.ivf_topk(emb, 0, 10)
     assert [(r.vec_id, r.cosine) for r in got.collect()] == [
         (r.vec_id, r.cosine) for r in want.collect()
     ]
@@ -2106,6 +2106,58 @@ def test_ivfpq_index_matches_in_dag_both_modes(spark, tmp_path):
         assert index_store.load(path, "ivfpq")["by_residual"] is res
 
 
+def test_ivfpq_probe_batch_matches_retrieval_probe(spark, tmp_path):
+    """The ingest probe (ivfpq_probe_batch) and the retrieval probe
+    (ivfpq_index_batch_topk) share one front half, in BOTH coding
+    modes: with a per-cell budget no smaller than the largest cell,
+    every new vector's nearest corpus cosine is its retrieval top-1,
+    and its candidate count is the membership of its nprobe nearest
+    cells (ranked here in Python by (d, cid) from the stored
+    centroids)."""
+    emb = load_table(spark, SF_SMALL, "embeddings")
+    new = emb.filter(F.col("vec_id") >= 400)
+    queries = new.select(F.col("vec_id").alias("qid"))
+    for res in (False, True):
+        path = str(tmp_path / f"ivfpq_{int(res)}")
+        similarity.ivfpq_index_write(
+            emb.filter(F.col("vec_id") < 400), path, by_residual=res
+        )
+        sizes = {
+            r.cid: r["count"]
+            for r in spark.read.parquet(f"{path}/codes")
+            .groupBy("cid")
+            .count()
+            .collect()
+        }
+        dists = {}
+        for r in (
+            new.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
+            .crossJoin(spark.read.parquet(f"{path}/_centroids"))
+            .select(
+                "vec_id", "cid", similarity.sq_dist(F.col("v"), F.col("cv")).alias("d")
+            )
+            .collect()
+        ):
+            dists.setdefault(r.vec_id, []).append((r.d, r.cid))
+        want_n = {
+            q: sum(sizes.get(c, 0) for _, c in sorted(ds)[: similarity.IVF_NPROBE])
+            for q, ds in dists.items()
+        }
+        top1 = {
+            r.qid: r.cosine
+            for r in similarity.ivfpq_index_batch_topk(
+                spark, path, emb, queries, k=1
+            ).collect()
+        }
+        got = similarity.ivfpq_probe_batch(
+            spark, path, new, emb, probe_cap=max(sizes.values())
+        ).collect()
+        assert len(got) == 100 and len(top1) == 100, (res, len(got), len(top1))
+        for r in got:
+            assert r.nearest_corpus_cosine == top1[r.qid], (res, r, top1[r.qid])
+            assert r.n_corpus_candidates == want_n[r.qid], (res, r, want_n[r.qid])
+
+
 def test_ivfpq_index_topk_absent_query_is_empty(spark, tmp_path):
     """A query vec_id not in the corpus yields an empty (not erroring)
     result — the same contract as ann_index_topk's absent-query
@@ -2301,7 +2353,7 @@ def test_ivf_write_with_failed_centroids_is_not_accepted(
     assert os.path.exists(os.path.join(path, "lists", "_SUCCESS"))
     assert not index_store.complete(path, "ivf")
     with pytest.raises(ValueError, match="no committed ivf index"):
-        similarity.ivf_index_topk(spark, path, emb=emb)
+        similarity.ivf_index_topk(spark, path, emb)
     monkeypatch.setattr(llm_pipeline, "_ann_index_path", lambda _sf: base)
     assert llm_pipeline._ensure_ivf_index(spark, SF_SMALL, emb) == path
     assert index_store.load(path, "ivf")["nlist"] == similarity.IVF_NLIST
@@ -2878,14 +2930,16 @@ def test_salted_by_partition_preserves_rows_and_salt_width(spark, tmp_path):
 
 
 def test_pq_encode_rows_and_codes_equal_two_exchange_forms(spark):
-    """_pq_encode_rows / _pq_encode_codes (optimization r11, guide
-    §2.4: the one-exchange PQ encode) must be row-identical to the
-    two-shuffle shapes they replaced — the per-(vec_id, s) MIN(STRUCT)
-    argmin + (for codes) the array_sort(collect_list) assembly."""
+    """_pq_encode_codes (optimization r11, guide §2.4: the one-exchange
+    PQ encode) must be row-identical to the two-shuffle shapes it
+    replaced — the per-(vec_id, s) MIN(STRUCT) argmin + (for codes) the
+    array_sort(collect_list) assembly — both on in-DAG codebooks, whose
+    code is their cid (posexploded into per-subspace rows, as the
+    in-DAG operators use it), and on stored codebooks with dense
+    codes."""
     from mapreduce_itwiki_spark.operators.similarity import (
         PQ_M,
         _pq_encode_codes,
-        _pq_encode_rows,
         _pq_sub_rows,
         pq_codebooks,
         sq_dist,
@@ -2897,9 +2951,10 @@ def test_pq_encode_rows_and_codes_equal_two_exchange_forms(spark):
     scored = sub.join(F.broadcast(books), "s").select(
         "vec_id", "s", "cid", sq_dist(F.col("sv"), F.col("cv")).alias("d")
     )
-    got = {
-        (r.vec_id, r.s): r.cid for r in _pq_encode_rows(scored).collect()
-    }
+    rows = _pq_encode_codes(sub, books, PQ_M).select(
+        "vec_id", F.posexplode("codes").alias("s", "cid")
+    )
+    got = {(r.vec_id, r.s): r.cid for r in rows.collect()}
     want = {
         (r.vec_id, r.s): r.cid
         for r in (

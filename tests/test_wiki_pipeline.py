@@ -174,18 +174,11 @@ def test_xml_source_across_input_splits(spark, tmp_path):
             for r in linkgraph.incoming_reference_counts(pages).collect()
         }
         n_pages_native = pages.count()
-        # RDD path (reference-analog wiring) must agree
-        pages_rdd = xml_pages.read_pages(
-            spark, str(p), max_split_bytes=64 * 1024, use_rdd=True
-        )
-        assert pages_rdd.count() == n_pages_native
     # the scope restored the session conf
     assert (
         spark.conf.get("spark.sql.files.maxPartitionBytes")
         != str(64 * 1024)
     )
-    with pytest.raises(ValueError):
-        xml_pages.read_pages(spark, str(p), max_split_bytes=64 * 1024)
 
     assert n_pages_native == 400 * len(wiki_fixture.PAGES)
     _, per_rep = wiki_fixture.simulate()
@@ -281,8 +274,7 @@ def test_xml_start_tag_straddling_split_boundary_not_dropped(spark, tmp_path):
     irrelevant — proven here by sweeping the split boundary through
     every byte of one '<page>' literal (…before, inside all 6 bytes,
     after…) and pinning both page count AND per-title link counts to
-    the 1-split read each time. The RDD reference-analog path is swept
-    at the tightest boundaries too."""
+    the 1-split read each time."""
     from mapreduce_itwiki_spark.operators import linkgraph
     from mapreduce_itwiki_spark.sources import xml_pages
 
@@ -326,9 +318,3 @@ def test_xml_start_tag_straddling_split_boundary_not_dropped(spark, tmp_path):
                 ).collect()
             }
             assert got == want, (d, split)
-    # RDD reference-analog wiring at the in-tag boundaries
-    for d in (1, 3, 5):
-        got_rdd = xml_pages.read_pages(
-            spark, str(p), max_split_bytes=off + d, use_rdd=True
-        )
-        assert got_rdd.count() == n_pages, d
