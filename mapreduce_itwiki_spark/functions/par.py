@@ -89,9 +89,17 @@ def salted_by_partition(df, part_col: str, salt_src: str, n_dirs: int):
 def run_concurrent(*thunks: Callable[[], object]) -> list[object]:
     """Run the given zero-arg actions concurrently; return their
     results in order; raise the first exception (after all complete or
-    fail). 2-4 jobs in flight is the sweet spot (guide §2.6)."""
+    fail). 2-4 jobs in flight is the sweet spot (guide §2.6).
+
+    Each thunk runs with the caller's Spark local properties and job
+    tags (``inheritable_thread_target``), so the jobs it starts join
+    the caller's job group, description and scheduler pool."""
     if len(thunks) == 1:
         return [thunks[0]()]
+    from pyspark import inheritable_thread_target
+    from pyspark.sql import SparkSession
+
+    inherit = inheritable_thread_target(SparkSession.active())
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(t) for t in thunks]
+        futures = [pool.submit(inherit(t)) for t in thunks]
         return [f.result() for f in futures]

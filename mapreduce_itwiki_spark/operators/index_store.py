@@ -33,17 +33,24 @@ def _file(path: str) -> str:
     return os.path.join(path, MANIFEST)
 
 
-def commit(path: str, kind: str, verbs: list[str], **geometry) -> None:
-    """Publish the manifest atomically (fsynced temp file, then
-    ``os.replace``) — the LAST step of every mutating verb."""
-    os.makedirs(path, exist_ok=True)
-    final = _file(path)
-    tmp = final + ".tmp"
+def publish_json(file: str, obj) -> None:
+    """Write ``obj`` to ``file`` as JSON atomically: an fsynced temp
+    file, then ``os.replace``. A reader sees the old file or the new
+    one, never a torn write, and the new one survives a crash once
+    this returns. Creates the parent directory."""
+    os.makedirs(os.path.dirname(file), exist_ok=True)
+    tmp = file + ".tmp"
     with open(tmp, "w") as fh:
-        json.dump({"kind": kind, **geometry, "verbs": list(verbs)}, fh, sort_keys=True)
+        json.dump(obj, fh, sort_keys=True)
         fh.flush()
         os.fsync(fh.fileno())
-    os.replace(tmp, final)
+    os.replace(tmp, file)
+
+
+def commit(path: str, kind: str, verbs: list[str], **geometry) -> None:
+    """Publish the manifest atomically (:func:`publish_json`) — the
+    LAST step of every mutating verb."""
+    publish_json(_file(path), {"kind": kind, **geometry, "verbs": list(verbs)})
 
 
 def retract(path: str) -> None:

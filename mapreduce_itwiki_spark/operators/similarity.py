@@ -1782,7 +1782,7 @@ def ivf_topk(
 
 PQ_M = 8  #: product-quantization subspaces (PQ_M * PQ_SUB = dim)
 PQ_SUB = 8  #: dims per subspace
-PQ_CODES = 4  #: codes per subspace codebook (256 in production; small keeps the oracle CTE tractable)
+PQ_CODES = 4  #: codes per subspace codebook (at most 128, the TINYINT code; small keeps the oracle CTE tractable)
 PQ_RERANK = 50  #: ADC shortlist size re-ranked by exact cosine
 
 
@@ -2820,9 +2820,10 @@ def ivfpq_index_write(
     * ``{path}/_centroids`` — the nlist coarse-quantizer rows.
     * ``{path}/_codebooks`` — the PQ_M × PQ_CODES codebook rows, each
       carrying a DENSE per-subspace ``code`` (row_number over cid) so
-      the stored code values are 0..PQ_CODES−1 — one byte per subspace
-      at production PQ_CODES = 256 (here TINYINT; a 256-code deployment
-      stores code−128 or packs raw bytes).
+      the stored code values are 0..pq_codes−1 — one TINYINT byte per
+      subspace, so ``pq_codes`` is at most 128 (a ``ValueError``
+      otherwise, raised before the live index is touched). A 256-code
+      deployment would store code−128 or pack raw bytes.
     * ``{path}/codes`` — ONE row per vector, (vec_id, codes) with
       ``codes`` a PQ_M-entry TINYINT array ordered by subspace,
       PARTITIONED BY cid (the vector's IVF cell). This is the
@@ -2841,6 +2842,10 @@ def ivfpq_index_write(
     are bit-identical to what the in-DAG :func:`ivfpq_topk` computes
     for any probed cell — the persisted query path is result-identical
     to the in-DAG one and shares its DuckDB oracle."""
+    if not 1 <= pq_codes <= 128:
+        raise ValueError(
+            f"pq_codes={pq_codes}: the stored code is a TINYINT, so 1..128"
+        )
     index_store.retract(path)
     # Eager checkpoints so the writes below can overlap (guide §2.6)
     # without racing a lazy materialization (a lazy checkpoint "forced"

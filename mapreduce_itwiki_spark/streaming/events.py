@@ -11,20 +11,34 @@ Scale notes: in production the source is Kafka/files-on-arrival; the
 watermark bounds state for append sinks. Here the finite file feed +
 complete output mode gives the exact batch answer, which is the point
 of the oracle pairing.
+
+Every entry ends in one of two drains, each written once:
+:func:`_drain` (memory sink, ``processAllAvailable``) and
+:func:`_drain_feed` (a file feed streamed one file per micro-batch into
+a ``foreachBatch`` callback). The ingest callbacks write their verdicts
+through :func:`_write_verdicts` (batch_id-partitioned dynamic
+overwrite), and :func:`_ingest_callback` guards each vector tier's
+index append with a done-marker written last.
 """
 
 from __future__ import annotations
 
+import functools
 import itertools
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.par import salted_by_partition
+from ..operators import index_store
 from ..plans.catalog import register
+from ..plans.relational import _scratch_dir
+from ..sources.parquet import load_table
 
 _counter = itertools.count()
+_TS = "yyyy-MM-dd HH:mm:ss"
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -49,6 +63,72 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream
 
 
+def _drain(stream: DataFrame, mode: str) -> DataFrame:
+    """Run ``stream`` into a fresh memory-sink table in output ``mode``,
+    drain the finite feed with ``processAllAvailable`` (the query is
+    stopped even when the drain raises), and return the sink table."""
+    name = f"stream_{next(_counter)}"
+    q = stream.writeStream.outputMode(mode).format("memory").queryName(name).start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return stream.sparkSession.table(name)
+
+
+def _drain_feed(batch: DataFrame, base: str, n_files: int, callback) -> None:
+    """The file-feed drain: clear the scratch ``base``, write ``batch``
+    under it as ``n_files`` parquet files, and stream them one file per
+    micro-batch (``maxFilesPerTrigger=1`` + ``availableNow``) into
+    ``callback(batch_df, batch_id)`` through foreachBatch, checkpointed
+    under ``base``; returns once the whole feed is drained. Clearing
+    first makes every call a fresh run: a stale checkpoint, store
+    pointer or done-marker from an earlier call in this process would
+    mark its batches already applied (idempotence working as designed,
+    but wrong for a rerun)."""
+    shutil.rmtree(base, ignore_errors=True)
+    feed = os.path.join(base, "feed")
+    batch.repartition(n_files).write.mode("overwrite").parquet(feed)
+    q = (
+        batch.sparkSession.readStream.schema(batch.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(feed)
+        .writeStream.foreachBatch(callback)
+        .option("checkpointLocation", os.path.join(base, "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+
+
+def _write_verdicts(verdicts: DataFrame, out: str, batch_id: int, key: str) -> None:
+    """The exactly-once verdict write of one ingest micro-batch.
+    foreachBatch is at-least-once, so the rows land in their own
+    ``batch_id`` partition via dynamic partition overwrite: a re-fired
+    batch replaces its own rows instead of duplicating them. Clustered
+    like the index writers: ``batch_id`` is ONE value per write, so the
+    ``key`` salt alone sizes the write to a single wave of evenly loaded
+    tasks."""
+    salted_by_partition(
+        verdicts.withColumn("batch_id", F.lit(int(batch_id))), "batch_id", key, n_dirs=1
+    ).write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+        "batch_id"
+    ).parquet(out)
+
+
+def _candidate_verdicts(keys: DataFrame, cands: DataFrame, cand_key: str, *extra) -> DataFrame:
+    """One verdict row per ingested key (``keys``' one column): its
+    corpus-candidate count, 0 when it has none, plus the ``extra``
+    aggregates over its candidates."""
+    key = keys.columns[0]
+    roll = cands.groupBy(F.col(cand_key).alias(key)).agg(
+        F.count(F.lit(1)).alias("n_corpus_candidates"), *extra
+    )
+    return keys.join(roll, key, "left").withColumn(
+        "n_corpus_candidates", F.coalesce(F.col("n_corpus_candidates"), F.lit(0))
+    )
+
+
 def hourly_event_rollup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming hourly (window × event_type) counts + value sums."""
     stream = _events_stream(spark, sf_dir)
@@ -57,19 +137,8 @@ def hourly_event_rollup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour"), F.col("event_type"))
         .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("total_value"))
     )
-    name = f"stream_hourly_{next(_counter)}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).select(
-        F.date_format(F.col("window.start"), "yyyy-MM-dd HH:mm:ss").alias("hour_bucket"),
+    return _drain(agg, "complete").select(
+        F.date_format(F.col("window.start"), _TS).alias("hour_bucket"),
         "event_type",
         "n",
         "total_value",
@@ -135,17 +204,11 @@ def sessionize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    name = f"stream_sessions_{next(_counter)}"
-    q = out.writeStream.outputMode("update").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     # update-mode memory sink may hold one row per state update; keep the
     # final state per user
-    latest = spark.table(name)
     return (
-        latest.groupBy("user_id")
+        _drain(out, "update")
+        .groupBy("user_id")
         .agg(
             F.max("n_events").alias("n_events"),
             F.max("n_sessions").alias("n_sessions"),
@@ -168,13 +231,7 @@ def enrich_join_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = joined.groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).alias("n_events"), F.round(F.sum("value"), 2).alias("total_value")
     )
-    name = f"stream_enrich_{next(_counter)}"
-    q = agg.writeStream.outputMode("complete").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return _drain(agg, "complete")
 
 
 register(
@@ -187,13 +244,20 @@ register(
 )(enrich_join_stream)
 
 
-def _clicks_purchases(stream: DataFrame):
-    """The shared two-sided attribution setup of all four stream-stream
-    join queries (inner / leftOuter / fullOuter / leftSemi): click and
-    purchase substreams with 1-hour watermarks, plus the join condition
-    (same user, purchase within 30 minutes after the click). One
-    definition so the window/watermark can never desynchronize across
-    the four variants and their oracles."""
+def _click_purchase_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """Stream-STREAM click→purchase attribution join of type ``how``
+    (``inner``, ``leftOuter``, ``fullOuter`` or ``leftSemi``): a
+    purchase matches every click by the same user in the preceding 30
+    minutes. BOTH sides are unbounded, so Spark buffers each side in
+    state keyed by user, and the time-range predicate plus the two
+    1-hour watermarks bound how long a row is held (state eviction, the
+    thing that makes the join runnable forever at 100 TB/day). Each
+    watermark sits after its event-type filter, so it advances off that
+    side's own max event time. The append-mode sink is drained with
+    ``processAllAvailable``; what each join type emits by then — and so
+    what its oracle replays — is noted at its registration below.
+    Columns: (user_id, click_at[, purchase_at])."""
+    stream = _events_stream(spark, sf_dir)
     clicks = (
         stream.filter(F.col("event_type") == "click")
         .select(F.col("user_id").alias("c_user"), F.col("ts").alias("click_ts"))
@@ -209,41 +273,17 @@ def _clicks_purchases(stream: DataFrame):
         & (F.col("purchase_ts") >= F.col("click_ts"))
         & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 30 minutes"))
     )
-    return clicks, purchases, cond
+    sink = _drain(clicks.join(purchases, cond, how), "append")
+    user = F.coalesce(F.col("c_user"), F.col("p_user")) if how == "fullOuter" else F.col("c_user")
+    cols = [user.alias("user_id"), F.date_format("click_ts", _TS).alias("click_at")]
+    if how != "leftSemi":
+        cols.append(F.date_format("purchase_ts", _TS).alias("purchase_at"))
+    return sink.select(*cols)
 
 
-def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-STREAM inner join with dual watermarks and an event-time
-    range condition — click→purchase attribution (a purchase matches
-    every click by the same user in the preceding 30 minutes). This is
-    the one join shape the other streaming entries don't cover: BOTH
-    sides are unbounded, so Spark buffers each side in state keyed by
-    user and the time-range predicate plus the two watermarks bound how
-    long a click is held (state eviction, the thing that makes the join
-    runnable forever at 100 TB/day). Inner-join matches emit as soon as
-    both sides arrive — the finite feed drained with
-    processAllAvailable therefore yields exactly the batch range-join
-    answer, which the oracle replays."""
-    stream = _events_stream(spark, sf_dir)
-    clicks, purchases, cond = _clicks_purchases(stream)
-    joined = clicks.join(
-        purchases,
-        cond,
-    )
-    name = f"stream_ss_join_{next(_counter)}"
-    q = joined.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).select(
-        F.col("c_user").alias("user_id"),
-        F.date_format("click_ts", "yyyy-MM-dd HH:mm:ss").alias("click_at"),
-        F.date_format("purchase_ts", "yyyy-MM-dd HH:mm:ss").alias("purchase_at"),
-    )
-
-
-register(
+# Inner: matches emit as soon as both sides arrive, so the drained
+# finite feed yields exactly the batch range-join answer.
+stream_stream_join = register(
     "streaming_stream_stream_join",
     oracle="""
     SELECT c.user_id,
@@ -254,48 +294,22 @@ register(
      AND c.event_type = 'click' AND p.event_type = 'purchase'
      AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 30 MINUTE
     """,
-)(stream_stream_join)
+)(functools.partial(_click_purchase_join, how="inner"))
 
 
-def stream_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream LEFT OUTER join — the attribution query that also
-    reports clicks that never converted. Outer results are what make
-    this a genuinely different operator from the inner form: a
-    null-extended row for a click may only emit once the join state
-    KNOWS no purchase can still arrive — i.e. when the click's entire
-    30-minute match window has passed the watermark and its state is
-    evicted (Spark emits these in the no-data micro-batch that follows
-    the feed). Clicks whose window is still open when the feed drains
-    stay buffered and produce NO row — so this is NOT the batch left
-    join, and the oracle replays the eviction rule explicitly: matches,
-    plus null rows only for unmatched clicks with
-    click_ts + 30 min < the final JOINT watermark. Each watermark
-    operator sits after its event-type filter, so it advances off that
-    side's own max event time, and the joint watermark is the MIN
-    across operators: least(max click_ts, max purchase_ts) − 1 h —
-    verified empirically (using max over ALL events over-emits one null
-    row for the final click at sf0.001)."""
-    stream = _events_stream(spark, sf_dir)
-    clicks, purchases, cond = _clicks_purchases(stream)
-    joined = clicks.join(
-        purchases,
-        cond,
-        "leftOuter",
-    )
-    name = f"stream_ss_louter_{next(_counter)}"
-    q = joined.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).select(
-        F.col("c_user").alias("user_id"),
-        F.date_format("click_ts", "yyyy-MM-dd HH:mm:ss").alias("click_at"),
-        F.date_format("purchase_ts", "yyyy-MM-dd HH:mm:ss").alias("purchase_at"),
-    )
-
-
-register(
+# Left outer — clicks that never converted too. A null-extended row for
+# a click may only emit once the join state KNOWS no purchase can still
+# arrive: when the click's entire 30-minute match window has passed the
+# watermark and its state is evicted (Spark emits these in the no-data
+# micro-batch that follows the feed). Clicks whose window is still open
+# when the feed drains stay buffered and produce NO row, so this is NOT
+# the batch left join: the oracle replays the eviction rule — matches,
+# plus null rows only for unmatched clicks with click_ts + 30 min < the
+# final JOINT watermark, the MIN across the two watermark operators:
+# least(max click_ts, max purchase_ts) − 1 h (verified empirically:
+# using max over ALL events over-emits one null row for the final click
+# at sf0.001).
+stream_stream_left_outer_join = register(
     "streaming_stream_stream_left_outer",
     oracle="""
     WITH c AS (SELECT user_id, ts FROM events WHERE event_type = 'click'),
@@ -321,40 +335,18 @@ register(
     UNION ALL
     SELECT user_id, strftime(click_ts, '%Y-%m-%d %H:%M:%S'), NULL FROM u
     """,
-)(stream_stream_left_outer_join)
+)(functools.partial(_click_purchase_join, how="leftOuter"))
 
 
-def stream_stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream FULL OUTER join — both unmatched sides surface,
-    each under its OWN eviction rule (the asymmetry is the point): an
-    unconverted click emits null once its entire 30-minute match window
-    passes the joint watermark (click_ts + 30 min < wm, as in the
-    left-outer form), but an orphan purchase only needs the watermark
-    to pass its own timestamp (purchase_ts < wm) — every click that
-    could still match it (click_ts ∈ [purchase_ts − 30 min,
-    purchase_ts]) has then provably arrived. The oracle replays both
-    rules against the min-of-sides final watermark."""
-    stream = _events_stream(spark, sf_dir)
-    clicks, purchases, cond = _clicks_purchases(stream)
-    joined = clicks.join(
-        purchases,
-        cond,
-        "fullOuter",
-    )
-    name = f"stream_ss_fouter_{next(_counter)}"
-    q = joined.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).select(
-        F.coalesce(F.col("c_user"), F.col("p_user")).alias("user_id"),
-        F.date_format("click_ts", "yyyy-MM-dd HH:mm:ss").alias("click_at"),
-        F.date_format("purchase_ts", "yyyy-MM-dd HH:mm:ss").alias("purchase_at"),
-    )
-
-
-register(
+# Full outer — both unmatched sides surface, each under its OWN eviction
+# rule (the asymmetry is the point): an unconverted click emits null
+# once its entire 30-minute match window passes the joint watermark
+# (click_ts + 30 min < wm, as in the left-outer form), but an orphan
+# purchase only needs the watermark to pass its own timestamp
+# (purchase_ts < wm) — every click that could still match it (click_ts
+# ∈ [purchase_ts − 30 min, purchase_ts]) has then provably arrived. The
+# oracle replays both rules against the min-of-sides final watermark.
+stream_stream_full_outer_join = register(
     "streaming_stream_stream_full_outer",
     oracle="""
     WITH c AS (SELECT user_id, ts FROM events WHERE event_type = 'click'),
@@ -390,38 +382,17 @@ register(
     UNION ALL
     SELECT user_id, NULL, strftime(purchase_ts, '%Y-%m-%d %H:%M:%S') FROM up
     """,
-)(stream_stream_full_outer_join)
+)(functools.partial(_click_purchase_join, how="fullOuter"))
 
 
-def stream_stream_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream LEFT SEMI join — converted clicks only: a click
-    emits (once, without purchase columns) as soon as SOME purchase in
-    its 30-minute window arrives, and state still evicts on the same
-    dual watermarks. Distinct from the inner form in both output shape
-    (no row multiplication per matching purchase) and state behavior (a
-    matched click can be dropped immediately). Finite feed ⇒ equals the
-    batch EXISTS, which needs no watermark modeling in the oracle —
-    unmatched clicks simply never emit."""
-    stream = _events_stream(spark, sf_dir)
-    clicks, purchases, cond = _clicks_purchases(stream)
-    joined = clicks.join(
-        purchases,
-        cond,
-        "leftSemi",
-    )
-    name = f"stream_ss_semi_{next(_counter)}"
-    q = joined.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).select(
-        F.col("c_user").alias("user_id"),
-        F.date_format("click_ts", "yyyy-MM-dd HH:mm:ss").alias("click_at"),
-    )
-
-
-register(
+# Left semi — converted clicks only: a click emits (once, without
+# purchase columns) as soon as SOME purchase in its 30-minute window
+# arrives, and state still evicts on the same dual watermarks. Distinct
+# from the inner form in both output shape (no row multiplication per
+# matching purchase) and state behavior (a matched click can be dropped
+# immediately). Finite feed ⇒ equals the batch EXISTS, which needs no
+# watermark modeling in the oracle — unmatched clicks simply never emit.
+stream_stream_semi_join = register(
     "streaming_stream_stream_semi",
     oracle="""
     SELECT c.user_id, strftime(c.ts, '%Y-%m-%d %H:%M:%S') AS click_at
@@ -433,7 +404,7 @@ register(
                     AND p.ts >= c.ts
                     AND p.ts <= c.ts + INTERVAL 30 MINUTE)
     """,
-)(stream_stream_semi_join)
+)(functools.partial(_click_purchase_join, how="leftSemi"))
 
 
 def sliding_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -448,14 +419,8 @@ def sliding_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "2 hours", "1 hour"))
         .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("total_value"))
     )
-    name = f"stream_sliding_{next(_counter)}"
-    q = agg.writeStream.outputMode("complete").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).select(
-        F.date_format(F.col("window.start"), "yyyy-MM-dd HH:mm:ss").alias("window_start"),
+    return _drain(agg, "complete").select(
+        F.date_format(F.col("window.start"), _TS).alias("window_start"),
         "n",
         "total_value",
     )
@@ -490,31 +455,13 @@ def dedup_within_watermark_stream(spark: SparkSession, sf_dir: str) -> DataFrame
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    name = f"stream_dedup_{next(_counter)}"
-    q = deduped.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return _drain(deduped, "append")
 
 
 register(
     "streaming_dedup_watermark",
     oracle="SELECT DISTINCT user_id, event_type FROM events",
 )(dedup_within_watermark_stream)
-
-
-def _upsert_store_paths(base: str) -> tuple[str, str, str]:
-    """(feed dir, store base dir, checkpoint dir) under one scratch
-    root."""
-    import os
-
-    return (
-        os.path.join(base, "feed"),
-        os.path.join(base, "store"),
-        os.path.join(base, "ckpt"),
-    )
 
 
 def _make_upsert_merge(spark: SparkSession, store_base: str):
@@ -530,9 +477,7 @@ def _make_upsert_merge(spark: SparkSession, store_base: str):
     replay) is detected and skipped — applying it twice would
     double-count. Returns ``merge(batch_df, batch_id)``."""
     import json
-    import os
 
-    os.makedirs(store_base, exist_ok=True)
     pointer = os.path.join(store_base, "CURRENT")
 
     def current() -> dict | None:
@@ -570,10 +515,10 @@ def _make_upsert_merge(spark: SparkSession, store_base: str):
             ).withColumnRenamed("last_total", "total_value")
         version = f"v{batch_id}_{len(applied)}"
         part.write.mode("overwrite").parquet(os.path.join(store_base, version))
-        tmp = pointer + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"version": version, "applied": sorted(applied | {batch_id})}, fh)
-        os.replace(tmp, pointer)  # atomic repoint = the commit
+        # atomic repoint = the commit
+        index_store.publish_json(
+            pointer, {"version": version, "applied": sorted(applied | {batch_id})}
+        )
 
     merge.current = current  # type: ignore[attr-defined]
     return merge
@@ -593,42 +538,16 @@ def foreach_batch_upsert_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the batch plus a |keys|-sized merge join; the store is the
     fact-sized side only when the key space is, and then it's a
     bucketed table."""
-    from ..plans.relational import _scratch_dir
-    from ..sources.parquet import load_table
-
     base = _scratch_dir("fbupsert", sf_dir)
-    # fresh run per invocation: a stale CURRENT pointer/checkpoint from
-    # a previous call in this process would mark every batch already
-    # applied (idempotence working as designed, but wrong for a rerun)
-    import shutil
-
-    shutil.rmtree(base, ignore_errors=True)
-    feed, store_base, ckpt = _upsert_store_paths(base)
-    events = load_table(spark, sf_dir, "events").select(
-        "user_id", "ts", "value"
-    )
-    events.repartition(4).write.mode("overwrite").parquet(feed)
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
-    merge = _make_upsert_merge(spark, store_base)
-    q = (
-        stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    import os
-
-    cur = merge.current()
-    final = spark.read.parquet(os.path.join(store_base, cur["version"]))
+    store = os.path.join(base, "store")
+    merge = _make_upsert_merge(spark, store)
+    events = load_table(spark, sf_dir, "events").select("user_id", "ts", "value")
+    _drain_feed(events, base, 4, merge)
+    final = spark.read.parquet(os.path.join(store, merge.current()["version"]))
     return final.select(
         "user_id",
         "n_events",
-        F.date_format(F.col("last_ts"), "yyyy-MM-dd HH:mm:ss").alias("last_ts"),
+        F.date_format(F.col("last_ts"), _TS).alias("last_ts"),
         F.round(F.col("total_value"), 2).alias("total_value"),
     )
 
@@ -703,15 +622,8 @@ def running_stats_tws_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="Update",
         timeMode="None",
     )
-    name = f"stream_tws_{next(_counter)}"
-    q = out.writeStream.outputMode("update").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     # update-mode sink: keep each user's final (largest-n) emission
-    latest = spark.table(name)
-    return latest.groupBy("user_id").agg(
+    return _drain(out, "update").groupBy("user_id").agg(
         F.max("n_events").alias("n_events"),
         F.round(F.max_by("total_value", "n_events"), 2).alias("total_value"),
     )
@@ -771,19 +683,8 @@ def chained_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         ten.groupBy(F.window(F.col("w10"), "1 hour").alias("w60"), "event_type")
         .agg(F.max("n10").alias("max_10min_n"), F.sum("n10").alias("n_total"))
     )
-    name = f"stream_chained_{next(_counter)}"
-    q = (
-        hourly.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).select(
-        F.date_format("w60.start", "yyyy-MM-dd HH:mm:ss").alias("hour_bucket"),
+    return _drain(hourly, "append").select(
+        F.date_format("w60.start", _TS).alias("hour_bucket"),
         "event_type",
         "max_10min_n",
         "n_total",
@@ -824,8 +725,6 @@ def seasonal_anomaly_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup a complete-mode aggregation. Same rounding discipline as
     the batch twin, so the finite file feed drains to the exact batch
     answer."""
-    from ..sources.parquet import load_table
-
     stream = _events_stream(spark, sf_dir)
     batch = load_table(spark, sf_dir, "events")
     g = batch.groupBy(F.hour("ts").alias("hod")).agg(
@@ -849,18 +748,7 @@ def seasonal_anomaly_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.sum("is_anom").cast("long").alias("n_anomalies"),
     )
-    name = f"stream_anomaly_{next(_counter)}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).select(
+    return _drain(agg, "complete").select(
         F.col("hod").cast("int").alias("hod"), "n_events", "n_anomalies"
     )
 
@@ -900,70 +788,29 @@ def neardup_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     neardup_of_corpus). Per-doc verdicts depend only on the persisted
     index, never on co-batched docs, so the drained result is
     batch-partitioning-invariant and equals the batch answer — which is
-    exactly what the oracle checks."""
-    import os
-    import shutil
-
+    exactly what the oracle checks. Nothing is appended to the index,
+    so the idempotent verdict write needs no done-marker."""
     from ..operators import dedup as D
     from ..plans.llm_pipeline import _ensure_minhash_index, _mh_split
-    from ..plans.relational import _scratch_dir
-    from ..sources.parquet import load_table
 
     idx_path = _ensure_minhash_index(spark, sf_dir)
     base = _scratch_dir("ndingest", sf_dir)
-    shutil.rmtree(base, ignore_errors=True)
-    feed, out, ckpt = (os.path.join(base, d) for d in ("feed", "out", "ckpt"))
+    out = os.path.join(base, "out")
     batch_docs = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") >= _mh_split(spark, sf_dir))
         .select("doc_id", "text")
     )
-    batch_docs.repartition(3).write.mode("overwrite").parquet(feed)
-    stream = (
-        spark.readStream.schema(batch_docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
 
     def probe(bdf: DataFrame, batch_id: int) -> None:
         cands = D.neardup_candidates_against_index(spark, idx_path, bdf)
-        roll = cands.groupBy(F.col("doc_b").alias("doc_id")).agg(
-            F.count(F.lit(1)).alias("n_corpus_candidates")
-        )
-        (
-            bdf.select("doc_id")
-            .join(roll, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.coalesce(F.col("n_corpus_candidates"), F.lit(0)).alias(
-                    "n_corpus_candidates"
-                ),
-            )
-            .withColumn("neardup_of_corpus", F.col("n_corpus_candidates") > 0)
-            # verdict idempotence (ADVICE r8): foreachBatch is
-            # at-least-once, so verdicts land in a batch_id partition
-            # via dynamic partition overwrite — a re-fired batch
-            # replaces its own rows instead of duplicating them.
-            # Clustered like the index writers (r11, guide §6/§2.5):
-            # batch_id is ONE value per write, so the doc_id salt alone
-            # sizes the write to a single wave of evenly loaded tasks.
-            .withColumn("batch_id", F.lit(int(batch_id)))
-            .transform(
-                lambda d: salted_by_partition(d, "batch_id", "doc_id", n_dirs=1)
-            )
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out)
+        verdicts = _candidate_verdicts(bdf.select("doc_id"), cands, "doc_b")
+        _write_verdicts(
+            verdicts.withColumn("neardup_of_corpus", F.col("n_corpus_candidates") > 0),
+            out, batch_id, "doc_id",
         )
 
-    q = (
-        stream.writeStream.foreachBatch(probe)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_feed(batch_docs, base, 3, probe)
     return spark.read.parquet(out).drop("batch_id")
 
 
@@ -1010,6 +857,92 @@ register("streaming_neardup_ingest", oracle=_neardup_ingest_oracle())(
 )
 
 
+def _ingest_callback(
+    spark: SparkSession,
+    kind: str,
+    idx: str,
+    out: str,
+    done_dir: str,
+    corpus: DataFrame,
+    corpus_max_id: int,
+):
+    """The foreachBatch callback that keeps the persisted vector index
+    at ``idx`` fresh — ``kind`` is its manifest kind, ``lsh`` (banded
+    ANN index) or ``ivfpq`` (compressed codes) — as a factory, so the
+    redelivery contract is unit-testable. Per (batch_df, batch_id):
+
+    1. a batch whose done-marker exists is a redelivery of a completed
+       batch: no-op;
+    2. compute the verdicts, (vec_id, n_corpus_candidates,
+       nearest_corpus_cosine), restricted to corpus ids ≤
+       ``corpus_max_id`` so they never depend on appended vectors;
+    3. write them exactly once (:func:`_write_verdicts`);
+    4. run the tier's append — a blind parquet append, which a re-fired
+       completed batch would double;
+    5. write the marker LAST.
+
+    A crash between the append and the marker replays the batch whole:
+    the verdict overwrite absorbs the replay, and the append re-runs.
+    Closing that window needs the stage-to-batch_id-prefix +
+    atomic-commit pattern a production object-store deployment would
+    use. ``corpus`` is the float corpus the IVF-PQ tier reranks
+    against; the LSH tier reads candidate floats from its own rows."""
+    from ..operators import similarity as S
+
+    def lsh_verdicts(bdf: DataFrame) -> DataFrame:
+        cands = S.ann_candidates_against_index(
+            spark, idx, bdf, corpus_max_id=corpus_max_id
+        )
+        return _candidate_verdicts(
+            bdf.select("vec_id"), cands, "qid",
+            F.max("cosine").alias("nearest_corpus_cosine"),
+        )
+
+    def ivfpq_verdicts(bdf: DataFrame) -> DataFrame:
+        return S.ivfpq_probe_batch(
+            spark, idx, bdf, corpus, corpus_max_id=corpus_max_id
+        ).withColumnRenamed("qid", "vec_id")
+
+    verdicts, append = {
+        "lsh": (lsh_verdicts, S.ann_index_append),
+        "ivfpq": (ivfpq_verdicts, S.ivfpq_index_append),
+    }[kind]
+
+    def probe_and_append(bdf: DataFrame, batch_id: int) -> None:
+        marker = os.path.join(done_dir, f"batch-{batch_id}")
+        if os.path.exists(marker):
+            return
+        _write_verdicts(verdicts(bdf), out, batch_id, "vec_id")
+        append(spark, idx, bdf)
+        os.makedirs(done_dir, exist_ok=True)
+        open(marker, "w").close()
+
+    return probe_and_append
+
+
+def _vector_ingest(spark: SparkSession, sf_dir: str, kind: str) -> DataFrame:
+    """The vector-ingest entries on the ``kind`` tier: index the corpus
+    (vec_ids below the split), then stream the top-quarter vec_ids in
+    as 3 files, one micro-batch each, through :func:`_ingest_callback`;
+    returns the drained verdicts."""
+    from ..operators import similarity as S
+    from ..plans.llm_pipeline import _vec_split
+
+    s = _vec_split(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
+    corpus = emb.filter(F.col("vec_id") < s)
+    idx = _scratch_dir(f"{kind}in_idx", sf_dir)
+    {"lsh": S.ann_index_write, "ivfpq": S.ivfpq_index_write}[kind](corpus, idx)
+    base = _scratch_dir(f"{kind}in", sf_dir)
+    out = os.path.join(base, "out")
+    callback = _ingest_callback(
+        spark, kind, idx, out, os.path.join(base, "done"), corpus, s - 1
+    )
+    batch = emb.filter(F.col("vec_id") >= s).select("vec_id", "embedding")
+    _drain_feed(batch, base, 3, callback)
+    return spark.read.parquet(out).drop("batch_id")
+
+
 def ann_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming VECTOR ingest against the persisted ANN index — the
     embedding twin of neardup_ingest_stream, and the shape that keeps a
@@ -1029,86 +962,10 @@ def ann_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     index, never on co-batched or earlier-streamed vectors — the
     drained result is batch-partitioning-invariant and equals the batch
     answer, which is what the oracle checks; the appends' correctness
-    is pinned by the ann_index_append unit invariants instead. Columns:
+    is pinned by the ann_index_append unit invariants, and their
+    redelivery safety by the ingest-callback test. Columns:
     (vec_id, n_corpus_candidates, nearest_corpus_cosine)."""
-    import shutil
-
-    from ..operators import similarity as S
-    from ..plans.llm_pipeline import _vec_split
-    from ..plans.relational import _scratch_dir
-    from ..sources.parquet import load_table
-
-    s = _vec_split(spark, sf_dir)
-    base = _scratch_dir("annin", sf_dir)
-    shutil.rmtree(base, ignore_errors=True)
-    feed, out, ckpt, idx = (
-        os.path.join(base, d) for d in ("feed", "out", "ckpt", "idx")
-    )
-    emb = load_table(spark, sf_dir, "embeddings")
-    S.ann_index_write(emb.filter(F.col("vec_id") < s), idx)
-    batch = emb.filter(F.col("vec_id") >= s).select("vec_id", "embedding")
-    batch.repartition(3).write.mode("overwrite").parquet(feed)
-    stream = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
-
-    done_dir = os.path.join(base, "done")
-    os.makedirs(done_dir, exist_ok=True)
-
-    def probe_and_append(bdf: DataFrame, batch_id: int) -> None:
-        # idempotence (ADVICE r7 + r8): foreachBatch is at-least-once.
-        # The VERDICT write overwrites its own batch_id partition
-        # (dynamic partition overwrite), so it is idempotent on its own
-        # — a crash anywhere and a retry replaces, never duplicates,
-        # the batch's verdict rows. The INDEX append stays a blind
-        # parquet append (a re-fired completed batch would double its
-        # band rows, breaking the ≤ cap-per-shard invariant), so the
-        # marker — written LAST — still guards it; a crash BETWEEN the
-        # index append and the marker still needs the
-        # stage-to-batch_id-prefix + atomic-commit pattern a production
-        # object-store deployment would use.
-        marker = os.path.join(done_dir, f"batch-{batch_id}")
-        if os.path.exists(marker):
-            return
-        cands = S.ann_candidates_against_index(spark, idx, bdf, corpus_max_id=s - 1)
-        roll = cands.groupBy(F.col("qid").alias("vec_id")).agg(
-            F.count(F.lit(1)).alias("n_corpus_candidates"),
-            F.max("cosine").alias("nearest_corpus_cosine"),
-        )
-        (
-            bdf.select("vec_id")
-            .join(roll, "vec_id", "left")
-            .select(
-                "vec_id",
-                F.coalesce(F.col("n_corpus_candidates"), F.lit(0)).alias(
-                    "n_corpus_candidates"
-                ),
-                "nearest_corpus_cosine",
-            )
-            .withColumn("batch_id", F.lit(int(batch_id)))
-            # clustered like the index writers (r11): vec_id salt, one
-            # write wave — see the neardup ingest writer
-            .transform(
-                lambda d: salted_by_partition(d, "batch_id", "vec_id", n_dirs=1)
-            )
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out)
-        )
-        S.ann_index_append(spark, idx, bdf)
-        open(marker, "w").close()
-
-    q = (
-        stream.writeStream.foreachBatch(probe_and_append)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(out).drop("batch_id")
+    return _vector_ingest(spark, sf_dir, "lsh")
 
 
 def _ann_ingest_oracle() -> str:
@@ -1154,58 +1011,6 @@ def _ann_ingest_oracle() -> str:
 register("streaming_ann_ingest", oracle=_ann_ingest_oracle())(ann_ingest_stream)
 
 
-def make_ivfpq_probe_append(
-    spark: SparkSession,
-    idx: str,
-    out: str,
-    done_dir: str,
-    corpus: DataFrame,
-    corpus_max_id: int,
-):
-    """The IVFPQ ingest foreachBatch callback as a testable factory
-    (VERDICT r9 #7 — the redelivery contract must be unit-pinnable,
-    like ``_make_upsert_merge``): per (batch_df, batch_id),
-
-    * VERDICTS are written by batch_id-partitioned DYNAMIC OVERWRITE
-      (ADVICE r8's idempotence rule): a redelivered batch replaces its
-      own verdict partition, never duplicating rows under another
-      batch's.
-    * the CODE-TABLE append (blind ``mode("append")`` into the cid
-      partitions) is guarded by the done-marker written LAST: a
-      redelivered batch whose marker exists is a no-op, and a crash
-      between append and marker replays the batch whole — verdict
-      overwrite absorbs the replay, and the append re-runs only if it
-      never completed (at-least-once storage append + idempotent
-      verdicts = exactly-once observable state once the marker lands).
-    """
-    from ..operators import similarity as S
-
-    def probe_and_append(bdf: DataFrame, batch_id: int) -> None:
-        marker = os.path.join(done_dir, f"batch-{batch_id}")
-        if os.path.exists(marker):
-            return
-        verdicts = S.ivfpq_probe_batch(
-            spark, idx, bdf, corpus, corpus_max_id=corpus_max_id
-        )
-        (
-            verdicts.withColumnRenamed("qid", "vec_id")
-            .withColumn("batch_id", F.lit(int(batch_id)))
-            # clustered like the index writers (r11): vec_id salt, one
-            # write wave — see the neardup ingest writer
-            .transform(
-                lambda d: salted_by_partition(d, "batch_id", "vec_id", n_dirs=1)
-            )
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out)
-        )
-        S.ivfpq_index_append(spark, idx, bdf)
-        open(marker, "w").close()
-
-    return probe_and_append
-
-
 def ivfpq_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming vector ingest against the persisted IVF-PQ index —
     the COMPRESSED-tier twin of ann_ingest_stream, and the shape a
@@ -1224,45 +1029,9 @@ def ivfpq_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     index that already contains today's vectors. Verdicts are
     corpus-restricted (batch-partitioning-invariant, which is what the
     oracle replays); appends are idempotent per batch_id (the marker
-    rule, ADVICE r7). Columns: (vec_id, n_corpus_candidates,
-    nearest_corpus_cosine)."""
-    import shutil
-
-    from ..operators import similarity as S
-    from ..plans.llm_pipeline import _vec_split
-    from ..plans.relational import _scratch_dir
-    from ..sources.parquet import load_table
-
-    s = _vec_split(spark, sf_dir)
-    base = _scratch_dir("ivfpqin", sf_dir)
-    shutil.rmtree(base, ignore_errors=True)
-    feed, out, ckpt, idx = (
-        os.path.join(base, d) for d in ("feed", "out", "ckpt", "idx")
-    )
-    emb = load_table(spark, sf_dir, "embeddings")
-    corpus = emb.filter(F.col("vec_id") < s)
-    S.ivfpq_index_write(corpus, idx)
-    batch = emb.filter(F.col("vec_id") >= s).select("vec_id", "embedding")
-    batch.repartition(3).write.mode("overwrite").parquet(feed)
-    stream = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
-    done_dir = os.path.join(base, "done")
-    os.makedirs(done_dir, exist_ok=True)
-    probe_and_append = make_ivfpq_probe_append(
-        spark, idx, out, done_dir, corpus, corpus_max_id=s - 1
-    )
-
-    q = (
-        stream.writeStream.foreachBatch(probe_and_append)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(out).drop("batch_id")
+    rule of :func:`_ingest_callback`). Columns: (vec_id,
+    n_corpus_candidates, nearest_corpus_cosine)."""
+    return _vector_ingest(spark, sf_dir, "ivfpq")
 
 
 def _ivfpq_ingest_oracle() -> str:

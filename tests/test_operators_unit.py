@@ -2322,6 +2322,51 @@ def test_ivfpq_retrain_crash_leaves_index_absent(spark, tmp_path, monkeypatch):
     assert index_store.load(path, "ivfpq") == index_store.load(ref, "ivfpq")
 
 
+def test_ivfpq_refused_rewrite_keeps_live_index(spark, tmp_path):
+    """A rewrite whose ``pq_codes`` the TINYINT code cannot hold is
+    refused BEFORE the live index is touched: the previously committed
+    manifest and codes stay readable. (Refusing it only at the cast
+    would retract the manifest first and leave the index absent.)"""
+    emb = load_table(spark, SF_SMALL, "embeddings")
+    path = str(tmp_path / "ivfpq_refused")
+    similarity.ivfpq_index_write(emb, path)
+    man = index_store.load(path, "ivfpq")
+
+    def codes():
+        return sorted(
+            (r.vec_id, r.cid, tuple(r.codes))
+            for r in spark.read.parquet(f"{path}/codes").collect()
+        )
+
+    before = codes()
+    for bad in (0, 129, 200):
+        with pytest.raises(ValueError, match=f"pq_codes={bad}"):
+            similarity.ivfpq_index_write(emb, path, sample_mod=None, pq_codes=bad)
+    assert index_store.load(path, "ivfpq") == man
+    assert codes() == before
+
+
+def test_run_concurrent_jobs_keep_callers_job_group(spark):
+    """Jobs started from ``run_concurrent``'s thread pool inherit the
+    caller's job group, so they are charged to the query that started
+    them."""
+    from mapreduce_itwiki_spark.functions.par import run_concurrent
+
+    sc = spark.sparkContext
+    group = "run_concurrent_job_group_test"
+    sc.setJobGroup(group, "run_concurrent inherits local properties")
+    try:
+        counts = run_concurrent(
+            lambda: spark.range(10).count(), lambda: spark.range(20).count()
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    assert counts == [10, 20]
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 2
+
+
 def test_ivf_write_with_failed_centroids_is_not_accepted(
     spark, tmp_path, monkeypatch
 ):

@@ -137,31 +137,15 @@ def test_bucketed_join_query_is_shuffle_free(spark):
 
 
 def test_no_cartesian_or_rowwise_python_anywhere(spark):
-    """GLOBAL plan hygiene over the whole catalog, fused with the
-    GLOBAL output-schema gate (optimization r11, VERDICT r10 #7: these
-    two full-catalog sweeps were the suite's two slowest tests, and
-    each built every catalog DataFrame independently — including the
-    lifecycle entries that EXECUTE index writes on construction — so
-    fusing them halves the most expensive constructions and ~190 s of
-    suite wall time; every assertion of both gates is unchanged).
-
-    Gate 1 — plan hygiene: no query may plan a CartesianProduct
-    (unbounded pair blow-up) or BatchEvalPython (row-at-a-time Python
-    UDF — the non-Arrow slow path). Arrow-batched Python
-    (ArrowEvalPython / MapInPandas / FlatMapGroupsInPandas /
+    """GLOBAL plan hygiene over the whole catalog: no query may plan a
+    CartesianProduct (unbounded pair blow-up) or BatchEvalPython
+    (row-at-a-time Python UDF — the non-Arrow slow path). Arrow-batched
+    Python (ArrowEvalPython / MapInPandas / FlatMapGroupsInPandas /
     PythonUDTF) is the sanctioned boundary. Streaming/sink queries that
     execute eagerly on build are exercised by the parity suite instead
-    (the ``skip`` set below applies to THIS gate only).
-
-    Gate 2 — output schema (VERDICT r9 #1): the driver harness
-    canonicalizes every query's result through a pandas lexsort, which
-    raises `unhashable type` on list/dict cells — so NO registered
-    query may emit an ArrayType/MapType/StructType column at top level
-    (collect_set_agg was the one offender; it now array_joins). This
-    check is analysis-only (df.schema never executes the plan) and
-    covers EVERY entry, including the eager-on-build ones."""
-    from pyspark.sql.types import ArrayType, MapType, StructType
-
+    and are never built here (the ``skip`` set); the top-level output
+    schema gate covers every entry in ``test_query_matches_oracle``,
+    which builds each one anyway."""
     skip = {
         # these EXECUTE on construction (streaming drains, table/file
         # writes) — plan text of the final select isn't the interesting
@@ -191,22 +175,13 @@ def test_no_cartesian_or_rowwise_python_anywhere(spark):
         "ann_ivf_index_retrain_measured",
         "ann_policy_retune_loop",
     }
-    plan_offenders = {}
-    schema_offenders = {}
+    offenders = {}
     for name, fn in sorted(catalog.queries().items()):
-        df = fn(spark, SF_SMALL)  # built ONCE for both gates
-        bad_cols = [
-            f"{f.name}: {f.dataType.simpleString()}"
-            for f in df.schema.fields
-            if isinstance(f.dataType, (ArrayType, MapType, StructType))
-        ]
-        if bad_cols:
-            schema_offenders[name] = bad_cols
         if name in skip:
             continue
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
+            fn(spark, SF_SMALL).explain("formatted")
         plan = buf.getvalue()
         bad = [
             marker
@@ -214,11 +189,8 @@ def test_no_cartesian_or_rowwise_python_anywhere(spark):
             if marker in plan
         ]
         if bad:
-            plan_offenders[name] = bad
-    assert not (plan_offenders or schema_offenders), {
-        "plan": plan_offenders,
-        "schema": schema_offenders,
-    }
+            offenders[name] = bad
+    assert not offenders, offenders
 
 
 def test_partitioned_query_prunes_at_plan_time(spark):

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import itertools
 
+import pytest
 from pyspark.sql import functions as F
 
 from mapreduce_itwiki_spark.sources.parquet import load_table
@@ -196,19 +197,21 @@ def test_foreachbatch_exactly_once_style_sink(spark, tmp_path):
     )
 
 
-def test_ivfpq_ingest_redelivery_exactly_once(spark, tmp_path):
-    """The IVFPQ ingest callback must be EXACTLY-ONCE for BOTH outputs
-    under a redelivered (batch_df, batch_id) pair (VERDICT r9 #7 — the
-    IVF-PQ twin of the LSH-tier assertion): verdict rows are
-    batch_id-partitioned dynamic overwrites (a replay replaces its own
-    partition) and the code-table append is guarded by the done-marker
-    written last (a replay is a no-op). Verdicts must also survive a
-    marker-deleted replay (crash before the marker landed) without
-    duplicating — the overwrite absorbs it."""
+@pytest.mark.parametrize("tier", ["lsh", "ivfpq"])
+def test_ivfpq_ingest_redelivery_exactly_once(spark, tmp_path, tier):
+    """The vector-ingest callback must be EXACTLY-ONCE for BOTH outputs
+    under a redelivered (batch_df, batch_id) pair, on the LSH and the
+    IVF-PQ tier alike: verdict rows are batch_id-partitioned dynamic
+    overwrites (a replay replaces its own partition) and the index
+    append is guarded by the done-marker written last (a replay is a
+    no-op). Verdicts must also survive a marker-deleted replay (crash
+    before the marker landed) without duplicating — the overwrite
+    absorbs it."""
     import os
 
+    from mapreduce_itwiki_spark.operators import index_store
     from mapreduce_itwiki_spark.operators import similarity as S
-    from mapreduce_itwiki_spark.streaming.events import make_ivfpq_probe_append
+    from mapreduce_itwiki_spark.streaming.events import _ingest_callback
 
     emb = load_table(spark, SF_SMALL, "embeddings")
     top = emb.agg(F.max("vec_id")).collect()[0][0]
@@ -217,8 +220,16 @@ def test_ivfpq_ingest_redelivery_exactly_once(spark, tmp_path):
     idx, out = str(tmp_path / "idx"), str(tmp_path / "out")
     done = str(tmp_path / "done")
     os.makedirs(done)
-    S.ivfpq_index_write(corpus, idx)
-    cb = make_ivfpq_probe_append(spark, idx, out, done, corpus, corpus_max_id=s - 1)
+    # per tier: the writer, the index's row table and partition column,
+    # the columns that identify a stored row, rows stored per vector
+    write, rows_dir, part, row_cols, per_vec = {
+        "lsh": (S.ann_index_write, idx, "pkey",
+                ("vec_id", "band_id", "band_key", "shard"), S.LSH_BANDS),
+        "ivfpq": (S.ivfpq_index_write, f"{idx}/codes", "cid",
+                  ("vec_id", "cid", "codes"), 1),
+    }[tier]
+    write(corpus, idx)
+    cb = _ingest_callback(spark, tier, idx, out, done, corpus, corpus_max_id=s - 1)
     batch = emb.filter(F.col("vec_id") >= s).select("vec_id", "embedding")
     halves = [
         batch.filter(F.col("vec_id") % 2 == 0),
@@ -236,14 +247,15 @@ def test_ivfpq_ingest_redelivery_exactly_once(spark, tmp_path):
 
     def codes():
         return sorted(
-            (r.vec_id, r.cid, tuple(r.codes))
-            for r in spark.read.parquet(f"{idx}/codes").collect()
+            tuple(tuple(v) if isinstance(v, list) else v for v in r)
+            for r in spark.read.parquet(rows_dir).select(*row_cols).collect()
         )
 
     first_v, first_c = verdicts(), codes()
-    # every corpus + batch vector coded exactly once already
-    assert len(first_c) == emb.count()
-    assert len({v for v, _, _ in first_c}) == len(first_c)
+    # every corpus + batch vector indexed exactly once (per band) already
+    assert len(first_c) == emb.count() * per_vec
+    assert len(set(first_c)) == len(first_c)
+    assert len({c[0] for c in first_c}) == emb.count()
 
     cb(halves[0], 0)  # redelivered after completion: marker no-op
     cb(halves[1], 1)
@@ -258,15 +270,17 @@ def test_ivfpq_ingest_redelivery_exactly_once(spark, tmp_path):
     os.remove(os.path.join(done, "batch-1"))
     import shutil
 
-    # roll the code table back to the pre-replay state the crash left
-    # (append had not run): drop half-1's code rows
+    # roll the index rows back to the pre-replay state the crash left
+    # (append had not run): drop half-1's rows, keep the manifest
+    man = index_store.load(idx, tier)
     kept = (
-        spark.read.parquet(f"{idx}/codes")
+        spark.read.parquet(rows_dir)
         .filter(~((F.col("vec_id") >= s) & (F.col("vec_id") % 2 == 1)))
         .localCheckpoint()
     )
-    shutil.rmtree(f"{idx}/codes")
-    kept.write.mode("overwrite").partitionBy("cid").parquet(f"{idx}/codes")
+    shutil.rmtree(rows_dir)
+    kept.write.mode("overwrite").partitionBy(part).parquet(rows_dir)
+    index_store.commit(idx, **man)
     cb(halves[1], 1)
     assert verdicts() == first_v
     assert codes() == first_c

@@ -55,8 +55,8 @@ def main() -> None:
     qs = catalog.queries()
     for _ in range(warmups):
         qs[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
-    # jobs are attributed by submission time: thread-pool jobs
-    # (run_concurrent) do not inherit a job group or description
+    # jobs are attributed by submission time; run_concurrent's pool
+    # threads inherit the caller's job group, but this run sets none
     t0 = time.perf_counter()
     epoch0 = time.time() * 1000
     qs[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
