@@ -4,19 +4,32 @@ Images/audio/video are opaque ``binary`` columns plus typed metadata;
 the Spark-side contract — schema, Arrow batch shape, partitioning —
 is real and tested. Four codecs are REAL pure-stdlib implementations
 (PNG, baseline JPEG, WAV PCM16, animated GIF — no image/audio
-libraries in this container); formats that genuinely need external
-libraries sit behind a clearly marked NotImplementedError plus a
-deterministic fake for plumbing tests.
+libraries in this container); formats that need external libraries
+(WebP, H.264, MP3, …) are not decoded, and a deterministic fake
+(:func:`fake_decode`) stands in for them in the plumbing operators.
+Every decoder raises ``ValueError`` — and only that — on malformed or
+truncated input.
+
+One row map: every per-blob operator is a call to :func:`map_rows`,
+the single Arrow-batched ``mapInPandas`` loop, whose row function
+yields output tuples (1→1 stats, 1→N frame fan-out, 1→0 drop).
+
+One JPEG kernel: the gray and the 4:2:0 color codecs are two component
+layouts of one baseline codec — :func:`_jpeg_encode` (quantize, MCU
+scan, header writer) and :func:`_jpeg_decode` (marker walk, Huffman
+block read, IDCT plane), both driven by the SOF sampling factors
+through :func:`_mcu_order`.
 
 Scale notes: blobs ride the same parquet row groups as their metadata;
 ``spark.sql.files.maxPartitionBytes`` governs scan granularity, and all
-per-blob work is ``mapInPandas`` (Arrow-batched, per-partition) so a
-100 TB corpus decodes embarrassingly parallel with zero shuffles.
+per-blob work is one Arrow-batched, per-partition map, so a 100 TB
+corpus decodes embarrassingly parallel with zero shuffles.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import math
+from collections.abc import Callable, Iterable, Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -54,14 +67,29 @@ def attach_blob(docs: DataFrame) -> DataFrame:
     )
 
 
-def decode_blob(payload: bytes) -> list[float]:
-    """REAL codec entry point for formats needing external libraries
-    (WebP, H.264/MP4, MP3/Opus, …) — not available in this container.
-    Four formats have REAL pure-stdlib implementations below — PNG
-    (:func:`decode_png_gray`), JPEG (:func:`decode_jpeg_gray`), WAV
-    (:func:`decode_wav_pcm16`), animated GIF (:func:`decode_gif_gray`);
-    swap this in for the rest when codec libs exist on the executors."""
-    raise NotImplementedError("codec libraries (PIL/ffmpeg/soundfile) not installed")
+def map_rows(
+    df: DataFrame,
+    cols: Sequence[str],
+    fn: Callable[..., Iterable[tuple]],
+    schema: T.StructType | str,
+) -> DataFrame:
+    """The one per-row map of the multimodal family: ``fn(*row)`` over
+    the ``cols`` of each input row yields output tuples in ``schema``
+    order — one tuple (1→1), several (1→N fan-out) or none (1→0 drop).
+    Runs as a single Arrow-batched ``mapInPandas``: per partition, no
+    shuffle. ``schema`` is a StructType or a DDL string."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    names = schema.fieldNames()
+
+    def run(batches):
+        for pdf in batches:
+            yield pd.DataFrame.from_records(
+                [out for row in zip(*(pdf[c] for c in cols)) for out in fn(*row)],
+                columns=names,
+            )
+
+    return df.mapInPandas(run, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -113,10 +141,15 @@ def decode_png_gray(payload: bytes) -> tuple[int, int, bytes]:
         raise ValueError("not a PNG")
     pos, width, height, idat = 8, 0, 0, b""
     while pos < len(payload):
-        (length,) = struct.unpack(">I", payload[pos : pos + 4])
+        # a short length field reads small, so the bound below still trips
+        length = int.from_bytes(payload[pos : pos + 4], "big")
+        if pos + 12 + length > len(payload):
+            raise ValueError("truncated PNG chunk")
         typ = payload[pos + 4 : pos + 8]
         data = payload[pos + 8 : pos + 8 + length]
         if typ == b"IHDR":
+            if length != 13:
+                raise ValueError("bad IHDR length")
             width, height, depth, color, _, _, interlace = struct.unpack(
                 ">IIBBBBB", data
             )
@@ -127,7 +160,14 @@ def decode_png_gray(payload: bytes) -> tuple[int, int, bytes]:
         elif typ == b"IEND":
             break
         pos += 12 + length
-    raw = zlib.decompress(idat)
+    if not width or not idat:
+        raise ValueError("missing IHDR/IDAT")
+    try:
+        raw = zlib.decompress(idat)
+    except zlib.error as e:
+        raise ValueError(f"corrupt IDAT stream: {e}") from None
+    if len(raw) < height * (width + 1):
+        raise ValueError("IDAT shorter than the image")
     out = bytearray()
     stride = width
     prev = bytearray(stride)
@@ -159,19 +199,13 @@ def fake_decode(payload: bytes, n_features: int = 4) -> list[float]:
 def extract_features(blobs: DataFrame) -> DataFrame:
     """Arrow-batched per-partition feature extraction over blob columns —
     the multimodal hot path (decode / resize / frame-sample all share
-    this mapInPandas shape)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_bytes": [len(b) for b in pdf["blob"]],
-                    "feature": [fake_decode(b) for b in pdf["blob"]],
-                }
-            )
-
-    return blobs.mapInPandas(run, FEATURE_SCHEMA)
+    this :func:`map_rows` shape)."""
+    return map_rows(
+        blobs,
+        ("doc_id", "blob"),
+        lambda doc_id, blob: [(doc_id, len(blob), fake_decode(blob))],
+        FEATURE_SCHEMA,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -199,7 +233,9 @@ def encode_wav_pcm16(samples: list[int], sample_rate: int = 8000) -> bytes:
 
 def decode_wav_pcm16(payload: bytes) -> tuple[int, list[int]]:
     """Decode a 16-bit PCM mono WAV → (sample_rate, samples). Walks RIFF
-    chunks properly (tolerates extra chunks a foreign encoder inserts)."""
+    chunks properly (tolerates extra chunks a foreign encoder inserts);
+    a chunk shorter than its declared length is an error, not a short
+    read."""
     import struct
 
     if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
@@ -209,54 +245,45 @@ def decode_wav_pcm16(payload: bytes) -> tuple[int, list[int]]:
         typ = payload[pos : pos + 4]
         (length,) = struct.unpack("<I", payload[pos + 4 : pos + 8])
         data = payload[pos + 8 : pos + 8 + length]
+        if len(data) < length:
+            raise ValueError(f"truncated {typ!r} chunk")
         if typ == b"fmt ":
+            if length < 16:
+                raise ValueError("short fmt chunk")
             audio_fmt, channels, rate, _, _, bits = struct.unpack("<HHIIHH", data[:16])
             if audio_fmt != 1 or channels != 1 or bits != 16:
                 raise ValueError("only 16-bit PCM mono supported")
         elif typ == b"data":
-            samples = [
-                struct.unpack("<h", data[i : i + 2])[0] for i in range(0, len(data), 2)
-            ]
+            if length % 2:
+                raise ValueError("odd-length 16-bit data chunk")
+            samples = list(struct.unpack(f"<{length // 2}h", data))
         pos += 8 + length + (length % 2)  # RIFF chunks are word-aligned
     if rate is None or samples is None:
         raise ValueError("missing fmt/data chunk")
     return rate, samples
 
 
+def _rms(xs) -> float:
+    """Root mean square at 6 decimals: exact for the integer (or
+    binary-fraction) samples the audio oracles replay."""
+    return round(math.sqrt(sum(x * x for x in xs) / len(xs)), 6)
+
+
 def audio_stats(audio: DataFrame, blob_col: str = "wav") -> DataFrame:
-    """REAL audio decode over a WAV blob column: mapInPandas runs the
-    stdlib PCM decoder per blob and emits (n_samples, duration, RMS) —
-    the audio feature-extraction shape with a working codec."""
-    import math
+    """REAL audio decode over a WAV blob column: the stdlib PCM decoder
+    runs per blob and emits (n_samples, duration, RMS) — the audio
+    feature-extraction shape with a working codec."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n_l, dur_l, rms_l = [], [], []
-            for blob in pdf[blob_col]:
-                rate, samples = decode_wav_pcm16(bytes(blob))
-                n_l.append(len(samples))
-                dur_l.append(round(len(samples) / rate, 6))
-                rms_l.append(
-                    round(math.sqrt(sum(s * s for s in samples) / len(samples)), 6)
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_samples": n_l,
-                    "duration_sec": dur_l,
-                    "rms": rms_l,
-                }
-            )
+    def row(doc_id, blob):
+        rate, samples = decode_wav_pcm16(bytes(blob))
+        yield doc_id, len(samples), round(len(samples) / rate, 6), _rms(samples)
 
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("n_samples", T.IntegerType()),
-            T.StructField("duration_sec", T.DoubleType()),
-            T.StructField("rms", T.DoubleType()),
-        ]
+    return map_rows(
+        audio,
+        ("doc_id", blob_col),
+        row,
+        "doc_id long, n_samples int, duration_sec double, rms double",
     )
-    return audio.mapInPandas(run, schema)
 
 
 def audio_frame_energy(
@@ -269,32 +296,15 @@ def audio_frame_energy(
     pipeline runs (VAD, silence trimming, energy filtering). Integer
     samples make the energy sums exact, so the oracle replays them
     bit-for-bit."""
-    import math
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            doc_l, frame_l, energy_l = [], [], []
-            for doc_id, blob in zip(pdf["doc_id"], pdf[blob_col]):
-                _, samples = decode_wav_pcm16(bytes(blob))
-                for f in range(len(samples) // frame):
-                    chunk = samples[f * frame : (f + 1) * frame]
-                    doc_l.append(doc_id)
-                    frame_l.append(f)
-                    energy_l.append(
-                        round(math.sqrt(sum(s * s for s in chunk) / frame), 6)
-                    )
-            yield pd.DataFrame(
-                {"doc_id": doc_l, "frame_id": frame_l, "energy": energy_l}
-            )
+    def row(doc_id, blob):
+        _, samples = decode_wav_pcm16(bytes(blob))
+        for f in range(len(samples) // frame):
+            yield doc_id, f, _rms(samples[f * frame : (f + 1) * frame])
 
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("frame_id", T.IntegerType()),
-            T.StructField("energy", T.DoubleType()),
-        ]
+    return map_rows(
+        audio, ("doc_id", blob_col), row, "doc_id long, frame_id int, energy double"
     )
-    return audio.mapInPandas(run, schema)
 
 
 def audio_resample_stats(
@@ -308,39 +318,22 @@ def audio_resample_stats(
     normalization step an audio curation pipeline runs before feature
     extraction. Integer inputs keep the tap averages exact binary
     fractions, so the oracle replays the math bit-for-bit. Zero
-    shuffle: Arrow-batched mapInPandas end to end."""
-    import math
+    shuffle: one Arrow-batched map end to end."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n_l, dur_l, rms_l = [], [], []
-            for blob in pdf[blob_col]:
-                rate, samples = decode_wav_pcm16(bytes(blob))
-                ys = [
-                    sum(samples[k * factor : (k + 1) * factor]) / factor
-                    for k in range(len(samples) // factor)
-                ]
-                n_l.append(len(ys))
-                dur_l.append(round(len(ys) / (rate // factor), 6))
-                rms_l.append(round(math.sqrt(sum(y * y for y in ys) / len(ys)), 6))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_samples": n_l,
-                    "duration_sec": dur_l,
-                    "rms": rms_l,
-                }
-            )
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("n_samples", T.IntegerType()),
-            T.StructField("duration_sec", T.DoubleType()),
-            T.StructField("rms", T.DoubleType()),
+    def row(doc_id, blob):
+        rate, samples = decode_wav_pcm16(bytes(blob))
+        ys = [
+            sum(samples[k * factor : (k + 1) * factor]) / factor
+            for k in range(len(samples) // factor)
         ]
+        yield doc_id, len(ys), round(len(ys) / (rate // factor), 6), _rms(ys)
+
+    return map_rows(
+        audio,
+        ("doc_id", blob_col),
+        row,
+        "doc_id long, n_samples int, duration_sec double, rms double",
     )
-    return audio.mapInPandas(run, schema)
 
 
 def image_histogram(
@@ -349,83 +342,57 @@ def image_histogram(
     """Pixel-intensity histogram over a decoded image blob column —
     the image-statistics feature (exposure/contrast screening) in long
     form (doc_id, bin, n_pixels), all ``n_bins`` bins present per image
-    so the output shape is deterministic. Decode runs per-blob in
-    Arrow-batched mapInPandas; counting is exact integer work."""
+    so the output shape is deterministic. Decode runs per blob in one
+    Arrow-batched map; counting is exact integer work."""
     dec = decoder or decode_png_gray
     width_per_bin = 256 // n_bins
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            doc_l, bin_l, n_l = [], [], []
-            for doc_id, blob in zip(pdf["doc_id"], pdf[blob_col]):
-                _, _, pixels = dec(bytes(blob))
-                counts = [0] * n_bins
-                for p in pixels:
-                    counts[p // width_per_bin] += 1
-                for b, c in enumerate(counts):
-                    doc_l.append(doc_id)
-                    bin_l.append(b)
-                    n_l.append(c)
-            yield pd.DataFrame({"doc_id": doc_l, "bin": bin_l, "n_pixels": n_l})
+    def row(doc_id, blob):
+        _, _, pixels = dec(bytes(blob))
+        counts = [0] * n_bins
+        for p in pixels:
+            counts[p // width_per_bin] += 1
+        for b, c in enumerate(counts):
+            yield doc_id, b, c
 
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("bin", T.IntegerType()),
-            T.StructField("n_pixels", T.LongType()),
-        ]
+    return map_rows(
+        images, ("doc_id", blob_col), row, "doc_id long, bin int, n_pixels long"
     )
-    return images.mapInPandas(run, schema)
 
 
 def image_stats(images: DataFrame, blob_col: str = "png", decoder=None) -> DataFrame:
-    """REAL image decode over an image blob column: Arrow-batched
-    mapInPandas runs a working in-repo decoder per blob (PNG by
-    default; pass ``decoder=decode_jpeg_gray`` for JPEG) and emits
-    typed stats (dims + mean pixel). This is the actual 100 TB
-    multimodal shape — binary column in, decoded features out, zero
-    shuffles — with a working codec rather than a stub."""
+    """REAL image decode over an image blob column: an Arrow-batched
+    map runs a working in-repo decoder per blob (PNG by default; pass
+    ``decoder=decode_jpeg_gray`` for JPEG) and emits typed stats (dims +
+    mean pixel). This is the actual 100 TB multimodal shape — binary
+    column in, decoded features out, zero shuffles — with a working
+    codec rather than a stub."""
     decode = decoder or decode_png_gray
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            w_l, h_l, mean_l = [], [], []
-            for blob in pdf[blob_col]:
-                w, h, px = decode(bytes(blob))
-                w_l.append(w)
-                h_l.append(h)
-                # round 6: a mean of n=2^k bytes has <= 6 fractional
-                # decimal digits, so this is EXACT — rounding to fewer
-                # digits hits half-way ties where Python (banker's) and
-                # SQL (half-up) disagree
-                mean_l.append(round(sum(px) / len(px), 6))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": w_l,
-                    "height": h_l,
-                    "mean_pixel": mean_l,
-                }
-            )
+    def row(doc_id, blob):
+        w, h, px = decode(bytes(blob))
+        # round 6: a mean of n=2^k bytes has <= 6 fractional decimal
+        # digits, so this is EXACT — rounding to fewer digits hits
+        # half-way ties where Python (banker's) and SQL (half-up) disagree
+        yield doc_id, w, h, round(sum(px) / len(px), 6)
 
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("mean_pixel", T.DoubleType()),
-        ]
+    return map_rows(
+        images,
+        ("doc_id", blob_col),
+        row,
+        "doc_id long, width int, height int, mean_pixel double",
     )
-    return images.mapInPandas(run, schema)
 
 
 # ---------------------------------------------------------------------------
-# REAL JPEG codec (baseline DCT, 8-bit grayscale), no codec libraries:
-# forward/inverse DCT (numpy matrix form), quantization, zigzag, and
-# ITU T.81 Annex-K Huffman entropy coding, with proper byte stuffing.
-# The image twin of the PNG path for the lossy-format family — encoder
-# emits standard JFIF files any viewer can open; decoder handles any
-# baseline non-interlaced grayscale JPEG (tables read from the file).
+# REAL JPEG codec (baseline DCT, 8-bit gray and 4:2:0 color), no codec
+# libraries: forward/inverse DCT (numpy matrix form), quantization,
+# zigzag, and ITU T.81 Annex-K Huffman entropy coding, with proper byte
+# stuffing. The image twin of the PNG path for the lossy-format family —
+# encoder emits standard JFIF files any viewer can open; decoder handles
+# baseline non-interlaced files of its layout (tables read from the
+# file). One kernel serves both layouts: the component list and its
+# sampling factors are the only difference.
 
 _ZIGZAG = [
     0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
@@ -509,230 +476,8 @@ class _BitWriter:
             self.write(1, 1)  # pad to byte boundary with 1-bits
 
 
-def encode_jpeg_gray(pixels: bytes, width: int) -> bytes:
-    """Encode 8-bit grayscale pixels (row-major, dims multiples of 8) as
-    a standard baseline JFIF: level shift, batched orthonormal DCT,
-    quantization (_JPEG_QT), zigzag, Annex-K Huffman."""
-    import struct
-
-    import numpy as np
-
-    if width <= 0 or width % 8 or len(pixels) % width:
-        raise ValueError("width and height must be positive multiples of 8")
-    height = len(pixels) // width
-    if height % 8:
-        raise ValueError("width and height must be positive multiples of 8")
-
-    img = np.frombuffer(pixels, dtype=np.uint8).reshape(height, width)
-    blocks = (
-        img.reshape(height // 8, 8, width // 8, 8)
-        .transpose(0, 2, 1, 3)
-        .reshape(-1, 8, 8)
-        .astype(np.float64)
-        - 128.0
-    )
-    C = _dct_matrix()
-    coefs = C @ blocks @ C.T  # batched 2-D DCT
-    qt = np.array(_JPEG_QT, dtype=np.float64).reshape(8, 8)
-    quant = np.rint(coefs / qt).astype(np.int64)
-
-    dc_codes = _huff_codes(_DC_BITS, _DC_VALS)
-    ac_codes = _huff_codes(_AC_BITS, _AC_VALS)
-    w = _BitWriter()
-    prev_dc = 0
-    flat = quant.reshape(-1, 64)
-    for blk in flat:
-        zz = [int(blk[z]) for z in _ZIGZAG]
-        s, bits = _cat_bits(zz[0] - prev_dc)
-        prev_dc = zz[0]
-        code, length = dc_codes[s]
-        w.write(code, length)
-        if s:
-            w.write(bits, s)
-        run = 0
-        for k in range(1, 64):
-            if zz[k] == 0:
-                run += 1
-                continue
-            while run > 15:
-                code, length = ac_codes[0xF0]  # ZRL
-                w.write(code, length)
-                run -= 16
-            s, bits = _cat_bits(zz[k])
-            code, length = ac_codes[(run << 4) | s]
-            w.write(code, length)
-            w.write(bits, s)
-            run = 0
-        if run:
-            code, length = ac_codes[0x00]  # EOB
-            w.write(code, length)
-    w.flush()
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(payload) + 2) + payload
-
-    out = b"\xff\xd8"
-    out += seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    out += seg(0xDB, b"\x00" + bytes(_JPEG_QT[_ZIGZAG[i]] for i in range(64)))
-    out += seg(0xC0, struct.pack(">BHHB", 8, height, width, 1) + bytes([1, 0x11, 0]))
-    out += seg(0xC4, bytes([0x00] + _DC_BITS + _DC_VALS))
-    out += seg(0xC4, bytes([0x10] + _AC_BITS + _AC_VALS))
-    out += seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
-    return out + bytes(w.buf) + b"\xff\xd9"
-
-
-class _BitReader:
-    def __init__(self, data: bytes) -> None:
-        self.data = data
-        self.pos = 0
-        self.acc = 0
-        self.n = 0
-
-    def bit(self) -> int:
-        if self.n == 0:
-            b = self.data[self.pos]
-            self.pos += 1
-            if b == 0xFF:  # un-stuff FF00
-                if self.pos >= len(self.data) or self.data[self.pos] != 0x00:
-                    raise ValueError("unexpected marker in entropy data")
-                self.pos += 1
-            self.acc = b
-            self.n = 8
-        self.n -= 1
-        return (self.acc >> self.n) & 1
-
-    def bits(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | self.bit()
-        return v
-
-
-def _extend(v: int, s: int) -> int:
-    return v if v >= (1 << (s - 1)) else v - (1 << s) + 1
-
-
-def decode_jpeg_gray(payload: bytes) -> tuple[int, int, bytes]:
-    """Decode a baseline non-interlaced grayscale JPEG → (width, height,
-    pixels). All tables are read from the file (DQT/DHT/SOF0/SOS walked
-    per T.81) rather than assumed, so foreign single-component baseline
-    files decode too — within two restrictions this decoder does NOT
-    lift: dimensions must be multiples of 8 (no partial-MCU edge
-    handling) and restart markers (DRI/RSTn) are not supported. This
-    module's encoder always satisfies both."""
-    import struct
-
-    import numpy as np
-
-    if payload[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG")
-    pos = 2
-    qtables: dict[int, list[int]] = {}
-    htables: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
-    width = height = 0
-    dc_id = ac_id = qt_id = 0
-    scan_start = None
-    while pos + 4 <= len(payload):
-        if payload[pos] != 0xFF:
-            raise ValueError("bad marker")
-        marker = payload[pos + 1]
-        (length,) = struct.unpack(">H", payload[pos + 2 : pos + 4])
-        data = payload[pos + 4 : pos + 2 + length]
-        if marker == 0xDB:
-            off = 0
-            while off < len(data):
-                pq, tq = data[off] >> 4, data[off] & 0xF
-                if pq != 0:
-                    raise ValueError("only 8-bit quant tables supported")
-                zz = list(data[off + 1 : off + 65])
-                nat = [0] * 64
-                for i, z in enumerate(_ZIGZAG):
-                    nat[z] = zz[i]
-                qtables[tq] = nat
-                off += 65
-        elif marker == 0xC4:
-            off = 0
-            while off < len(data):
-                tc, th = data[off] >> 4, data[off] & 0xF
-                bits = list(data[off + 1 : off + 17])
-                nsyms = sum(bits)
-                vals = list(data[off + 17 : off + 17 + nsyms])
-                dec: dict[tuple[int, int], int] = {}
-                code, k = 0, 0
-                for ln in range(1, 17):
-                    for _ in range(bits[ln - 1]):
-                        dec[(ln, code)] = vals[k]
-                        code += 1
-                        k += 1
-                    code <<= 1
-                htables[(tc, th)] = dec
-                off += 17 + nsyms
-        elif marker == 0xC0:
-            _, height, width, ncomp = struct.unpack(">BHHB", data[:6])
-            if ncomp != 1 or data[7] != 0x11:
-                raise ValueError("only single-component 1x1 baseline supported")
-            qt_id = data[8]
-        elif marker in (0xC1, 0xC2, 0xC3):
-            raise ValueError("only baseline (SOF0) supported")
-        elif marker == 0xDA:
-            dc_id, ac_id = data[2] >> 4, data[2] & 0xF
-            scan_start = pos + 2 + length
-            break
-        pos += 2 + length
-    if scan_start is None or not width:
-        raise ValueError("missing SOS/SOF0")
-    end = payload.rfind(b"\xff\xd9")
-    reader = _BitReader(payload[scan_start : end if end > 0 else len(payload)])
-    dc_tab, ac_tab = htables[(0, dc_id)], htables[(1, ac_id)]
-
-    def huff(tab: dict[tuple[int, int], int]) -> int:
-        code, ln = 0, 0
-        while ln <= 16:
-            code = (code << 1) | reader.bit()
-            ln += 1
-            if (ln, code) in tab:
-                return tab[(ln, code)]
-        raise ValueError("invalid Huffman code")
-
-    nbx, nby = width // 8, height // 8
-    quant = np.zeros((nby * nbx, 64), dtype=np.float64)
-    prev_dc = 0
-    for bi in range(nby * nbx):
-        zz = [0] * 64
-        s = huff(dc_tab)
-        diff = _extend(reader.bits(s), s) if s else 0
-        prev_dc += diff
-        zz[0] = prev_dc
-        k = 1
-        while k < 64:
-            sym = huff(ac_tab)
-            if sym == 0x00:  # EOB
-                break
-            run, s = sym >> 4, sym & 0xF
-            if s == 0:
-                if run != 15:
-                    raise ValueError("bad AC symbol")
-                k += 16  # ZRL
-                continue
-            k += run
-            zz[k] = _extend(reader.bits(s), s)
-            k += 1
-        for i, z in enumerate(_ZIGZAG):
-            quant[bi, z] = zz[i]
-
-    qt = np.array(qtables[qt_id], dtype=np.float64)
-    C = _dct_matrix()
-    blocks = (quant * qt).reshape(-1, 8, 8)
-    spatial = C.T @ blocks @ C + 128.0  # batched inverse DCT + level shift
-    px = np.clip(np.rint(spatial), 0, 255).astype(np.uint8)
-    img = (
-        px.reshape(nby, nbx, 8, 8).transpose(0, 2, 1, 3).reshape(height, width)
-    )
-    return width, height, img.tobytes()
-
-
 # Color JPEG: 4:2:0 chroma-subsampled YCbCr (the web-crawl common case),
-# same stdlib-only discipline as the grayscale codec above. JFIF color
+# the second component layout of the same kernel. JFIF color
 # model (ITU T.871): Y = 0.299R+0.587G+0.114B, Cb/Cr offset-128.
 # Rounding is floor(x+0.5) EVERYWHERE (not banker's rint) so a SQL
 # oracle can replay the color conversion bit-for-bit; the DC step of 8
@@ -798,14 +543,98 @@ def _quant_blocks(plane, qt):
     return np.rint(coefs / qt.reshape(8, 8)).astype(np.int64).reshape(-1, 64)
 
 
+def _mcu_order(width: int, height: int, samplings: list[int]) -> list[tuple[int, int]]:
+    """Data-unit order of one interleaved baseline scan, from the SOF
+    sampling bytes (0xHV per component): (component index, raster block
+    index in that component's plane) per 8x8 block. An MCU covers
+    8·Hmax × 8·Vmax pixels and holds H×V blocks of each component, row
+    by row — one 1x1 block for gray, 4 Y + Cb + Cr for 4:2:0."""
+    hv = [(s >> 4, s & 0xF) for s in samplings]
+    mcu_w, mcu_h = 8 * max(h for h, _ in hv), 8 * max(v for _, v in hv)
+    if width <= 0 or height <= 0 or width % mcu_w or height % mcu_h:
+        raise ValueError(f"dims must be positive multiples of the {mcu_w}x{mcu_h} MCU")
+    mcus_x = width // mcu_w
+    return [
+        (c, (my * v + by) * mcus_x * h + mx * h + bx)
+        for my in range(height // mcu_h)
+        for mx in range(mcus_x)
+        for c, (h, v) in enumerate(hv)
+        for by in range(v)
+        for bx in range(h)
+    ]
+
+
+def _jpeg_encode(planes, width: int, height: int, comps: list[tuple[int, int, int]]) -> bytes:
+    """The one baseline JPEG encoder: ``planes`` are float (h, w) sample
+    planes, one per SOF component ``(id, sampling, quant table id)``.
+    Each plane is quantized with _JPEG_QT (_quant_blocks), its blocks
+    are Huffman-coded in MCU order with a per-component DC predictor
+    (_emit_block), and the scan is framed as a JFIF: APP0, one DQT entry
+    per table id, SOF0, the Annex-K DHTs, one interleaved SOS."""
+    import struct
+
+    import numpy as np
+
+    qt = np.array(_JPEG_QT, dtype=np.float64)
+    quant = [_quant_blocks(p, qt) for p in planes]
+    dc_codes = _huff_codes(_DC_BITS, _DC_VALS)
+    ac_codes = _huff_codes(_AC_BITS, _AC_VALS)
+    w = _BitWriter()
+    dc = [0] * len(comps)
+    for c, bi in _mcu_order(width, height, [s for _, s, _ in comps]):
+        zz = [int(quant[c][bi][z]) for z in _ZIGZAG]
+        dc[c] = _emit_block(w, zz, dc[c], dc_codes, ac_codes)
+    w.flush()
+
+    def seg(marker: int, payload: bytes) -> bytes:
+        return bytes([0xFF, marker]) + struct.pack(">H", len(payload) + 2) + payload
+
+    zz_qt = bytes(_JPEG_QT[z] for z in _ZIGZAG)
+    n_qt = max(tq for _, _, tq in comps) + 1
+    return b"".join(
+        [
+            b"\xff\xd8",
+            seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"),
+            seg(0xDB, b"".join(bytes([t]) + zz_qt for t in range(n_qt))),
+            seg(
+                0xC0,
+                struct.pack(">BHHB", 8, height, width, len(comps))
+                + bytes(b for comp in comps for b in comp),
+            ),
+            seg(0xC4, bytes([0x00] + _DC_BITS + _DC_VALS)),
+            seg(0xC4, bytes([0x10] + _AC_BITS + _AC_VALS)),
+            seg(
+                0xDA,
+                bytes([len(comps)] + [b for cid, _, _ in comps for b in (cid, 0x00)] + [0, 63, 0]),
+            ),
+            bytes(w.buf),
+            b"\xff\xd9",
+        ]
+    )
+
+
+def encode_jpeg_gray(pixels: bytes, width: int) -> bytes:
+    """Encode 8-bit grayscale pixels (row-major, dims multiples of 8) as
+    a standard baseline JFIF: level shift, batched orthonormal DCT,
+    quantization (_JPEG_QT), zigzag, Annex-K Huffman — one 1x1
+    component through :func:`_jpeg_encode`."""
+    import numpy as np
+
+    if width <= 0 or width % 8 or len(pixels) % width:
+        raise ValueError("width and height must be positive multiples of 8")
+    height = len(pixels) // width
+    if height % 8:
+        raise ValueError("width and height must be positive multiples of 8")
+    img = np.frombuffer(pixels, dtype=np.uint8).reshape(height, width).astype(np.float64)
+    return _jpeg_encode([img], width, height, [(1, 0x11, 0)])
+
+
 def encode_jpeg_color(rgb_pixels: bytes, width: int) -> bytes:
     """Encode interleaved 8-bit RGB (row-major, dims multiples of 16) as
     a baseline 4:2:0 JFIF: YCbCr conversion (_ycc_from_rgb), 2x2 chroma
     mean subsampling, MCU-interleaved scan (4 Y + Cb + Cr per 16x16),
     per-component DC predictors. Luma and chroma share the Annex-K
     tables and the DC-exact quant table (ids 0/1 both = _JPEG_QT)."""
-    import struct
-
     import numpy as np
 
     if width <= 0 or width % 16 or len(rgb_pixels) % (3 * width):
@@ -825,60 +654,104 @@ def encode_jpeg_color(rgb_pixels: bytes, width: int) -> bytes:
         q = p.reshape(height // 2, 2, width // 2, 2).mean(axis=(1, 3))
         return np.floor(q + 0.5)
 
-    cb_s, cr_s = sub(cb), sub(cr)
-    qt = np.array(_JPEG_QT, dtype=np.float64)
-    yq = _quant_blocks(y, qt)
-    cbq = _quant_blocks(cb_s, qt)
-    crq = _quant_blocks(cr_s, qt)
-
-    dc_codes = _huff_codes(_DC_BITS, _DC_VALS)
-    ac_codes = _huff_codes(_AC_BITS, _AC_VALS)
-    w = _BitWriter()
-    mcu_x, mcu_y = width // 16, height // 16
-    nbx_y = width // 8  # luma blocks per row
-    dc_y = dc_cb = dc_cr = 0
-    for my in range(mcu_y):
-        for mx in range(mcu_x):
-            for by in (0, 1):  # 4 luma blocks, raster order within MCU
-                for bx in (0, 1):
-                    blk = yq[(my * 2 + by) * nbx_y + mx * 2 + bx]
-                    zz = [int(blk[z]) for z in _ZIGZAG]
-                    dc_y = _emit_block(w, zz, dc_y, dc_codes, ac_codes)
-            for cq, dc_prev in ((cbq, "cb"), (crq, "cr")):
-                blk = cq[my * (width // 16) + mx]
-                zz = [int(blk[z]) for z in _ZIGZAG]
-                if dc_prev == "cb":
-                    dc_cb = _emit_block(w, zz, dc_cb, dc_codes, ac_codes)
-                else:
-                    dc_cr = _emit_block(w, zz, dc_cr, dc_codes, ac_codes)
-    w.flush()
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(payload) + 2) + payload
-
-    out = b"\xff\xd8"
-    out += seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    zz_qt = bytes(_JPEG_QT[_ZIGZAG[i]] for i in range(64))
-    out += seg(0xDB, b"\x00" + zz_qt + b"\x01" + zz_qt)
-    out += seg(
-        0xC0,
-        struct.pack(">BHHB", 8, height, width, 3)
-        + bytes([1, 0x22, 0, 2, 0x11, 1, 3, 0x11, 1]),
+    return _jpeg_encode(
+        [y, sub(cb), sub(cr)], width, height, [(1, 0x22, 0), (2, 0x11, 1), (3, 0x11, 1)]
     )
-    out += seg(0xC4, bytes([0x00] + _DC_BITS + _DC_VALS))
-    out += seg(0xC4, bytes([0x10] + _AC_BITS + _AC_VALS))
-    out += seg(0xDA, bytes([3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 63, 0]))
-    return out + bytes(w.buf) + b"\xff\xd9"
 
 
-def decode_jpeg_color(payload: bytes) -> tuple[int, int, bytes, bytes, bytes]:
-    """Decode a baseline 4:2:0 YCbCr JPEG → (width, height, y_plane,
-    cb_plane, cr_plane); chroma planes are (h/2)x(w/2), NOT upsampled
-    (feature extractors consume the subsampled planes directly). Tables
-    and per-component sampling/table ids are read from the file; the
-    restrictions mirror decode_jpeg_gray (dims multiples of 16, no
-    DRI/RSTn, SOF0 only) plus: exactly 3 components with 2x2/1x1/1x1
-    sampling."""
+class _BitReader:
+    """MSB-first reader of un-stuffed JPEG entropy data: bits, Huffman
+    symbols and whole 8x8 blocks."""
+
+    def __init__(self, data: bytes) -> None:
+        self.data = data
+        self.pos = 0
+        self.acc = 0
+        self.n = 0
+
+    def bit(self) -> int:
+        if self.n == 0:
+            if self.pos >= len(self.data):
+                raise ValueError("truncated entropy data")
+            b = self.data[self.pos]
+            self.pos += 1
+            if b == 0xFF:  # un-stuff FF00
+                if self.pos >= len(self.data) or self.data[self.pos] != 0x00:
+                    raise ValueError("unexpected marker in entropy data")
+                self.pos += 1
+            self.acc = b
+            self.n = 8
+        self.n -= 1
+        return (self.acc >> self.n) & 1
+
+    def bits(self, n: int) -> int:
+        v = 0
+        for _ in range(n):
+            v = (v << 1) | self.bit()
+        return v
+
+    def huff(self, tab: dict[tuple[int, int], int]) -> int:
+        code, ln = 0, 0
+        while ln <= 16:
+            code = (code << 1) | self.bit()
+            ln += 1
+            if (ln, code) in tab:
+                return tab[(ln, code)]
+        raise ValueError("invalid Huffman code")
+
+    def block(self, dc_tab, ac_tab, prev_dc: int) -> tuple[list[int], int]:
+        """One Huffman-coded block → (natural-order coefficients, its DC)."""
+        zz = [0] * 64
+        s = self.huff(dc_tab)
+        zz[0] = prev_dc + (_extend(self.bits(s), s) if s else 0)
+        k = 1
+        while k < 64:
+            sym = self.huff(ac_tab)
+            if sym == 0x00:  # EOB
+                break
+            run, s = sym >> 4, sym & 0xF
+            if s == 0:
+                if run != 15:
+                    raise ValueError("bad AC symbol")
+                k += 16  # ZRL
+                continue
+            k += run
+            if k > 63:
+                raise ValueError("AC run past the end of the block")
+            zz[k] = _extend(self.bits(s), s)
+            k += 1
+        nat = [0] * 64
+        for i, z in enumerate(_ZIGZAG):
+            nat[z] = zz[i]
+        return nat, zz[0]
+
+
+def _extend(v: int, s: int) -> int:
+    return v if v >= (1 << (s - 1)) else v - (1 << s) + 1
+
+
+def _idct_plane(blocks, qt: list[int], h: int, w: int) -> bytes:
+    """(n_blocks, 64) natural-order quantized coefficients in raster
+    block order → (h, w) 8-bit plane: dequantize, batched inverse DCT,
+    level shift, round, clip, untile."""
+    import numpy as np
+
+    C = _dct_matrix()
+    spatial = C.T @ (blocks * np.array(qt, dtype=np.float64)).reshape(-1, 8, 8) @ C + 128.0
+    px = np.clip(np.rint(spatial), 0, 255).astype(np.uint8)
+    return px.reshape(h // 8, w // 8, 8, 8).transpose(0, 2, 1, 3).reshape(h, w).tobytes()
+
+
+def _jpeg_decode(payload: bytes, check_frame) -> tuple[int, int, dict[int, bytes]]:
+    """The one baseline JPEG decoder → (width, height, {component id:
+    plane}). Walks the markers per T.81 and reads every table from the
+    file (DQT, DHT, SOF0, SOS — SOF1-3 are refused); ``check_frame`` gets
+    the SOF0 components ``[(id, sampling, quant table id)]`` and raises
+    for a layout its caller does not decode. The one scan must cover
+    every component; blocks are read in the MCU order the sampling
+    factors give, each component with its own DC predictor and tables,
+    and each plane is (height·V/Vmax) × (width·H/Hmax). Restrictions:
+    dims multiples of the MCU (no partial-MCU edges), no DRI/RSTn."""
     import struct
 
     import numpy as np
@@ -889,9 +762,8 @@ def decode_jpeg_color(payload: bytes) -> tuple[int, int, bytes, bytes, bytes]:
     qtables: dict[int, list[int]] = {}
     htables: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
     width = height = 0
-    comp_qt: dict[int, int] = {}
-    comp_tabs: dict[int, tuple[int, int]] = {}
-    comp_order: list[int] = []
+    frame: list[tuple[int, int, int]] = []
+    scan: dict[int, tuple[int, int]] = {}  # component id → (DC, AC) table ids
     scan_start = None
     while pos + 4 <= len(payload):
         if payload[pos] != 0xFF:
@@ -899,13 +771,17 @@ def decode_jpeg_color(payload: bytes) -> tuple[int, int, bytes, bytes, bytes]:
         marker = payload[pos + 1]
         (length,) = struct.unpack(">H", payload[pos + 2 : pos + 4])
         data = payload[pos + 4 : pos + 2 + length]
+        if length < 2 or len(data) < length - 2:
+            raise ValueError("truncated JPEG segment")
         if marker == 0xDB:
             off = 0
             while off < len(data):
                 pq, tq = data[off] >> 4, data[off] & 0xF
                 if pq != 0:
                     raise ValueError("only 8-bit quant tables supported")
-                zz = list(data[off + 1 : off + 65])
+                zz = data[off + 1 : off + 65]
+                if len(zz) < 64:
+                    raise ValueError("short DQT table")
                 nat = [0] * 64
                 for i, z in enumerate(_ZIGZAG):
                     nat[z] = zz[i]
@@ -918,144 +794,107 @@ def decode_jpeg_color(payload: bytes) -> tuple[int, int, bytes, bytes, bytes]:
                 bits = list(data[off + 1 : off + 17])
                 nsyms = sum(bits)
                 vals = list(data[off + 17 : off + 17 + nsyms])
-                dec: dict[tuple[int, int], int] = {}
-                code, k = 0, 0
-                for ln in range(1, 17):
-                    for _ in range(bits[ln - 1]):
-                        dec[(ln, code)] = vals[k]
-                        code += 1
-                        k += 1
-                    code <<= 1
-                htables[(tc, th)] = dec
+                if len(bits) < 16 or len(vals) < nsyms:
+                    raise ValueError("short DHT table")
+                htables[(tc, th)] = {
+                    (ln, code): sym for sym, (code, ln) in _huff_codes(bits, vals).items()
+                }
                 off += 17 + nsyms
         elif marker == 0xC0:
+            if len(data) < 6 or len(data) < 6 + 3 * data[5]:
+                raise ValueError("short SOF0")
             _, height, width, ncomp = struct.unpack(">BHHB", data[:6])
-            if ncomp != 3:
-                raise ValueError("decode_jpeg_color needs 3 components")
-            samplings = {}
-            for c in range(3):
-                cid, samp, tq = data[6 + 3 * c], data[7 + 3 * c], data[8 + 3 * c]
-                samplings[cid] = samp
-                comp_qt[cid] = tq
-            if samplings != {1: 0x22, 2: 0x11, 3: 0x11}:
-                raise ValueError("only 4:2:0 (2x2,1x1,1x1) supported")
+            frame = [tuple(data[6 + 3 * c : 9 + 3 * c]) for c in range(ncomp)]
         elif marker in (0xC1, 0xC2, 0xC3):
             raise ValueError("only baseline (SOF0) supported")
         elif marker == 0xDA:
-            ns = data[0]
-            if ns != 3:
-                raise ValueError("need a 3-component scan")
-            for c in range(3):
-                cid, tabs = data[1 + 2 * c], data[2 + 2 * c]
-                comp_order.append(cid)
-                comp_tabs[cid] = (tabs >> 4, tabs & 0xF)
+            if not data or len(data) < 1 + 2 * data[0]:
+                raise ValueError("short SOS")
+            scan = {
+                data[1 + 2 * c]: (data[2 + 2 * c] >> 4, data[2 + 2 * c] & 0xF)
+                for c in range(data[0])
+            }
             scan_start = pos + 2 + length
             break
         pos += 2 + length
-    if scan_start is None or not width or width % 16 or height % 16:
-        raise ValueError("missing SOS/SOF0 or dims not multiples of 16")
+    if scan_start is None or not frame:
+        raise ValueError("missing SOS/SOF0")
+    check_frame(frame)
+    if set(scan) != {cid for cid, _, _ in frame}:
+        raise ValueError("need one scan over every component")
+    order = _mcu_order(width, height, [s for _, s, _ in frame])
+    tabs = []
+    for cid, _, tq in frame:
+        td, ta = scan[cid]
+        if (0, td) not in htables or (1, ta) not in htables or tq not in qtables:
+            raise ValueError("missing Huffman or quant table")
+        tabs.append((htables[(0, td)], htables[(1, ta)]))
+    hmax = max(s >> 4 for _, s, _ in frame)
+    vmax = max(s & 0xF for _, s, _ in frame)
+    dims = [(height * (s & 0xF) // vmax, width * (s >> 4) // hmax) for _, s, _ in frame]
+    blocks = [np.zeros((h // 8 * (w // 8), 64)) for h, w in dims]
     end = payload.rfind(b"\xff\xd9")
     reader = _BitReader(payload[scan_start : end if end > 0 else len(payload)])
+    dc = [0] * len(frame)
+    for c, bi in order:
+        blocks[c][bi], dc[c] = reader.block(*tabs[c], dc[c])
+    return width, height, {
+        cid: _idct_plane(b, qtables[tq], h, w)
+        for (cid, _, tq), b, (h, w) in zip(frame, blocks, dims)
+    }
 
-    def huff(tab: dict[tuple[int, int], int]) -> int:
-        code, ln = 0, 0
-        while ln <= 16:
-            code = (code << 1) | reader.bit()
-            ln += 1
-            if (ln, code) in tab:
-                return tab[(ln, code)]
-        raise ValueError("invalid Huffman code")
 
-    def read_block(cid: int, prev_dc: int) -> tuple[list[int], int]:
-        dc_tab = htables[(0, comp_tabs[cid][0])]
-        ac_tab = htables[(1, comp_tabs[cid][1])]
-        zz = [0] * 64
-        s = huff(dc_tab)
-        diff = _extend(reader.bits(s), s) if s else 0
-        dc = prev_dc + diff
-        zz[0] = dc
-        k = 1
-        while k < 64:
-            sym = huff(ac_tab)
-            if sym == 0x00:
-                break
-            run, s = sym >> 4, sym & 0xF
-            if s == 0:
-                if run != 15:
-                    raise ValueError("bad AC symbol")
-                k += 16
-                continue
-            k += run
-            zz[k] = _extend(reader.bits(s), s)
-            k += 1
-        nat = [0] * 64
-        for i, z in enumerate(_ZIGZAG):
-            nat[z] = zz[i]
-        return nat, dc
+def decode_jpeg_gray(payload: bytes) -> tuple[int, int, bytes]:
+    """Decode a baseline non-interlaced grayscale JPEG → (width, height,
+    pixels): :func:`_jpeg_decode` restricted to one 1x1 component. All
+    tables are read from the file rather than assumed, so foreign
+    single-component baseline files decode too — within two
+    restrictions this decoder does NOT lift: dimensions must be
+    multiples of 8 (no partial-MCU edge handling) and restart markers
+    (DRI/RSTn) are not supported. This module's encoder always
+    satisfies both."""
 
-    mcu_x, mcu_y = width // 16, height // 16
-    nbx_y = width // 8
-    y_blocks = np.zeros((nbx_y * (height // 8), 64))
-    cb_blocks = np.zeros((mcu_x * mcu_y, 64))
-    cr_blocks = np.zeros((mcu_x * mcu_y, 64))
-    dc = {1: 0, 2: 0, 3: 0}
-    for my in range(mcu_y):
-        for mx in range(mcu_x):
-            for by in (0, 1):
-                for bx in (0, 1):
-                    nat, dc[1] = read_block(1, dc[1])
-                    y_blocks[(my * 2 + by) * nbx_y + mx * 2 + bx] = nat
-            nat, dc[2] = read_block(2, dc[2])
-            cb_blocks[my * mcu_x + mx] = nat
-            nat, dc[3] = read_block(3, dc[3])
-            cr_blocks[my * mcu_x + mx] = nat
+    def check_frame(frame):
+        if len(frame) != 1 or frame[0][1] != 0x11:
+            raise ValueError("only single-component 1x1 baseline supported")
 
-    C = _dct_matrix()
+    width, height, planes = _jpeg_decode(payload, check_frame)
+    (pixels,) = planes.values()
+    return width, height, pixels
 
-    def to_plane(blocks, h, wd, qt_id):
-        qt = np.array(qtables[qt_id], dtype=np.float64)
-        spatial = C.T @ (blocks * qt).reshape(-1, 8, 8) @ C + 128.0
-        px = np.clip(np.rint(spatial), 0, 255).astype(np.uint8)
-        return (
-            px.reshape(h // 8, wd // 8, 8, 8)
-            .transpose(0, 2, 1, 3)
-            .reshape(h, wd)
-            .tobytes()
-        )
 
-    return (
-        width,
-        height,
-        to_plane(y_blocks, height, width, comp_qt[1]),
-        to_plane(cb_blocks, height // 2, width // 2, comp_qt[2]),
-        to_plane(cr_blocks, height // 2, width // 2, comp_qt[3]),
-    )
+def decode_jpeg_color(payload: bytes) -> tuple[int, int, bytes, bytes, bytes]:
+    """Decode a baseline 4:2:0 YCbCr JPEG → (width, height, y_plane,
+    cb_plane, cr_plane); chroma planes are (h/2)x(w/2), NOT upsampled
+    (feature extractors consume the subsampled planes directly). Tables
+    and per-component sampling/table ids are read from the file; the
+    restrictions mirror decode_jpeg_gray (dims multiples of 16, no
+    DRI/RSTn, SOF0 only) plus: exactly 3 components, ids 1/2/3 with
+    2x2/1x1/1x1 sampling."""
+
+    def check_frame(frame):
+        if len(frame) != 3:
+            raise ValueError("decode_jpeg_color needs 3 components")
+        if {cid: s for cid, s, _ in frame} != {1: 0x22, 2: 0x11, 3: 0x11}:
+            raise ValueError("only 4:2:0 (2x2,1x1,1x1) supported")
+
+    width, height, planes = _jpeg_decode(payload, check_frame)
+    return width, height, planes[1], planes[2], planes[3]
 
 
 def frame_sample(blobs: DataFrame, every_n_bytes: int = 64, max_frames: int = 8) -> DataFrame:
     """'Frame sampling' plumbing: 1 blob → N frame rows (video-style
-    fan-out). Real frame extraction is NotImplemented (see decode_blob);
-    the fake slices the payload so schema/fan-out/partitioning are
-    exercised for real."""
+    fan-out). No video codec decodes here (see :func:`video_stats` for
+    the real GIF path); the fake slices the payload so
+    schema/fan-out/partitioning are exercised for real."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {"doc_id": [], "frame_idx": [], "frame": []}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                for i in range(min(max_frames, max(1, len(blob) // every_n_bytes))):
-                    out["doc_id"].append(doc_id)
-                    out["frame_idx"].append(i)
-                    out["frame"].append(bytes(blob[i * every_n_bytes : (i + 1) * every_n_bytes]))
-            yield pd.DataFrame(out)
+    def row(doc_id, blob):
+        for i in range(min(max_frames, max(1, len(blob) // every_n_bytes))):
+            yield doc_id, i, bytes(blob[i * every_n_bytes : (i + 1) * every_n_bytes])
 
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("frame_idx", T.IntegerType()),
-            T.StructField("frame", T.BinaryType()),
-        ]
+    return map_rows(
+        blobs, ("doc_id", "blob"), row, "doc_id long, frame_idx int, frame binary"
     )
-    return blobs.mapInPandas(run, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -1154,6 +993,8 @@ def _lzw_encode_gif(data: bytes, min_code_size: int) -> bytes:
 
 
 def _lzw_decode_gif(data: bytes, min_code_size: int) -> bytes:
+    if not 2 <= min_code_size <= 8:
+        raise ValueError(f"bad LZW minimum code size {min_code_size}")
     clear = 1 << min_code_size
     eoi = clear + 1
     reader = _LSBBitReader(data)
@@ -1180,20 +1021,16 @@ def _lzw_decode_gif(data: bytes, min_code_size: int) -> bytes:
             continue
         if code == eoi:
             return bytes(out)
-        if prev is None:  # first code after a clear: literal only
+        if code in table:
             entry = table[code]
-        elif code in table or code < clear:
-            entry = table[code] if code in table else bytes([code])
-            if next_code < 4096:
-                table[next_code] = prev + entry[:1]
-                next_code += 1
-        elif code == next_code:  # KwKwK
+        elif code == next_code and prev is not None:  # KwKwK
             entry = prev + prev[:1]
-            if next_code < 4096:
-                table[next_code] = entry
-                next_code += 1
         else:
             raise ValueError(f"bad LZW code {code}")
+        # the first code after a clear is a literal only: nothing to add
+        if prev is not None and next_code < 4096:
+            table[next_code] = prev + entry[:1]
+            next_code += 1
         out += entry
         prev = entry
 
@@ -1228,6 +1065,31 @@ def encode_gif_gray(frames: list[bytes], width: int, delay_cs: int = 4) -> bytes
     return bytes(out)
 
 
+def _gif_table(payload: bytes, pos: int, packed: int) -> tuple[bytes, int]:
+    """The color table a packed field announces, starting at ``pos`` →
+    (table, position after it)."""
+    end = pos + 3 * (2 << (packed & 0x07))
+    if end > len(payload):
+        raise ValueError("truncated GIF color table")
+    return payload[pos:end], end
+
+
+def _gif_sub_blocks(payload: bytes, pos: int) -> tuple[bytes, int]:
+    """A length-prefixed sub-block chain starting at ``pos`` → (joined
+    data, position after its zero terminator)."""
+    out = bytearray()
+    while True:
+        if pos >= len(payload):
+            raise ValueError("truncated GIF sub-blocks")
+        ln = payload[pos]
+        if not ln:
+            return bytes(out), pos + 1
+        if pos + 1 + ln > len(payload):
+            raise ValueError("truncated GIF sub-block")
+        out += payload[pos + 1 : pos + 1 + ln]
+        pos += 1 + ln
+
+
 def decode_gif_gray(payload: bytes) -> tuple[int, int, list[bytes]]:
     """Decode a non-interlaced 8-bit GIF → (width, height, [frame pixel
     rows...]). Pixels are palette indices mapped through the gray
@@ -1237,14 +1099,14 @@ def decode_gif_gray(payload: bytes) -> tuple[int, int, list[bytes]]:
 
     if payload[:6] not in (b"GIF89a", b"GIF87a"):
         raise ValueError("not a GIF")
+    if len(payload) < 13:
+        raise ValueError("truncated GIF header")
     width, height = struct.unpack("<HH", payload[6:10])
     packed, _bg, _ar = payload[10], payload[11], payload[12]
     pos = 13
     palette = None
     if packed & 0x80:
-        n = 2 << (packed & 0x07)
-        palette = payload[pos : pos + 3 * n]
-        pos += 3 * n
+        palette, pos = _gif_table(payload, pos, packed)
     frames: list[bytes] = []
     while pos < len(payload):
         block = payload[pos]
@@ -1252,13 +1114,12 @@ def decode_gif_gray(payload: bytes) -> tuple[int, int, list[bytes]]:
         if block == 0x3B:  # trailer
             break
         if block == 0x21:  # extension: label + sub-blocks, skip
-            pos += 1
-            while payload[pos]:
-                pos += 1 + payload[pos]
-            pos += 1
+            _, pos = _gif_sub_blocks(payload, pos + 1)
             continue
         if block != 0x2C:
             raise ValueError(f"unexpected GIF block 0x{block:02x}")
+        if pos + 9 > len(payload):
+            raise ValueError("truncated GIF image descriptor")
         _l, _t, fw, fh = struct.unpack("<HHHH", payload[pos : pos + 8])
         fpacked = payload[pos + 8]
         pos += 9
@@ -1266,60 +1127,38 @@ def decode_gif_gray(payload: bytes) -> tuple[int, int, list[bytes]]:
             raise ValueError("interlaced GIF not supported")
         local = palette
         if fpacked & 0x80:
-            n = 2 << (fpacked & 0x07)
-            local = payload[pos : pos + 3 * n]
-            pos += 3 * n
+            local, pos = _gif_table(payload, pos, fpacked)
+        if pos >= len(payload):
+            raise ValueError("truncated GIF image data")
         min_code = payload[pos]
-        pos += 1
-        comp = bytearray()
-        while payload[pos]:
-            ln = payload[pos]
-            comp += payload[pos + 1 : pos + 1 + ln]
-            pos += 1 + ln
-        pos += 1
-        idx = _lzw_decode_gif(bytes(comp), min_code)
+        comp, pos = _gif_sub_blocks(payload, pos + 1)
+        idx = _lzw_decode_gif(comp, min_code)
         if len(idx) != fw * fh:
             raise ValueError(f"frame pixel count {len(idx)} != {fw}x{fh}")
         if local is None:
             raise ValueError("no palette")
+        if idx and 3 * max(idx) >= len(local):
+            raise ValueError("pixel index outside the palette")
         frames.append(bytes(local[3 * i] for i in idx))  # gray = red channel
     return width, height, frames
 
 
 def video_stats(videos: DataFrame, blob_col: str = "gif") -> DataFrame:
-    """REAL video decode over an animated-GIF blob column: Arrow-batched
-    mapInPandas runs the in-repo GIF decoder and fans each blob out to
-    per-frame rows (dims + mean pixel) — the 1→N video shape of
-    :func:`frame_sample` but with a working codec. Zero shuffles; frame
-    fan-out happens inside the Arrow batch."""
+    """REAL video decode over an animated-GIF blob column: the in-repo
+    GIF decoder fans each blob out to per-frame rows (dims + mean
+    pixel) — the 1→N video shape of :func:`frame_sample` but with a
+    working codec. Zero shuffles; frame fan-out happens inside the
+    Arrow batch."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [],
-                "frame_idx": [],
-                "width": [],
-                "height": [],
-                "mean_pixel": [],
-            }
-            for doc_id, blob in zip(pdf["doc_id"], pdf[blob_col]):
-                w, h, frames = decode_gif_gray(bytes(blob))
-                for i, px in enumerate(frames):
-                    out["doc_id"].append(doc_id)
-                    out["frame_idx"].append(i)
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    # exact for power-of-two frame sizes (see image_stats)
-                    out["mean_pixel"].append(round(sum(px) / len(px), 6))
-            yield pd.DataFrame(out)
+    def row(doc_id, blob):
+        w, h, frames = decode_gif_gray(bytes(blob))
+        for i, px in enumerate(frames):
+            # exact for power-of-two frame sizes (see image_stats)
+            yield doc_id, i, w, h, round(sum(px) / len(px), 6)
 
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("frame_idx", T.IntegerType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("mean_pixel", T.DoubleType()),
-        ]
+    return map_rows(
+        videos,
+        ("doc_id", blob_col),
+        row,
+        "doc_id long, frame_idx int, width int, height int, mean_pixel double",
     )
-    return videos.mapInPandas(run, schema)

@@ -4606,7 +4606,7 @@ def multimodal_frame_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_features",
-    # the fake decode (first-4-bytes-as-floats, operators/multimodal.py:62)
+    # the fake decode (first-4-bytes-as-floats, multimodal.fake_decode)
     # is SQL-expressible: the corpus is ASCII so byte i == ascii(char i).
     oracle="""
     SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
@@ -4649,6 +4649,58 @@ def _head_bytes(text: str, n: int) -> bytes:
     return head.encode("ascii").ljust(n, b"\x00")
 
 
+def _png_blob(text: str) -> bytes:
+    """8×8 grayscale PNG of the first 64 bytes."""
+    return multimodal.encode_png_gray(_head_bytes(text, 64), 8)
+
+
+def _jpeg_blob(text: str) -> bytes:
+    """64×64 grayscale JPEG: one uniform 8×8 block per byte of the
+    first 64."""
+    import numpy as np
+
+    vals = np.frombuffer(_head_bytes(text, 64), dtype=np.uint8)
+    img = np.repeat(np.repeat(vals.reshape(8, 8), 8, 0), 8, 1)
+    return multimodal.encode_jpeg_gray(img.tobytes(), 64)
+
+
+def _jpeg_color_blob(text: str) -> bytes:
+    """64×64 4:2:0 color JPEG: 16 uniform 16×16 RGB tiles from the
+    first 48 bytes."""
+    import numpy as np
+
+    tiles = np.frombuffer(_head_bytes(text, 48), dtype=np.uint8).reshape(4, 4, 3)
+    img = np.repeat(np.repeat(tiles, 16, 0), 16, 1)
+    return multimodal.encode_jpeg_color(img.tobytes(), 64)
+
+
+def _wav_blob(text: str) -> bytes:
+    """WAV of 32 PCM samples: (byte − 128) of the first 32 bytes."""
+    return multimodal.encode_wav_pcm16([b - 128 for b in _head_bytes(text, 32)])
+
+
+def _gif_blob(text: str) -> bytes:
+    """4-frame 4×4 animated GIF: frame f is bytes [16f, 16f+16)."""
+    raw = _head_bytes(text, 64)
+    return multimodal.encode_gif_gray([raw[16 * i : 16 * i + 16] for i in range(4)], 4)
+
+
+def _doc_map(spark: SparkSession, sf_dir: str, fn, schema: str) -> DataFrame:
+    """``multimodal.map_rows`` over (doc_id, text) of the documents,
+    after the fan-out exchange that spreads the per-row codec work."""
+    docs = fanout(load_table(spark, sf_dir, "documents").select("doc_id", "text"))
+    return multimodal.map_rows(docs, ("doc_id", "text"), fn, schema)
+
+
+def _doc_blobs(spark: SparkSession, sf_dir: str, col: str, encode) -> DataFrame:
+    """The one text→blob encode stage of the real-codec entries:
+    (doc_id, ``col`` = ``encode(text)``) per document."""
+    return _doc_map(
+        spark, sf_dir, lambda doc_id, text: [(doc_id, encode(text))],
+        f"doc_id long, {col} binary",
+    )
+
+
 @register(
     "multimodal_jpeg_decode",
     # one uniform 8×8 block per text byte → DC-only blocks whose DC
@@ -4673,32 +4725,10 @@ def multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     recovers dims + mean pixel through Arrow-batched mapInPandas.
     Completes the codec family: PNG (lossless image), WAV (audio),
     JPEG (lossy image), GIF (video)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from ..operators.multimodal import decode_jpeg_gray, encode_jpeg_gray, image_stats
-
-    docs = fanout(
-        load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    images = _doc_blobs(spark, sf_dir, "jpeg", _jpeg_blob)
+    return multimodal.image_stats(
+        images, blob_col="jpeg", decoder=multimodal.decode_jpeg_gray
     )
-
-    def to_jpeg(batches):
-        for pdf in batches:
-            blobs = []
-            for t in pdf["text"]:
-                vals = np.frombuffer(_head_bytes(t, 64), dtype=np.uint8)
-                img = np.repeat(np.repeat(vals.reshape(8, 8), 8, 0), 8, 1)
-                blobs.append(encode_jpeg_gray(img.tobytes(), 64))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "jpeg": blobs})
-
-    images = docs.mapInPandas(
-        to_jpeg,
-        T.StructType(
-            [T.StructField("doc_id", T.LongType()), T.StructField("jpeg", T.BinaryType())]
-        ),
-    )
-    return image_stats(images, blob_col="jpeg", decoder=decode_jpeg_gray)
 
 
 @register(
@@ -4739,39 +4769,14 @@ def multimodal_dedup_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial+final agg — identical to exact text dedup. Columns:
     (ahash, n_images, keep_doc_id)."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
 
-    from ..operators.multimodal import decode_jpeg_gray, encode_jpeg_gray
+    def ahash(doc_id, text):
+        _, _, pix = multimodal.decode_jpeg_gray(_jpeg_blob(text))
+        blocks = np.frombuffer(pix, dtype=np.uint8).reshape(8, 8, 8, 8).mean(axis=(1, 3))
+        mean = float(blocks.sum()) / 64.0
+        yield doc_id, "".join("1" if x >= mean else "0" for x in blocks.ravel())
 
-    docs = fanout(
-        load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    )
-
-    def to_hash(batches):
-        for pdf in batches:
-            hashes = []
-            for t in pdf["text"]:
-                vals = np.frombuffer(_head_bytes(t, 64), dtype=np.uint8)
-                img = np.repeat(np.repeat(vals.reshape(8, 8), 8, 0), 8, 1)
-                w, h, pix = decode_jpeg_gray(encode_jpeg_gray(img.tobytes(), 64))
-                arr = np.frombuffer(pix, dtype=np.uint8).reshape(h, w)
-                blocks = arr.reshape(8, 8, 8, 8).mean(axis=(1, 3))
-                mean = float(blocks.sum()) / 64.0
-                hashes.append(
-                    "".join("1" if x >= mean else "0" for x in blocks.ravel())
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "ahash": hashes})
-
-    hashed = docs.mapInPandas(
-        to_hash,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType()),
-                T.StructField("ahash", T.StringType()),
-            ]
-        ),
-    )
+    hashed = _doc_map(spark, sf_dir, ahash, "doc_id long, ahash string")
     return hashed.groupBy("ahash").agg(
         F.count(F.lit(1)).alias("n_images"),
         F.min("doc_id").alias("keep_doc_id"),
@@ -4825,57 +4830,17 @@ def multimodal_jpeg_color_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     dequant, batched IDCT — decode_jpeg_color). Emits dims + per-plane
     means; chroma means come from the SUBSAMPLED planes, which for
     uniform tiles equal the full-resolution means exactly."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
 
-    from ..operators.multimodal import decode_jpeg_color, encode_jpeg_color
+    def stats(doc_id, blob):
+        w, h, *planes = multimodal.decode_jpeg_color(bytes(blob))
+        # integer-pixel sums over power-of-2 plane sizes: the mean is
+        # exact in float64, matching the oracle's 16-tile average
+        # bit-for-bit
+        yield doc_id, w, h, *(round(sum(p) / len(p), 6) for p in planes)
 
-    docs = fanout(
-        load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    )
-
-    def to_jpeg(batches):
-        for pdf in batches:
-            blobs = []
-            for t in pdf["text"]:
-                vals = np.frombuffer(_head_bytes(t, 48), dtype=np.uint8)
-                tiles = vals.reshape(4, 4, 3)
-                img = np.repeat(np.repeat(tiles, 16, 0), 16, 1)
-                blobs.append(encode_jpeg_color(img.tobytes(), 64))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "jpeg": blobs})
-
-    images = docs.mapInPandas(
-        to_jpeg,
-        T.StructType(
-            [T.StructField("doc_id", T.LongType()), T.StructField("jpeg", T.BinaryType())]
-        ),
-    )
-
-    def stats(batches):
-        for pdf in batches:
-            out = {"doc_id": [], "width": [], "height": [],
-                   "mean_y": [], "mean_cb": [], "mean_cr": []}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["jpeg"]):
-                w, h, yb, cbb, crb = decode_jpeg_color(bytes(blob))
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                # integer-pixel sums over power-of-2 plane sizes: the
-                # mean is exact in float64, matching the oracle's
-                # 16-tile average bit-for-bit
-                out["mean_y"].append(
-                    round(float(np.frombuffer(yb, np.uint8).mean()), 6)
-                )
-                out["mean_cb"].append(
-                    round(float(np.frombuffer(cbb, np.uint8).mean()), 6)
-                )
-                out["mean_cr"].append(
-                    round(float(np.frombuffer(crb, np.uint8).mean()), 6)
-                )
-            yield pd.DataFrame(out)
-
-    return images.mapInPandas(
+    return multimodal.map_rows(
+        _doc_blobs(spark, sf_dir, "jpeg", _jpeg_color_blob),
+        ("doc_id", "jpeg"),
         stats,
         "doc_id long, width int, height int, "
         "mean_y double, mean_cb double, mean_cr double",
@@ -4903,36 +4868,9 @@ def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     through Arrow-batched mapInPandas. Unlike the fake_decode plumbing
     entries, the codec here is real — as are the JPEG
     (multimodal_jpeg_decode), WAV (multimodal_wav_decode) and GIF video
-    (multimodal_gif_video_decode) twins; only formats requiring
-    external libraries stay behind decode_blob's NotImplementedError."""
-    import pandas as pd
-
-    from ..operators.multimodal import encode_png_gray, image_stats
-
-    docs = fanout(
-        load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    )
-
-    def to_png(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "png": [
-                        encode_png_gray(_head_bytes(t, 64), 8) for t in pdf["text"]
-                    ],
-                }
-            )
-
-    from pyspark.sql import types as T
-
-    images = docs.mapInPandas(
-        to_png,
-        T.StructType(
-            [T.StructField("doc_id", T.LongType()), T.StructField("png", T.BinaryType())]
-        ),
-    )
-    return image_stats(images)
+    (multimodal_gif_video_decode) twins; formats requiring external
+    libraries are not decoded."""
+    return multimodal.image_stats(_doc_blobs(spark, sf_dir, "png", _png_blob))
 
 
 @register(
@@ -4955,34 +4893,7 @@ def multimodal_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     samples in a valid RIFF/WAVE file (operators/multimodal.py:
     encode_wav_pcm16), and the stdlib decoder recovers sample count,
     duration, and RMS through Arrow-batched mapInPandas."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from ..operators.multimodal import audio_stats, encode_wav_pcm16
-
-    docs = fanout(
-        load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    )
-
-    def to_wav(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "wav": [
-                        encode_wav_pcm16([b - 128 for b in _head_bytes(t, 32)])
-                        for t in pdf["text"]
-                    ],
-                }
-            )
-
-    audio = docs.mapInPandas(
-        to_wav,
-        T.StructType(
-            [T.StructField("doc_id", T.LongType()), T.StructField("wav", T.BinaryType())]
-        ),
-    )
-    return audio_stats(audio)
+    return multimodal.audio_stats(_doc_blobs(spark, sf_dir, "wav", _wav_blob))
 
 
 @register(
@@ -5006,34 +4917,9 @@ def multimodal_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     windowed-energy fan-out a speech pipeline runs for VAD / silence
     trimming / energy filtering. Encode → decode → frame split all in
     Arrow-batched mapInPandas; zero shuffle."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from ..operators.multimodal import audio_frame_energy, encode_wav_pcm16
-
-    docs = fanout(
-        load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    return multimodal.audio_frame_energy(
+        _doc_blobs(spark, sf_dir, "wav", _wav_blob), frame=8
     )
-
-    def to_wav(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "wav": [
-                        encode_wav_pcm16([b - 128 for b in _head_bytes(t, 32)])
-                        for t in pdf["text"]
-                    ],
-                }
-            )
-
-    audio = docs.mapInPandas(
-        to_wav,
-        T.StructType(
-            [T.StructField("doc_id", T.LongType()), T.StructField("wav", T.BinaryType())]
-        ),
-    )
-    return audio_frame_energy(audio, frame=8)
 
 
 @register(
@@ -5060,34 +4946,9 @@ def multimodal_audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     extraction. Encode → decode → filter → stats all in Arrow-batched
     mapInPandas; zero shuffle. See
     operators/multimodal.py:audio_resample_stats."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from ..operators.multimodal import audio_resample_stats, encode_wav_pcm16
-
-    docs = fanout(
-        load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    return multimodal.audio_resample_stats(
+        _doc_blobs(spark, sf_dir, "wav", _wav_blob), factor=2
     )
-
-    def to_wav(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "wav": [
-                        encode_wav_pcm16([b - 128 for b in _head_bytes(t, 32)])
-                        for t in pdf["text"]
-                    ],
-                }
-            )
-
-    audio = docs.mapInPandas(
-        to_wav,
-        T.StructType(
-            [T.StructField("doc_id", T.LongType()), T.StructField("wav", T.BinaryType())]
-        ),
-    )
-    return audio_resample_stats(audio, factor=2)
 
 
 @register(
@@ -5110,33 +4971,9 @@ def multimodal_image_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     image twin of the audio energy frames). Decode + exact integer
     counting in Arrow-batched mapInPandas, long-form output with all
     bins present per image."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from ..operators.multimodal import encode_png_gray, image_histogram
-
-    docs = fanout(
-        load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    return multimodal.image_histogram(
+        _doc_blobs(spark, sf_dir, "png", _png_blob), n_bins=4
     )
-
-    def to_png(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "png": [
-                        encode_png_gray(_head_bytes(t, 64), 8) for t in pdf["text"]
-                    ],
-                }
-            )
-
-    images = docs.mapInPandas(
-        to_png,
-        T.StructType(
-            [T.StructField("doc_id", T.LongType()), T.StructField("png", T.BinaryType())]
-        ),
-    )
-    return image_histogram(images, n_bins=4)
 
 
 @register(
@@ -5162,33 +4999,22 @@ def multimodal_binaryfile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB this is the S3-bucket-of-images → DataFrame bridge;
     ``binaryFile`` parallelizes by file and never loads the corpus on
     the driver."""
-    import os as _os
+    import os
+    import shutil
 
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from ..operators.multimodal import decode_png_gray, encode_png_gray
     from .relational import _scratch_dir
 
     base = _scratch_dir("binfiles", sf_dir)
-    import shutil
-
     shutil.rmtree(base, ignore_errors=True)
-    _os.makedirs(base, exist_ok=True)
-    docs = fanout(
-        load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    )
+    os.makedirs(base, exist_ok=True)
 
-    def write_files(batches):
-        for pdf in batches:
-            for doc_id, t in zip(pdf["doc_id"], pdf["text"]):
-                blob = encode_png_gray(_head_bytes(t, 64), 8)
-                with open(_os.path.join(base, f"{doc_id}.png"), "wb") as fh:
-                    fh.write(blob)
-            yield pd.DataFrame({"n": [len(pdf)]})
+    def write_file(doc_id, text):
+        with open(os.path.join(base, f"{doc_id}.png"), "wb") as fh:
+            fh.write(_png_blob(text))
+        yield (1,)
 
     # eager: the files must exist before the binaryFile scan plans
-    docs.mapInPandas(write_files, "n long").agg(F.sum("n")).collect()
+    _doc_map(spark, sf_dir, write_file, "n long").agg(F.sum("n")).collect()
 
     files = (
         spark.read.format("binaryFile")
@@ -5197,28 +5023,17 @@ def multimodal_binaryfile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("path", "content")
     )
 
-    def decode(batches):
-        for pdf in batches:
-            ids, ws, hs, means = [], [], [], []
-            for path, blob in zip(pdf["path"], pdf["content"]):
-                w, h, pixels = decode_png_gray(bytes(blob))
-                ids.append(int(_os.path.splitext(_os.path.basename(path))[0]))
-                ws.append(w)
-                hs.append(h)
-                means.append(round(sum(pixels) / len(pixels), 6))
-            yield pd.DataFrame(
-                {"doc_id": ids, "width": ws, "height": hs, "mean_pixel": means}
-            )
+    def decode(path, blob):
+        w, h, pixels = multimodal.decode_png_gray(bytes(blob))
+        doc_id = int(os.path.splitext(os.path.basename(path))[0])
+        yield doc_id, w, h, round(sum(pixels) / len(pixels), 6)
 
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("mean_pixel", T.DoubleType()),
-        ]
+    return multimodal.map_rows(
+        files,
+        ("path", "content"),
+        decode,
+        "doc_id long, width int, height int, mean_pixel double",
     )
-    return files.mapInPandas(decode, schema)
 
 
 @register(
@@ -5247,32 +5062,7 @@ def multimodal_gif_video_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-frame rows through Arrow-batched mapInPandas. The 1→N frame
     fan-out happens inside the Arrow batch: zero shuffles, the true
     100 TB video-corpus shape."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from ..operators.multimodal import encode_gif_gray, video_stats
-
-    docs = fanout(
-        load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    )
-
-    def to_gif(batches):
-        for pdf in batches:
-            blobs = []
-            for t in pdf["text"]:
-                raw = _head_bytes(t, 64)
-                blobs.append(
-                    encode_gif_gray([raw[16 * i : 16 * i + 16] for i in range(4)], 4)
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "gif": blobs})
-
-    videos = docs.mapInPandas(
-        to_gif,
-        T.StructType(
-            [T.StructField("doc_id", T.LongType()), T.StructField("gif", T.BinaryType())]
-        ),
-    )
-    return video_stats(videos)
+    return multimodal.video_stats(_doc_blobs(spark, sf_dir, "gif", _gif_blob))
 
 
 # ---------------------------------------------------------------------------
@@ -6055,53 +5845,25 @@ def multimodal_resize_pool(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-exact against the oracle's per-pixel replay — proving the
     decode→transform→features chain, not just the decode."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
 
-    from ..operators.multimodal import decode_png_gray, encode_png_gray
+    def resize(doc_id, text):
+        _w, _h, pix = multimodal.decode_png_gray(_png_blob(text))
+        img = np.frombuffer(pix, dtype=np.uint8).astype(np.int64).reshape(8, 8)
+        pooled = img.reshape(4, 2, 4, 2).sum(axis=(1, 3)) // 4
+        yield (
+            doc_id, 4, 4,
+            int(pooled[0, 0]), int(pooled[0, 3]),
+            int(pooled[3, 0]), int(pooled[3, 3]),
+            int(pooled.max()),
+        )
 
-    docs = fanout(
-        load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    return _doc_map(
+        spark,
+        sf_dir,
+        resize,
+        "doc_id long, out_w int, out_h int, p00 long, p03 long, p30 long, "
+        "p33 long, max_pool long",
     )
-
-    def resize(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, t in zip(pdf["doc_id"], pdf["text"]):
-                png = encode_png_gray(_head_bytes(t, 64), 8)
-                _w, _h, pix = decode_png_gray(png)
-                img = np.frombuffer(pix, dtype=np.uint8).astype(np.int64)
-                img = img.reshape(8, 8)
-                pooled = img.reshape(4, 2, 4, 2).sum(axis=(1, 3)) // 4
-                rows.append(
-                    (
-                        doc_id, 4, 4,
-                        int(pooled[0, 0]), int(pooled[0, 3]),
-                        int(pooled[3, 0]), int(pooled[3, 3]),
-                        int(pooled.max()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "out_w", "out_h", "p00", "p03", "p30", "p33",
-                    "max_pool",
-                ],
-            )
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("out_w", T.IntegerType()),
-            T.StructField("out_h", T.IntegerType()),
-            T.StructField("p00", T.LongType()),
-            T.StructField("p03", T.LongType()),
-            T.StructField("p30", T.LongType()),
-            T.StructField("p33", T.LongType()),
-            T.StructField("max_pool", T.LongType()),
-        ]
-    )
-    return docs.mapInPandas(resize, schema)
 
 
 BFS_MAX_HOPS = 4  #: hop cap for the bounded BFS distance query

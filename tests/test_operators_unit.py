@@ -50,9 +50,30 @@ def test_frame_sample_fanout(spark, docs):
     assert len(f0.frame) <= 64
 
 
-def test_real_decode_is_explicitly_stubbed():
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_blob(b"\x00\x01")
+def test_map_rows_empty_input_keeps_declared_schema(spark):
+    schema = "doc_id long, n int, tag string"
+    empty = spark.createDataFrame([], "doc_id long, blob binary")
+    out = multimodal.map_rows(empty, ("doc_id", "blob"), lambda d, b: [(d, len(b), "x")], schema)
+    assert out.collect() == []
+    assert out.schema.simpleString() == "struct<doc_id:bigint,n:int,tag:string>"
+
+
+def test_map_rows_drops_rows_that_yield_nothing(spark, docs):
+    """1→0: a row whose fn yields no tuple is dropped; a batch where no
+    row yields still returns zero rows of the declared schema."""
+    blobs = multimodal.attach_blob(docs)
+
+    def even_only(doc_id, blob):
+        if doc_id % 2 == 0:
+            yield doc_id, len(blob)
+
+    kept = multimodal.map_rows(blobs, ("doc_id", "blob"), even_only, "doc_id long, n long")
+    src = {r.doc_id: len(r.text.encode()) for r in docs.collect()}
+    assert {r.doc_id: r.n for r in kept.collect()} == {
+        d: n for d, n in src.items() if d % 2 == 0
+    }
+    none = multimodal.map_rows(blobs, ("doc_id",), lambda d: iter(()), "doc_id long")
+    assert none.collect() == [] and none.columns == ["doc_id"]
 
 
 def test_hyperplanes_integer_and_stable():
@@ -655,43 +676,23 @@ def test_gif_decoder_rejects_interlace():
         multimodal.decode_gif_gray(bytes(payload))
 
 
-def test_codec_padding_matches_oracle_past_end_semantics(spark, duck):
+def test_codec_padding_matches_oracle_past_end_semantics(spark, duck, tmp_path):
     """ADVICE r2: a document SHORTER than the codec window must agree
     with the oracle's out-of-range arithmetic (ascii('') = 0 ⇒ pixel 0,
-    WAV sample −128) by construction, not corpus accident."""
-    from mapreduce_itwiki_spark.plans.llm_pipeline import _head_bytes
+    WAV sample −128) by construction, not corpus accident. The WAV blobs
+    come from the catalog's own encode stage (_doc_blobs + _wav_blob)."""
+    from mapreduce_itwiki_spark.plans.llm_pipeline import _doc_blobs, _head_bytes, _wav_blob
 
     assert _head_bytes("short", 8) == b"short\x00\x00\x00"
     with pytest.raises(ValueError):
         _head_bytes("héllo", 8)
 
     rows = [(1, "tiny doc"), (2, "x")]
-    sdf = spark.createDataFrame(rows, ["doc_id", "text"])
-
-    import pandas as pd
-
-    def to_wav(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "wav": [
-                        multimodal.encode_wav_pcm16(
-                            [b - 128 for b in _head_bytes(t, 32)]
-                        )
-                        for t in pdf["text"]
-                    ],
-                }
-            )
-
-    from pyspark.sql import types as T
-
-    audio = sdf.mapInPandas(
-        to_wav,
-        T.StructType(
-            [T.StructField("doc_id", T.LongType()), T.StructField("wav", T.BinaryType())]
-        ),
+    sf_dir = str(tmp_path)
+    spark.createDataFrame(rows, "doc_id long, text string").write.parquet(
+        os.path.join(sf_dir, "documents.parquet")
     )
+    audio = _doc_blobs(spark, sf_dir, "wav", _wav_blob)
     got = {r.doc_id: r.rms for r in multimodal.audio_stats(audio).collect()}
 
     duck.execute("CREATE OR REPLACE TEMP TABLE tiny_docs(doc_id BIGINT, text VARCHAR)")
@@ -1370,6 +1371,71 @@ def test_jpeg_color_general_image_lossy_but_close():
     cb = np.frombuffer(cbb, np.uint8).reshape(16, 24).astype(float)
     ecb_s = ecb.reshape(16, 2, 24, 2).mean(axis=(1, 3))
     assert np.abs(cb - ecb_s).max() <= 48
+
+
+def _seeded_jpegs():
+    """The seeded images of the JPEG tests above, encoded: name →
+    JPEG payload."""
+    import numpy as np
+
+    gray, color = multimodal.encode_jpeg_gray, multimodal.encode_jpeg_color
+    vals = np.random.default_rng(7).integers(0, 256, 64, dtype=np.uint8)
+    tiles = np.random.default_rng(13).integers(0, 128, size=(16, 3)).astype(np.uint8)
+    return {
+        "gray_uniform": gray(np.repeat(np.repeat(vals.reshape(8, 8), 8, 0), 8, 1).tobytes(), 64),
+        "gray_noise": gray(
+            np.random.default_rng(11).integers(0, 256, (32, 40), dtype=np.uint8).tobytes(), 40
+        ),
+        "gray_grad16": gray(
+            np.fromfunction(lambda y, x: (x * 3 + y * 2) % 256, (16, 16)).astype(np.uint8).tobytes(),
+            16,
+        ),
+        "gray_grad8": gray(
+            np.fromfunction(lambda y, x: (x * 7) % 256, (8, 8)).astype(np.uint8).tobytes(), 8
+        ),
+        "color_uniform": color(
+            np.repeat(np.repeat(tiles.reshape(4, 4, 3), 16, 0), 16, 1).tobytes(), 64
+        ),
+        "color_noise": color(
+            np.random.default_rng(17).integers(0, 256, (32, 48, 3), dtype=np.uint8).tobytes(), 48
+        ),
+    }
+
+
+def test_jpeg_encoders_are_byte_stable():
+    """Both JPEG encoders emit exactly the bytes they emitted before the
+    gray and color codecs shared one kernel (md5s recorded from the
+    separate encoders on the same seeded images)."""
+    import hashlib
+
+    got = {k: hashlib.md5(v).hexdigest() for k, v in _seeded_jpegs().items()}
+    assert got == {
+        "gray_uniform": "6672e5dc31ce88ab6d50ce98f38df38c",
+        "gray_noise": "2d29bcf22f5991e0ec1207834c3a8c1f",
+        "gray_grad16": "5f1177a32116a34431802824e7a4e64d",
+        "gray_grad8": "9244ed7f17c5cad62772218670480131",
+        "color_uniform": "f84657763df27a5bc361046eb4d66860",
+        "color_noise": "d4c190508815ac0ae652bb82b1abd46e",
+    }
+
+
+def test_jpeg_decoders_reject_the_other_layout_and_progressive():
+    """Each decoder accepts only its own component layout, and both
+    refuse a progressive (SOF2) frame header with ValueError."""
+    jpegs = _seeded_jpegs()
+    with pytest.raises(ValueError, match="single-component"):
+        multimodal.decode_jpeg_gray(jpegs["color_uniform"])
+    with pytest.raises(ValueError, match="3 components"):
+        multimodal.decode_jpeg_color(jpegs["gray_uniform"])
+    for name, decode in (
+        ("gray_uniform", multimodal.decode_jpeg_gray),
+        ("color_uniform", multimodal.decode_jpeg_color),
+    ):
+        payload = bytearray(jpegs[name])
+        sof = payload.index(b"\xff\xc0")
+        payload[sof + 1] = 0xC2
+        with pytest.raises(ValueError, match="baseline"):
+            decode(bytes(payload))
 
 
 def test_stopword_count_java_regex_matches_hof_twin(spark):

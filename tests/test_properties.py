@@ -6,6 +6,7 @@ batch many blocks into each Spark job instead."""
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -166,6 +167,59 @@ def test_png_decoder_handles_sub_and_up_filters():
     w, h, px = decode_png_gray(png)
     assert (w, h) == (3, 2)
     assert list(px) == [10, 20, 30, 11, 22, 33]
+
+
+def _codec_cases():
+    """codec → (encode 768 random bytes into one valid file, decoder)."""
+    import struct
+
+    from mapreduce_itwiki_spark.operators import multimodal as mm
+
+    return {
+        "png": (lambda b: mm.encode_png_gray(b[:64], 8), mm.decode_png_gray),
+        "jpeg_gray": (lambda b: mm.encode_jpeg_gray(b[:256], 16), mm.decode_jpeg_gray),
+        "jpeg_color": (lambda b: mm.encode_jpeg_color(b, 16), mm.decode_jpeg_color),
+        "wav": (
+            lambda b: mm.encode_wav_pcm16(list(struct.unpack("<16h", b[:32]))),
+            mm.decode_wav_pcm16,
+        ),
+        "gif": (
+            lambda b: mm.encode_gif_gray([b[i : i + 256] for i in (0, 256, 512)], 16),
+            mm.decode_gif_gray,
+        ),
+    }
+
+
+@pytest.mark.parametrize("codec", sorted(_codec_cases()))
+@given(content=st.binary(min_size=768, max_size=768))
+@settings(max_examples=5, deadline=None)
+def test_every_prefix_decodes_or_raises_value_error(codec, content):
+    """A truncated file is malformed input: every proper prefix of a
+    valid PNG / gray JPEG / color JPEG / WAV / GIF either decodes or
+    raises ValueError — never struct.error, IndexError, KeyError or
+    zlib.error."""
+    encode, decode = _codec_cases()[codec]
+    blob = encode(content)
+    decode(blob)
+    for n in range(len(blob)):
+        try:
+            decode(blob[:n])
+        except ValueError:
+            pass
+
+
+def test_wav_short_data_chunk_raises():
+    """A data chunk shorter than its declared length is an error, not
+    a silently shorter signal."""
+    from mapreduce_itwiki_spark.operators.multimodal import (
+        decode_wav_pcm16,
+        encode_wav_pcm16,
+    )
+
+    wav = encode_wav_pcm16(list(range(16)))
+    assert decode_wav_pcm16(wav) == (8000, list(range(16)))
+    with pytest.raises(ValueError, match="truncated"):
+        decode_wav_pcm16(wav[:-4])
 
 
 @given(j=st.integers(min_value=0, max_value=NUM_HYPERPLANES - 1),
