@@ -1,7 +1,8 @@
 """Benchmark harness: runs the headline catalog queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
-{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
+{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...},
+ "codegen_compilations": {...}, "sf": ...}
 
 Each query is drained with the noop writer (full computation, no
 driver-side collect, no disk I/O in the measurement).
@@ -15,7 +16,7 @@ import sys
 import time
 
 from mapreduce_itwiki_spark.plans import catalog
-from mapreduce_itwiki_spark.session import get_spark
+from mapreduce_itwiki_spark.session import codegen_compilations, get_spark
 
 HEADLINE = [
     "wiki_incoming_refs",
@@ -160,17 +161,27 @@ def main() -> None:
     #   "+6% drift" was exactly this: bm25_topk's knee sits at its 6th
     #   execution, one past what 1 warm-up + 4 passes sampled, so the
     #   recorded min rode the JIT tail. Two untimed warm-up passes put
-    #   every plan past the knee before sampling starts.
+    #   every plan past the knee before sampling starts. Re-checked
+    #   against the compile counts (sf0.01, local[4]): at Spark's old
+    #   100-entry class cache every pass recompiled ~2,700 classes, so
+    #   each execution ran fresh, un-JITted code; with the cache
+    #   holding the headline (tens of compiles per pass) the warm passes
+    #   settle by the third execution (33.4, 31.1, 30.4, 30.2, 30.1 s).
     n_passes = 4
     samples: dict[str, list[float]] = {n: [] for n in HEADLINE}
     for _ in range(2):
         for name in HEADLINE:
             qs[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
+    # Janino compiles per query over the sampled passes: 0 when the
+    # codegen cache holds the headline's generated classes
+    compiles = {n: 0 for n in HEADLINE}
     for _ in range(n_passes):
         for name in HEADLINE:
+            c0 = codegen_compilations(spark)
             t0 = time.perf_counter()
             qs[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
             samples[name].append(time.perf_counter() - t0)
+            compiles[name] += codegen_compilations(spark) - c0
     for name in HEADLINE:
         s = sorted(samples[name])
         timings[name] = round(s[0], 3)
@@ -190,6 +201,7 @@ def main() -> None:
                 "unit": "sec",
                 "queries": timings,
                 "spread": spread,
+                "codegen_compilations": compiles,
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
             }
         )

@@ -40,34 +40,32 @@ def connected_components(
     diameter > 8 (1 hop per round): a 1000-link chain now closes in ~10
     rounds instead of needing 1000.
 
-    Convergence is CHECKED, not assumed: the loop stops when a round
-    leaves the edge set unchanged (star fixpoint), and raises if
-    ``max_rounds`` is hit — a deterministic failure instead of a silently
-    wrong answer. One convergence probe per round is inherent to any
-    fixpoint algorithm; each round's state is localCheckpoint'ed (eager),
-    so the probe re-reads materialized partitions, never the lineage.
+    Convergence is CHECKED, not assumed: the loop stops at the first
+    round whose edge set is a star forest — no node has out-degree > 1
+    and no node is both a ``u`` and a ``v`` — and raises if
+    ``max_rounds`` is hit, a deterministic failure instead of a silently
+    wrong answer. Both star steps preserve components, and every edge
+    points at a smaller node, so each star's centre is its component's
+    minimum: the labels are final, and the round that would only
+    re-derive the same edge set is never run. The probe is ONE aggregate
+    per round over that round's localCheckpoint, which the probe itself
+    materializes, so it re-reads no lineage.
 
     State invariant: ``cur`` holds distinct directed pairs (u, v) with
-    u > v. At the fixpoint every component is a star — each non-minimum
-    node points straight at its component minimum — so labels fall out
-    of the final edge set with one left join for isolated/root nodes.
+    u > v. Labels fall out of the final star forest with one left join
+    for isolated/root nodes.
     """
     # ONE materialization of the input pipeline (it may be the whole
     # MinHash-LSH pass): everything downstream — the deduped ordered
     # pairs AND the node set — derives from this checkpoint, never from
-    # the input lineage. Nodes come from the UNFILTERED edge list so a
-    # node appearing only in self-loop edges still gets its
-    # (node, node) label instead of vanishing from the output.
+    # the input lineage; the count that sizes the loop fills it. Nodes
+    # come from the UNFILTERED edge list so a node appearing only in
+    # self-loop edges still gets its (node, node) label instead of
+    # vanishing from the output.
     raw = edges.select(
         F.col(src).alias("a"), F.col(dst).alias("b")
-    ).localCheckpoint(eager=True)
-    cur = (
-        raw.filter(F.col("a") != F.col("b"))
-        .select(F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    prev_count = cur.count()
+    ).localCheckpoint(eager=False)
+    n_edges = raw.count()
     nodes = (
         raw.select(F.col("a").alias("node"))
         .union(raw.select(F.col("b").alias("node")))
@@ -81,10 +79,14 @@ def connected_components(
     # At billions of edges this leaves parallelism untouched.
     n_parts = max(2, min(
         raw.sparkSession.sparkContext.defaultParallelism,
-        prev_count // 1_000_000 + 1,
+        n_edges // 1_000_000 + 1,
     ))
-    if cur.rdd.getNumPartitions() > n_parts:
-        cur = cur.coalesce(n_parts)
+    cur = (
+        raw.filter(F.col("a") != F.col("b"))
+        .select(F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v"))
+        .distinct()
+        .coalesce(n_parts)
+    )
     for _ in range(max_rounds):
         # large-star: every node connects its strictly-larger neighbors
         # to the minimum of its closed neighborhood
@@ -104,24 +106,32 @@ def connected_components(
         # small-star: every node connects its smaller neighbors (and
         # itself) to the minimum among them
         ss_min = ls.groupBy("u").agg(F.min("v").alias("m"))
-        ss = (
+        cur = (
             ls.join(ss_min, "u")
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .filter(F.col("u") != F.col("v"))
             .union(ss_min.select(F.col("u"), F.col("m").alias("v")))
             .distinct()
-            # one materialized snapshot per round; the Python reference
-            # to the PREVIOUS round's checkpoint dies on reassignment
-            # below, so Spark's ContextCleaner reclaims its blocks
-            # asynchronously — peak storage is a couple of rounds of the
-            # (shrinking) edge list, not O(total rounds)
-            .localCheckpoint(eager=True)
+            # one snapshot per round, filled by the probe below; the
+            # Python reference to the PREVIOUS round's checkpoint dies
+            # on reassignment, so Spark's ContextCleaner reclaims its
+            # blocks asynchronously — peak storage is a couple of rounds
+            # of the (shrinking) edge list, not O(total rounds)
+            .localCheckpoint(eager=False)
         )
-        new_count = ss.count()
-        if new_count == prev_count and ss.subtract(cur).isEmpty():
-            cur = ss
+        # per node: out-degree and total degree; a node with an out-edge
+        # and any second edge is a leaf with two centres or a centre
+        # that is itself a leaf — either way, not yet a star forest
+        deg = (
+            cur.select(F.inline(F.array(
+                F.struct(F.col("u").alias("n"), F.lit(1).alias("out")),
+                F.struct(F.col("v").alias("n"), F.lit(0).alias("out")),
+            )))
+            .groupBy("n")
+            .agg(F.sum("out").alias("out"), F.count(F.lit(1)).alias("deg"))
+        )
+        if deg.filter((F.col("out") > 0) & (F.col("deg") > 1)).isEmpty():
             break
-        cur, prev_count = ss, new_count
     else:
         raise RuntimeError(
             f"connected_components: no fixpoint after {max_rounds} rounds"

@@ -1108,11 +1108,15 @@ def decode_gif_gray(payload: bytes) -> tuple[int, int, list[bytes]]:
     if packed & 0x80:
         palette, pos = _gif_table(payload, pos, packed)
     frames: list[bytes] = []
-    while pos < len(payload):
+    while True:
+        # a file cut between two frames would otherwise decode to fewer
+        # frames without error: only the trailer ends a GIF
+        if pos >= len(payload):
+            raise ValueError("truncated GIF: no 0x3B trailer")
         block = payload[pos]
         pos += 1
         if block == 0x3B:  # trailer
-            break
+            return width, height, frames
         if block == 0x21:  # extension: label + sub-blocks, skip
             _, pos = _gif_sub_blocks(payload, pos + 1)
             continue
@@ -1140,7 +1144,6 @@ def decode_gif_gray(payload: bytes) -> tuple[int, int, list[bytes]]:
         if idx and 3 * max(idx) >= len(local):
             raise ValueError("pixel index outside the palette")
         frames.append(bytes(local[3 * i] for i in idx))  # gray = red channel
-    return width, height, frames
 
 
 def video_stats(videos: DataFrame, blob_col: str = "gif") -> DataFrame:

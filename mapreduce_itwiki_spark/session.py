@@ -89,6 +89,17 @@ def get_spark(app_name: str = "mapreduce_itwiki_spark", cpus: int | str | None =
                 + " -XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing"
             ).strip(),
         )
+        # Spark's generated-class cache is an LRU of 100 entries by
+        # default. A plan mix wider than that evicts every class before
+        # its next use, so each warm pass recompiles all of it with
+        # Janino. Distinct classes per pass, measured: perfbench's
+        # catalog_overhead ≈ 180 and index_lifecycle ≈ 350 (153–171 and
+        # 332–334 recompiles per warm pass at the default); bench.py's
+        # headline 1,538 at sf0.01 and 1,537 at sf0.1, plus ≈ 80 per
+        # pass from plans that inline per-run literals. 4096 holds the
+        # widest mix with ≈ 2× headroom. Static conf: set on the
+        # builder, read once when the JVM's code generator first runs.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         .config("spark.ui.enabled", "false")
         # Local-mode JVM-suicide guard (r10): the virtualization host
         # shows multi-second CPU-steal stalls (TUNING.md). One stalled
@@ -113,3 +124,11 @@ def get_spark(app_name: str = "mapreduce_itwiki_spark", cpus: int | str | None =
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_compilations(spark: SparkSession) -> int:
+    """Janino compiles this JVM has run so far (Spark's CodegenMetrics).
+    Over a warm pass the delta counts the generated classes the codegen
+    cache did not keep."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()

@@ -386,6 +386,55 @@ def test_connected_components_vs_union_find(spark):
     assert got == want
 
 
+@pytest.mark.parametrize("seed", [1, 2, 3])
+def test_connected_components_random_graphs_vs_union_find(spark, seed):
+    """Seeded random graphs mixing chains, cycles, random edges,
+    reversed and duplicate edges and self-loop-only nodes, over shuffled
+    ids so component minima sit anywhere: every node's label is the
+    smallest id of its union-find component."""
+    import random
+
+    from mapreduce_itwiki_spark.operators.graph import connected_components
+
+    rng = random.Random(seed)
+    ids = iter(rng.sample(range(10_000), 400))
+
+    def take(n):
+        return [next(ids) for _ in range(n)]
+
+    edges = []
+    for _ in range(4):
+        c = take(rng.randint(5, 40))
+        edges += zip(c, c[1:])  # chain
+    for _ in range(4):
+        c = take(rng.randint(3, 20))
+        edges += zip(c, c[1:] + c[:1])  # cycle
+    loose = take(60)
+    edges += [tuple(rng.sample(loose, 2)) for _ in range(40)]
+    edges += [(n, n) for n in take(5)]  # self-loop-only nodes
+    edges += [(b, a) for a, b in rng.sample(edges, 20)]  # reversed
+    edges += rng.sample(edges, 20)  # duplicates
+    rng.shuffle(edges)
+
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    want = {n: find(n) for n in parent}
+    edf = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    got = {r.node: r.comp for r in connected_components(edf).collect()}
+    assert got == want
+
+
 def test_label_propagation_hand_computed(spark):
     """Two triangles joined by one bridge edge, against hand-simulated
     synchronous LPA: after round 1 every node in triangle {1,2,3} holds

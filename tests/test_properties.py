@@ -208,6 +208,26 @@ def test_every_prefix_decodes_or_raises_value_error(codec, content):
             pass
 
 
+def test_gif_every_strict_prefix_raises():
+    """Only the 0x3B trailer ends a GIF: a 4-frame file cut anywhere,
+    including between two frames, raises instead of decoding to fewer
+    frames."""
+    import random
+
+    from mapreduce_itwiki_spark.operators.multimodal import (
+        decode_gif_gray,
+        encode_gif_gray,
+    )
+
+    rng = random.Random(7)
+    frames = [bytes(rng.randrange(256) for _ in range(256)) for _ in range(4)]
+    gif = encode_gif_gray(frames, 16)
+    assert decode_gif_gray(gif) == (16, 16, frames)
+    for n in range(len(gif)):
+        with pytest.raises(ValueError):
+            decode_gif_gray(gif[:n])
+
+
 def test_wav_short_data_chunk_raises():
     """A data chunk shorter than its declared length is an error, not
     a silently shorter signal."""

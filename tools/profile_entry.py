@@ -1,11 +1,11 @@
 """Job-level profile of one catalog entry: run it once (after warm-ups)
 in a session with the event log enabled, then print the Spark jobs the
 execution issued — wall duration and stage count each — plus the
-window's scheduler totals, so the fixed-overhead vs compute split is
-visible (guide §1: measure first; the event log is the UI's offline
-twin). The log is read with the benchmark's own reader
-(``perfbench/eventlog.py``), so this tool and the traced benchmark run
-count jobs the same way.
+window's scheduler totals and the run's Janino compiles, so the
+fixed-overhead vs compute split is visible (guide §1: measure first;
+the event log is the UI's offline twin). The log is read with the
+benchmark's own reader (``perfbench/eventlog.py``), so this tool and the
+traced benchmark run count jobs the same way.
 
 Usage: python tools/profile_entry.py ann_ivfpq_index_retrain [warmups]
 """
@@ -20,7 +20,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from mapreduce_itwiki_spark.plans import catalog  # noqa: E402
-from mapreduce_itwiki_spark.session import get_spark  # noqa: E402
+from mapreduce_itwiki_spark.session import codegen_compilations, get_spark  # noqa: E402
 from perfbench.eventlog import load_dir  # noqa: E402
 
 EVDIR = "/tmp/spark-events-profile"
@@ -57,11 +57,13 @@ def main() -> None:
         qs[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
     # jobs are attributed by submission time; run_concurrent's pool
     # threads inherit the caller's job group, but this run sets none
+    c0 = codegen_compilations(spark)
     t0 = time.perf_counter()
     epoch0 = time.time() * 1000
     qs[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
     epoch1 = time.time() * 1000
     wall = time.perf_counter() - t0
+    compiles = codegen_compilations(spark) - c0
     spark.stop()
 
     log = load_dir(EVDIR)
@@ -71,7 +73,8 @@ def main() -> None:
         key=lambda j: j.submitted,
     )
     print(f"\n=== {name}: wall {wall:.3f}s, {sched['jobs']} jobs,"
-          f" {sched['stages']} stages, {sched['tasks']} tasks ===")
+          f" {sched['stages']} stages, {sched['tasks']} tasks,"
+          f" {compiles} codegen compilations ===")
     for i, j in enumerate(jobs):
         dur = (j.completed - j.submitted) / 1000 if j.completed else float("nan")
         print(f"job {i:4d}  +{(j.submitted - epoch0) / 1000:7.3f}s"
